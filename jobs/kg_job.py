@@ -20,8 +20,9 @@ or locally:
 
     PYTHONPATH=. python jobs/kg_job.py --synthetic 10000 --stage-root /tmp/kg
 
-Reruns resume from the last committed stage (StageStore); pass
---no-store for a one-shot in-memory run (fused text plane).
+Reruns resume from the last committed stage (StageStore: the text
+plane is one ``plane`` stage, then surfaces, entities, edges); pass
+--no-store for a one-shot in-memory run of the same plan.
 """
 
 from __future__ import annotations

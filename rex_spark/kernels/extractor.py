@@ -136,7 +136,9 @@ def extract_sentence_banded(
 
 
 def extract_sentence(
-    tokens: Sequence[str], max_pairs: int | None = None
+    tokens: Sequence[str],
+    max_pairs: int | None = None,
+    mentions: List[Mention] | None = None,
 ) -> List[ScoredTriple]:
     """Mentions -> all ordered candidate pairs -> scored triples.
 
@@ -155,8 +157,13 @@ def extract_sentence(
     against.  operators.extraction.candidate_pairs (the J1 pair-level
     query surface) retains its drop cap: the full pair set really is
     quadratic — only the gap-bounded scorer admits linear recovery.
+
+    ``mentions``: the sentence's ``extract_mentions(tokens)`` when the
+    caller already has them (extract_plane emits them too), so they
+    are computed once per sentence.
     """
-    mentions = extract_mentions(tokens)
+    if mentions is None:
+        mentions = extract_mentions(tokens)
     if max_pairs is not None and len(mentions) * len(mentions) > max_pairs:
         return extract_sentence_banded(tokens, mentions)
     best: Dict[Tuple[str, str, str], ScoredTriple] = {}

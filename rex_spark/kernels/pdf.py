@@ -416,10 +416,9 @@ def extract_pdf_text(payload: bytes) -> list[str]:
             continue
         # /Contents may be one ref or an array of refs
         refs = [int(n) for n, _g in re.findall(rb"(\d+)\s+(\d+)\s+R", contents)]
-        data = b"".join(
-            _stream_data(objs[r]) for r in refs if r in objs
-        ) if refs else b""
-        if refs and not data and all(r not in objs for r in refs):
+        # a missing stream would make the page's text silently partial
+        if any(r not in objs for r in refs):
             raise ValueError("page /Contents references missing objects")
+        data = b"".join(_stream_data(objs[r]) for r in refs)
         texts.append(_extract_stream_text(data))
     return texts

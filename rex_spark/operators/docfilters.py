@@ -2,8 +2,8 @@
 
 Wires the standalone text-analysis family (quality scoring, Gopher
 repetition signals, language-ID, PII scrubbing) into ``run_pipeline``
-as optional filters between the docs and sentences stages — the point
-where a web-corpus run drops boilerplate / repetitive / wrong-language
+as optional filters between the docs strip and the text plane — the
+point where a web-corpus run drops boilerplate / repetitive / wrong-language
 pages BEFORE paying for segmentation + pair extraction, exactly where
 production pretraining pipelines put them (Rae et al. 2021 App. A;
 reference P9 validity-filter parity: rex/data/transforms/sent_re.py:
@@ -46,8 +46,8 @@ class DocFilters:
     """Declarative filter configuration for the documents stage.
 
     ``None`` disables the corresponding filter; ``active()`` is False
-    when nothing is enabled (the pipeline then keeps its fused
-    single-Arrow-crossing plane).  ``digest()`` feeds the stage-name
+    when nothing is enabled (the pipeline's text plane then reads the
+    pages directly, with no docs strip in front).  ``digest()`` feeds the stage-name
     suffix so a stage root written under one filter setting can never
     resume into a different one (kill/resume stays bit-identical per
     setting).

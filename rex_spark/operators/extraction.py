@@ -1,18 +1,18 @@
 """Extraction plane: mentions (NER), candidate pairs (J1), scored triples.
 
-Two equivalent paths, both built on the same kernels:
+The pipeline's text plane is ``extract_plane``: pages (or filtered
+docs) -> sentences + mentions + scored triples in ONE Arrow crossing,
+with the per-entity fan-out left to JVM projections (``plane_sentences``
+/ ``plane_mentions`` / ``plane_triples``).  Mentions and pairs never
+leave the executor, so the whole text->triple path is shuffle-free.
 
-1. **Composable stages** — ``detect_mentions`` -> ``candidate_pairs``
-   -> ``score_pairs``: each intermediate is a real DataFrame you can
-   checkpoint/inspect (REx exposes the same intermediates: entity
-   lists, candidate pairs per rex/data/transforms/sent_re.py:50-63,
-   per-pair scores per rex/models/sent_pcnn.py).
-
-2. **Fused path** — ``extract_triples_fused``: sentences -> scored
-   triples in ONE mapInPandas.  Mentions and pairs never leave the
-   executor, so the whole text->triple pipeline is shuffle-free; this
-   is the production path at 10^12 documents.  The e2e test asserts
-   both paths emit identical triple sets.
+The composable operators stay as query surfaces and test references:
+``detect_mentions`` -> ``candidate_pairs`` -> ``score_pairs`` expose
+each intermediate as a real DataFrame (REx exposes the same
+intermediates: entity lists, candidate pairs per
+rex/data/transforms/sent_re.py:50-63, per-pair scores per
+rex/models/sent_pcnn.py), and ``extract_triples_fused`` scores a
+sentences table in one mapInPandas.  Tests pin them equal to the plane.
 
 Candidate generation avoids a two-sided shuffle join: mentions are
 grouped per sentence (one shuffle) and pairs expand in-partition via
@@ -268,8 +268,9 @@ def extract_triples_fused(
 # per batch.  arrays_zip on the JVM side reassembles the structs.
 # warc_ts crosses the UDF boundary as int64 epoch-micros (warc_us):
 # timestamp columns pay tz/unit conversion per element on both sides
-# of the Arrow boundary, a plain long does not; plane_sentences /
-# plane_triples convert back with timestamp_micros (JVM-side, free).
+# of the Arrow boundary, a plain long does not; extract_plane converts
+# back with timestamp_micros (JVM-side, free), so the plane it returns
+# carries warc_ts (the StageStore lineage watermark).
 PLANE_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -303,6 +304,10 @@ def extract_plane(
     """pages -> per-sentence rows with nested mention/triple arrays, in
     ONE Arrow crossing.
 
+    ``pages`` is a pages table (``html`` is stripped with html_to_text
+    inside the crossing) or a docs table carrying ``clean_text`` (e.g.
+    doc-filtered docs, read as is).
+
     The composable stages (clean_pages -> segment_sentences ->
     detect_mentions / extract_triples_fused) each pay a full
     JVM->Arrow->pandas->Arrow->JVM round trip over the whole text
@@ -320,15 +325,19 @@ def extract_plane(
     the exact gap-banded linear path (extract_sentence_banded — output
     provably identical to the uncapped kernel) and emit with
     ``t_capped`` true so downstream lineage can still count them (P9
-    contract).  The store-path extract_triples_fused shares the same
-    kernel call, so both planes recover identically by construction.
+    contract).  extract_triples_fused shares the same kernel call, so
+    both recover identically by construction.
     """
     import pyarrow as pa
 
     from ..kernels.textnorm import html_to_text, sent_seg, tokenize
 
+    from_docs = "clean_text" in pages.columns
     src = pages.select(
-        "url", F.unix_micros("warc_ts").alias("warc_us"), "lang", "html"
+        "url",
+        F.unix_micros("warc_ts").alias("warc_us"),
+        "lang",
+        "clean_text" if from_docs else "html",
     )
 
     # Catalyst cannot prune columns THROUGH a map-in-arrow UDF, so
@@ -364,13 +373,16 @@ def extract_plane(
     def plane_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             cols = {k: [] for k in names}
-            for url, us, lang, html in zip(
+            for url, us, lang, raw in zip(
                 rb.column(0).to_pylist(),
                 rb.column(1).to_pylist(),
                 rb.column(2).to_pylist(),
                 rb.column(3).to_pylist(),
             ):
-                text = html_to_text(html) if html is not None else ""
+                if raw is None:
+                    text = ""
+                else:
+                    text = raw if from_docs else html_to_text(raw)
                 seg_lang = "zh" if lang == "zh" else "en"
                 for sid, sent in enumerate(sent_seg(text, lang=seg_lang)):
                     toks = tokenize(sent, lang=seg_lang)
@@ -394,7 +406,9 @@ def extract_plane(
                     # over-cap sentences take the exact gap-banded
                     # linear path inside extract_sentence (flagged,
                     # never dropped)
-                    tr = extract_sentence(toks, max_pairs=max_pairs_per_sentence)
+                    tr = extract_sentence(
+                        toks, max_pairs=max_pairs_per_sentence, mentions=ms
+                    )
                     cols["t_subj"].append([t[0] for t in tr])
                     cols["t_pred"].append([t[1] for t in tr])
                     cols["t_obj"].append([t[2] for t in tr])
@@ -408,18 +422,18 @@ def extract_plane(
                 schema=out_schema,
             )
 
-    return src.mapInArrow(plane_batches, schema=schema)
+    return src.mapInArrow(plane_batches, schema=schema).select(
+        *[
+            F.timestamp_micros("warc_us").alias("warc_ts") if n == "warc_us" else n
+            for n in names
+        ]
+    )
 
 
 def plane_sentences(plane: DataFrame) -> DataFrame:
-    return plane.select(
-        "url",
-        F.timestamp_micros("warc_us").alias("warc_ts"),
-        "lang",
-        "sent_id",
-        "sent",
-        "tokens",
-    )
+    """Sentence rows; ``sent``/``tokens`` only when the plane has them."""
+    cols = ("url", "warc_ts", "lang", "sent_id", "sent", "tokens")
+    return plane.select(*[c for c in cols if c in plane.columns])
 
 
 def plane_mentions(plane: DataFrame) -> DataFrame:
@@ -443,7 +457,7 @@ def plane_mentions(plane: DataFrame) -> DataFrame:
 def plane_triples(plane: DataFrame) -> DataFrame:
     t = plane.select(
         "url",
-        F.timestamp_micros("warc_us").alias("warc_ts"),
+        "warc_ts",
         "sent_id",
         F.explode(
             F.arrays_zip(

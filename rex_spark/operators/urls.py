@@ -104,19 +104,25 @@ def filter_robots(pages, robots, agent: str = "rex-spark"):
             [decide(t, u) for t, u in zip(robots_txt, url)], dtype=bool
         )
 
+    # join columns get names no page column has (Spark resolves names
+    # case-insensitively), so a page column called e.g. robots_txt
+    # passes through instead of being clobbered
+    taken = {c.lower() for c in pages.columns}
+    host_col, txt_col = "__host", "__robots_txt"
+    while host_col in taken or txt_col in taken:
+        host_col, txt_col = "_" + host_col, "_" + txt_col
     # page host is lowercased by url_parts — lower the robots side too
     # or a mixed-case robots row silently never matches (its disallow
     # rules would be bypassed without any error)
-    host = url_parts("url")["host"].alias("__host")
     robots_lc = robots.select(
-        F.lower(F.col("host")).alias("__host"), "robots_txt"
+        F.lower(F.col("host")).alias(host_col),
+        F.col("robots_txt").alias(txt_col),
     )
-    joined = pages.withColumn("__host", host).join(
-        F.broadcast(robots_lc), on="__host", how="left",
+    joined = pages.withColumn(host_col, url_parts("url")["host"]).join(
+        F.broadcast(robots_lc), on=host_col, how="left",
     )
-    return (
-        joined.filter(allowed(F.col("robots_txt"), F.col("url")))
-        .drop("__host", "robots_txt")
+    return joined.filter(allowed(F.col(txt_col), F.col("url"))).drop(
+        host_col, txt_col
     )
 
 

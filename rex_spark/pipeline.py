@@ -1,22 +1,28 @@
 """End-to-end KG construction pipeline (the north-star DAG).
 
-pages (Iceberg-shaped input table) -> docs -> sentences -> triples
--> mentions -> canonical entities/edges, with optional StageStore
+pages (Iceberg-shaped input table) -> text plane (sentences + mentions
++ triples) -> canonical entities/edges, with optional StageStore
 checkpointing so a killed job resumes from the last committed stage.
 
 Stage graph (shuffle boundaries marked *):
 
-    pages --strip--> docs --segment--> sentences --fused extract--> triples
-                                           |                            |
-                                           +--mentions--> *surfaces     |
-                                                     *similarity edges  |
-                                                     *components        |
-                                                          +--> entities |
-                                                          +--> edges <--+
+    pages [--strip--> docs --doc filters-->] --extract_plane--> plane
+                                                                  |
+               +------------------------+-------------------------+
+               |                        |                         |
+           sentences           mentions --> *surfaces          triples
+                                      *similarity edges           |
+                                      *components                 |
+                                          +--> entities           |
+                                          +--> edges <------------+
 
-The text plane is entirely narrow (zero shuffles from scan to triple
-emission); the graph plane owns the shuffles and is where skew handling
-(AQE skew join, salted support aggregation) lives.
+The text plane is one stage, ``plane``, made in one Arrow crossing;
+the bracketed docs strip (a second crossing) runs only when doc filters
+are active, since the filters read clean text.  Sentences, mentions
+and triples are JVM projections of the plane.  The text plane is
+entirely narrow (zero shuffles from scan to triple emission); the graph
+plane owns the shuffles and is where skew handling (AQE skew join,
+salted support aggregation) lives.
 """
 
 from __future__ import annotations
@@ -32,12 +38,8 @@ from .operators.canonical import (
     edges_from_labeled,
     entities_from_labeled,
 )
-from .operators.extraction import (
-    detect_mentions,
-    document_triple_set,
-    extract_triples_fused,
-)
-from .operators.textplane import PAGES_SCHEMA, clean_pages, segment_sentences
+from .operators.extraction import document_triple_set
+from .operators.textplane import PAGES_SCHEMA, clean_pages
 
 
 def build_pages_df(spark: SparkSession, n_pages: int, seed: int = 42) -> DataFrame:
@@ -109,47 +111,48 @@ def run_pipeline(
 ) -> Dict[str, DataFrame]:
     """Run (or resume) the full pipeline; returns all stage DataFrames.
 
-    With a StageStore, every stage is compute-or-load and appends
-    per-partition lineage rows (composable stages, one table each).
-
-    Without one, the storeless path runs the FUSED text plane
-    (extract_plane: one Arrow crossing from pages to
-    sentences+mentions+triples, SURVEY §2.10 batching note) and
-    persists the nested plane MEMORY_AND_DISK so the several outputs
-    share one computation — the in-memory analog of the stage
-    checkpoints.  Both paths run identical kernels and are pinned
-    equal by tests/test_pipeline_e2e.py.
+    The text plane is ONE stage, ``plane``: extract_plane runs pages ->
+    sentences + mentions + triples in one Arrow crossing (SURVEY §2.10
+    batching note), and ``sentences`` / ``mentions`` / ``triples`` are
+    JVM projections of it.  With a StageStore, every stage (plane,
+    surfaces, entities, edges) is compute-or-load and appends
+    per-partition lineage rows.  Without one, the plane and the labeled
+    surfaces are persisted MEMORY_AND_DISK so the several outputs share
+    one computation — the in-memory analog of the stage checkpoints.
+    ``docs`` is returned lazily (forced only if the caller asks).
+    ``include_sentence_text=False`` keeps sentence text and tokens out
+    of the plane (stage ``plane_notext``, so a root never resumes
+    across the two schemas).
 
     ``extractor`` picks the triple-extraction mechanism filling the M1
-    slot: ``"fused"`` (pair scorer, default), or any name in the
-    ``"extractor"`` registry namespace — built-ins ``"casrel"`` (the
-    M3/W2 two-stage pointer decode, operators/pointer_extraction.py)
-    and ``"usm"`` (the M6 unified ttl/ltl/tll pointer-algebra decode,
-    operators/usm.py; both pinned to P/R >= 0.95 agreement by tests),
-    or a user mechanism registered with
-    ``@rex_spark.registry.register("extractor")`` (the rex registry /
-    --include-package extension surface).  Registered paths always run
-    the composable stages (their decoders are not part of the fused
-    plane kernel).
+    slot: ``"fused"`` (pair scorer, default — the plane's own triples),
+    or any name in the ``"extractor"`` registry namespace — built-ins
+    ``"casrel"`` (the M3/W2 two-stage pointer decode,
+    operators/pointer_extraction.py) and ``"usm"`` (the M6 unified
+    ttl/ltl/tll pointer-algebra decode, operators/usm.py; both pinned
+    to P/R >= 0.95 agreement by tests), or a user mechanism registered
+    with ``@rex_spark.registry.register("extractor")`` (the rex
+    registry / --include-package extension surface).  A registered
+    mechanism runs as its own ``triples_<name>`` stage over the plane's
+    sentences, so its plane always carries sentence text.
 
     ``doc_filters`` (an :class:`~rex_spark.operators.docfilters.DocFilters`)
-    enables corpus-quality filtering between docs and sentences —
+    enables corpus-quality filtering of the docs before the plane —
     quality-score / repetition / language cuts plus optional PII
     scrubbing, all per-row JVM expressions (the text plane stays
-    narrow).  Active filters force the composable stage path (the
-    fused plane cannot see filtered docs); per-filter drop counts ride
-    a single Observation — with a store they land via
-    ``write_metrics("doc_filters<sfx>")`` once the docs stage commits;
-    the Observation itself is returned under ``"doc_filter_metrics"``
-    (None when the docs stage was resumed — read the stored metrics
-    table instead).  Filtered stage names carry the filter-config
-    digest so one stage root never resumes across filter settings.
+    narrow); the plane then reads the filtered ``clean_text``.
+    Per-filter drop counts ride a single Observation — with a store
+    they land via ``write_metrics("doc_filters<sfx>")`` once the plane
+    stage commits; the Observation itself is returned under
+    ``"doc_filter_metrics"`` (None when the plane stage was resumed —
+    read the stored metrics table instead).  Filtered stage names carry
+    the filter-config digest so one stage root never resumes across
+    filter settings.
     """
     from pyspark import StorageLevel
 
     from .operators.extraction import (
         extract_plane,
-        extract_triples_fused,
         plane_mentions,
         plane_sentences,
         plane_triples,
@@ -162,90 +165,57 @@ def run_pipeline(
             f"@register('extractor'))"
         )
     filters_active = doc_filters is not None and doc_filters.active()
+    # registered decoders read the plane's sentence tokens
+    include_text = include_sentence_text or extractor != "fused"
     # extractor-dependent stages carry the extractor in their NAME so a
     # stage root written with one mechanism never resumes into the other
-    # (extractor-independent stages — docs/sentences/mentions/surfaces/
-    # entities — stay shared and ARE reused across extractors); when
-    # doc filters are active EVERY stage additionally carries the
-    # filter digest (all downstream content depends on the kept set)
+    # (extractor-independent stages — plane/surfaces/entities — stay
+    # shared and ARE reused across extractors); when doc filters are
+    # active EVERY stage additionally carries the filter digest (all
+    # downstream content depends on the kept set)
     ext_sfx = "" if extractor == "fused" else f"_{extractor}"
     fsfx = f"_fl{doc_filters.digest()}" if filters_active else ""
+    plane_name = f"plane{'' if include_text else '_notext'}{fsfx}"
+
+    def stage(name: str, fn, partition_by=None) -> DataFrame:
+        if store is None:
+            return fn()
+        return store.run(name, fn, partition_by=partition_by)
+
+    docs = clean_pages(pages)
+    source = pages
     obs = None
-    fresh_docs = store is None or not store.is_committed(f"docs{fsfx}")
     if filters_active:
         from pyspark.sql import Observation
 
         from .operators.docfilters import apply_doc_filters
 
-        obs = Observation() if fresh_docs else None
+        if store is None or not store.is_committed(plane_name):
+            obs = Observation()
+        docs = source = apply_doc_filters(docs, doc_filters, observation=obs)
 
-    def make_docs():
-        d = clean_pages(pages)
-        if filters_active:
-            d = apply_doc_filters(d, doc_filters, observation=obs)
-        return d
-
-    if extractor != "fused" or filters_active:
-        _ext = (
-            extract_triples_fused
-            if extractor == "fused"
-            else NAMESPACE_REGISTRY["extractor"][extractor]
-        )
-
-        def run(name, fn, **kw):
-            return fn() if store is None else store.run(name, fn, **kw)
-
-        docs = run(f"docs{fsfx}", make_docs)
-        if store is not None and obs is not None:
-            # docs stage write was a full action over the observed
-            # branch -> counts are final; land them next to the lineage
-            store.write_metrics(f"doc_filters{fsfx}", obs.get)
-        sentences = run(f"sentences{fsfx}", lambda: segment_sentences(docs))
-        if store is None:
-            sentences = sentences.persist(StorageLevel.MEMORY_AND_DISK)
-        triples = run(f"triples{ext_sfx}{fsfx}", lambda: _ext(sentences))
-        mentions = run(f"mentions{fsfx}", lambda: detect_mentions(sentences))
-        labeled = run(
-            f"surfaces{fsfx}",
-            lambda: canonicalize_surfaces(
-                spark, mentions, driver_max_surfaces=driver_max_surfaces
-            ),
-        )
-        if store is None:
-            labeled = labeled.persist(StorageLevel.MEMORY_AND_DISK)
-    elif store is None:
-        plane = extract_plane(pages, include_text=include_sentence_text).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        docs = clean_pages(pages)  # lazy; forced only if the caller asks
-        from pyspark.sql import functions as F
-
-        sentences = (
-            plane_sentences(plane)
-            if include_sentence_text
-            else plane.select(
-                "url",
-                F.timestamp_micros("warc_us").alias("warc_ts"),
-                "lang",
-                "sent_id",
-            )
-        )
+    plane = stage(plane_name, lambda: extract_plane(source, include_text=include_text))
+    if store is None:
+        plane = plane.persist(StorageLevel.MEMORY_AND_DISK)
+    elif obs is not None:
+        # the plane write was a full action over the observed docs ->
+        # counts are final; land them next to the lineage
+        store.write_metrics(f"doc_filters{fsfx}", obs.get)
+    sentences = plane_sentences(plane)
+    mentions = plane_mentions(plane)
+    if extractor == "fused":
         triples = plane_triples(plane)
-        mentions = plane_mentions(plane)
-        labeled = canonicalize_surfaces(
-            spark, mentions, driver_max_surfaces=driver_max_surfaces
-        ).persist(StorageLevel.MEMORY_AND_DISK)
     else:
-        docs = store.run("docs", lambda: clean_pages(pages))
-        sentences = store.run("sentences", lambda: segment_sentences(docs))
-        triples = store.run("triples", lambda: extract_triples_fused(sentences))
-        mentions = store.run("mentions", lambda: detect_mentions(sentences))
-        labeled = store.run(
-            "surfaces",
-            lambda: canonicalize_surfaces(
-                spark, mentions, driver_max_surfaces=driver_max_surfaces
-            ),
-        )
+        _ext = NAMESPACE_REGISTRY["extractor"][extractor]
+        triples = stage(f"triples{ext_sfx}{fsfx}", lambda: _ext(sentences))
+    labeled = stage(
+        f"surfaces{fsfx}",
+        lambda: canonicalize_surfaces(
+            spark, mentions, driver_max_surfaces=driver_max_surfaces
+        ),
+    )
+    if store is None:
+        labeled = labeled.persist(StorageLevel.MEMORY_AND_DISK)
 
     if score_threshold is not None:
         # extra T3 cut over the kernel's own threshold (conf
@@ -253,11 +223,6 @@ def run_pipeline(
         from pyspark.sql import functions as F
 
         triples = triples.where(F.col("score") >= F.lit(score_threshold))
-
-    def stage(name: str, fn, partition_by=None) -> DataFrame:
-        if store is None:
-            return fn()
-        return store.run(name, fn, partition_by=partition_by)
 
     # entities sorted by id within files (point-lookup friendly); edges
     # partitioned by predicate — the low-cardinality column every graph

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extraction import document_triple_set, extract_triples_fused
+from ..operators.extraction import document_triple_set, extract_plane, plane_triples
 from ..operators.textplane import PAGES_SCHEMA, clean_pages, segment_sentences
 
 
@@ -114,7 +114,7 @@ def incremental_triples(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         triples = document_triple_set(
-            extract_triples_fused(segment_sentences(clean_pages(batch_df)))
+            plane_triples(extract_plane(batch_df, include_text=False))
         )
         (
             triples.withColumn("batch_id", F.lit(batch_id))

@@ -153,8 +153,8 @@ def test_store_metrics_resume_and_digest_isolation(spark, unfiltered, tmp_path):
     r1 = run_pipeline(spark, pages, store=store, salt_partitions=4, doc_filters=LENIENT)
     edges1 = sorted(tuple(x) for x in r1["edges"].select("src", "pred", "dst").collect())
     fsfx = f"_fl{LENIENT.digest()}"
-    assert store.is_committed(f"docs{fsfx}")
-    assert not os.path.exists(os.path.join(root, "docs"))  # no unsuffixed stage
+    assert store.is_committed(f"plane{fsfx}")
+    assert not os.path.exists(os.path.join(root, "plane"))  # no unsuffixed stage
     metrics = {
         r["metric"]: r["value"] for r in store.metrics(f"doc_filters{fsfx}").collect()
     }
@@ -172,7 +172,7 @@ def test_store_metrics_resume_and_digest_isolation(spark, unfiltered, tmp_path):
     # a different setting on the same root gets its own stages
     r3 = run_pipeline(spark, pages, store=store, salt_partitions=4, doc_filters=STRICT)
     assert STRICT.digest() != LENIENT.digest()
-    assert store.is_committed(f"docs_fl{STRICT.digest()}")
+    assert store.is_committed(f"plane_fl{STRICT.digest()}")
     kept3 = {r["url"] for r in r3["docs"].select("url").collect()}
     assert kept3 == _expected_kept(docs_all, STRICT)
 

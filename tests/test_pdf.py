@@ -84,6 +84,26 @@ def test_pdf_contents_array_and_empty_page():
     assert extract_pdf_text(pdf) == ["part one\npart two", ""]
 
 
+def test_pdf_contents_array_with_one_missing_ref_is_corrupt():
+    """A /Contents array whose refs only PARTLY resolve must not
+    extract as status ok with the surviving stream's text: any missing
+    ref makes the document corrupt."""
+    from rex_spark.operators.pdftext import pdf_text_row
+
+    c1 = b"BT (part one) Tj ET"
+    pdf = (
+        b"%PDF-1.4\n"
+        + _obj(1, b"<< /Type /Catalog /Pages 2 0 R >>")
+        + _obj(2, b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
+        + _obj(3, b"<< /Type /Page /Contents [4 0 R 9 0 R] >>")
+        + _obj(4, b"<< /Length %d >>\nstream\n" % len(c1) + c1 + b"\nendstream")
+        + b"trailer\n<< /Size 5 /Root 1 0 R >>\n%%EOF\n"
+    )
+    with pytest.raises(ValueError):
+        extract_pdf_text(pdf)
+    assert pdf_text_row(7, pdf) == (7, "corrupt", None, None, None)
+
+
 def test_pdf_corrupt_and_encrypted_contracts():
     pay = encode_pdf([["alpha", "beta"], ["gamma"]])
     for bad in (b"", b"not a pdf", pay[: len(pay) // 3], pay[:60]):

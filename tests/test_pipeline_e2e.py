@@ -9,8 +9,12 @@
    fused path emit identical triple sets;
 4. planted facts are recovered at the canonical-graph level, and
    surface variants merge (a~b, b~c => one component);
-5. distributed faceted PRF1 agrees with the in-process kernel.
+5. distributed faceted PRF1 agrees with the in-process kernel;
+6. with a StageStore the text plane is one stage made by one Arrow
+   crossing, and the stored graph outputs equal the storeless ones.
 """
+
+import re
 
 import pytest
 
@@ -25,6 +29,7 @@ from rex_spark.operators.extraction import (
     document_triple_set,
     score_pairs,
 )
+from rex_spark.operators.docfilters import DocFilters
 from rex_spark.operators.metrics import triple_prf1_dict
 from rex_spark.pipeline import build_pages_df, run_pipeline
 
@@ -278,3 +283,71 @@ def test_distributed_synthesis_waves_union_to_full_corpus(spark):
     assert union.count() == full.count() == 40
     assert full.exceptAll(union).count() == 0
     assert union.exceptAll(full).count() == 0
+
+
+_PYTHON_NODE = re.compile(
+    r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|PythonMapInArrow"
+    r"|FlatMapGroupsInPandas|FlatMapGroupsInArrow|FlatMapCoGroupsInPandas"
+    r"|AggregateInPandas|WindowInPandas|ArrowEvalPythonUDTF|BatchEvalPythonUDTF)\b"
+)
+
+
+def _python_nodes(df):
+    """Arrow/Python UDF node names in the DataFrame's physical plan."""
+    return _PYTHON_NODE.findall(df._jdf.queryExecution().executedPlan().toString())
+
+
+def _graph_rows(result):
+    def rows(df):
+        # by column name: a stage partitioned by pred reads pred back last
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(*sorted(df.columns)).collect()
+        )
+
+    return {k: rows(result[k]) for k in ("triple_set", "entities", "edges")}
+
+
+@pytest.mark.parametrize(
+    "filters",
+    [None, DocFilters(min_quality=0.4)],
+    ids=["plain", "doc_filters"],
+)
+def test_store_plane_is_one_crossing_and_matches_storeless(spark, tmp_path, filters):
+    """With a StageStore the text plane is ONE stage made by ONE Arrow
+    crossing (extract_plane); with doc filters the only other crossing
+    is the html strip the JVM filters read.  The stored run's graph
+    outputs equal the storeless run's."""
+    from rex_spark.io.stages import StageStore
+
+    computed = {}
+
+    class RecordingStore(StageStore):
+        def run(self, name, compute, partition_by=None, force=False):
+            def record():
+                computed[name] = compute()
+                return computed[name]
+
+            return super().run(name, record, partition_by=partition_by, force=force)
+
+    pages = build_pages_df(spark, 60, seed=42)
+    kw = dict(salt_partitions=4, doc_filters=filters)
+    stored = run_pipeline(
+        spark, pages, store=RecordingStore(spark, str(tmp_path / "stages")), **kw
+    )
+    storeless = run_pipeline(spark, pages, store=None, **kw)
+    assert _graph_rows(stored) == _graph_rows(storeless)
+    assert _graph_rows(stored)["triple_set"]
+
+    fsfx = f"_fl{filters.digest()}" if filters else ""
+    assert set(computed) == {
+        f"plane{fsfx}", f"surfaces{fsfx}", f"entities{fsfx}", f"edges{fsfx}"
+    }
+    nodes = _python_nodes(computed[f"plane{fsfx}"])
+    assert nodes.count("MapInArrow") + nodes.count("PythonMapInArrow") == 1
+    # the docs strip (clean_pages) feeds the doc filters
+    assert len(nodes) == (2 if filters else 1), nodes
+    if filters:
+        assert nodes.count("MapInPandas") == 1
+    for name in (f"surfaces{fsfx}", f"entities{fsfx}", f"edges{fsfx}"):
+        assert not _python_nodes(computed[name]), name

@@ -51,47 +51,51 @@ def _triple_set(result):
     }
 
 
-STAGES = ["docs", "edges", "entities", "mentions",
-          "sentences", "surfaces", "triples"]
+STAGES = ["edges", "entities", "plane", "surfaces"]
 
 
 def test_resume_after_partial_failure(spark, pages, store_factory):
     # full run -> golden outputs
     store = store_factory()
-    golden = _triple_set(run_pipeline(spark, pages, store=store))
+    full = run_pipeline(spark, pages, store=store)
+    golden = _triple_set(full)
+    n_sentences = full["sentences"].count()
+    n_urls = full["sentences"].select("url").distinct().count()
+    assert n_sentences > 0 and n_urls > 0
     assert all(store.is_committed(s) for s in STAGES)
 
     # simulate a crash mid-pipeline: later stages uncommitted (parquet:
     # marker removed; iceberg: rex.committed property unset)
-    for broken in ("triples", "mentions", "surfaces", "entities", "edges"):
+    for broken in ("surfaces", "entities", "edges"):
         store.decommit(broken)
         assert not store.is_committed(broken)
 
-    # docs/sentences stay committed: resume must NOT recompute them.
-    # Poison the upstream input to prove it: a recompute would change docs.
+    # the text plane stays committed: resume must NOT recompute it.
+    # Poison the upstream input to prove it: a recompute would empty it.
     empty_pages = pages.limit(0)
     store2 = store_factory()
     resumed = run_pipeline(spark, empty_pages, store=store2)
     assert _triple_set(resumed) == golden
-    assert resumed["docs"].count() == N_PAGES  # read from checkpoint
+    # read from the plane checkpoint
+    assert resumed["sentences"].count() == n_sentences
+    assert resumed["sentences"].select("url").distinct().count() == n_urls
 
 
 def test_lineage_rows_written(spark, pages, store_factory):
     store = store_factory()
     run_pipeline(spark, pages, store=store)
 
-    lineage = store.lineage("triples")
+    lineage = store.lineage("plane")
     rows = lineage.collect()
-    assert rows, "no lineage rows for triples stage"
+    assert rows, "no lineage rows for plane stage"
     cols = set(lineage.columns)
     assert {"_pid", "row_count", "url_min", "url_max",
             "warc_ts_watermark", "stage", "model_version"} <= cols
-    assert all(r["stage"] == "triples" for r in rows)
+    assert all(r["stage"] == "plane" for r in rows)
     assert all(r["model_version"] == "rule-extractor-v1" for r in rows)
-    assert sum(r["row_count"] for r in rows) == store.read("triples").count()
-    # docs lineage carries the warc_ts watermark
-    docs_lineage = store.lineage("docs").collect()
-    assert any(r["warc_ts_watermark"] is not None for r in docs_lineage)
+    assert sum(r["row_count"] for r in rows) == store.read("plane").count()
+    # plane lineage carries the warc_ts watermark
+    assert any(r["warc_ts_watermark"] is not None for r in rows)
 
 
 def test_force_recompute(spark, pages, store_factory):
@@ -133,7 +137,7 @@ def test_extractor_stages_do_not_cross_resume(spark, pages, tmp_path):
     root = str(tmp_path / "stages_x")
     r_fused = run_pipeline(spark, pages, store=StageStore(spark, root))
     n_fused = r_fused["triple_set"].count()
-    assert os.path.exists(os.path.join(root, "triples", "_STAGE_COMMITTED"))
+    assert os.path.exists(os.path.join(root, "plane", "_STAGE_COMMITTED"))
 
     r_cas = run_pipeline(
         spark, pages, store=StageStore(spark, root), extractor="casrel"

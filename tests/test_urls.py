@@ -80,6 +80,29 @@ def test_filter_robots(spark):
     }
     assert kept["http://a.example.com/ok"] == 1
 
+    # page columns named like the join's own columns (robots_txt, and
+    # host-ish names) pass through unchanged, and the decision still
+    # uses the robots table's rules, not the page payload
+    payload_pages = pages.selectExpr(
+        "url",
+        "concat('page-', cast(payload_col as string)) AS robots_txt",
+        "upper(url) AS __HOST",
+    )
+    got = {
+        r["url"]: (r["robots_txt"], r["__HOST"])
+        for r in filter_robots(payload_pages, robots).collect()
+    }
+    assert got == {
+        "http://a.example.com/ok": ("page-1", "HTTP://A.EXAMPLE.COM/OK"),
+        "http://a.example.com/private/x": (
+            "page-3", "HTTP://A.EXAMPLE.COM/PRIVATE/X",
+        ),
+        "http://c.example.com/whatever": (
+            "page-5", "HTTP://C.EXAMPLE.COM/WHATEVER",
+        ),
+    }
+    assert filter_robots(payload_pages, robots).columns == payload_pages.columns
+
 
 def test_robots_kernel_matches_stdlib_semantics():
     """The operator's contract is STDLIB urllib.robotparser semantics:
