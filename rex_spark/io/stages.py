@@ -8,13 +8,26 @@ lineage row PER OUTPUT PARTITION recording url range, warc_ts
 watermark, row count, and model version.
 
 The storage layer is pluggable (VERDICT r4 #3).  Two backends share
-one small write/commit/compact interface:
+one small write/lineage/commit/compact interface:
 
 ``parquet`` (default, always available)
     Parquet directories with an atomic ``_STAGE_COMMITTED`` marker,
     written only after both data and lineage land — a stage
     interrupted mid-write leaves no marker and is recomputed; a
     committed stage is never recomputed unless ``force``.
+    A commit runs one Spark job, the data write.  Lineage comes from
+    the footers of the files just written, read on the driver with
+    pyarrow: ``row_count`` from the row counts, ``url_min``/``url_max``
+    and ``warc_ts_watermark`` from the min/max statistics of the
+    ``url``/``warc_ts`` columns.  ``_pid`` is the write task's
+    partition id, the ``NNNNN`` of its ``part-NNNNN`` files (a task
+    of a partitioned write leaves one file per partition value; they
+    fold into one row).  A value whose statistics are missing in any
+    of the task's files (INT96 timestamps carry none — sessions from
+    ``get_session`` write TIMESTAMP_MICROS) is null, never a partial
+    answer.  The marker records the schema the directory reads back
+    as (partition columns last), so neither commit nor resume infers
+    it; markers without one (older roots) still infer it.
     ``compact`` rewrites a stage into few key-clustered files via a
     verified sibling-directory swap.
 
@@ -35,6 +48,8 @@ the session; ``iceberg_available`` probes for it)
     test's simulated crash)   exist, stage still recomputes
     directory swap compact    ``CALL <cat>.system.rewrite_data_files``
     lineage/_metrics dirs     side tables in the same namespace
+    footer lineage            a scan of the committed table grouped
+                              by ``spark_partition_id()``
     ========================  =====================================
 
     ``createOrReplace`` clears table properties, so a crash anywhere
@@ -52,16 +67,39 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 from dataclasses import dataclass, field
+from datetime import datetime
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..kernels.kb import MODEL_VERSION
 
 _MARKER = "_STAGE_COMMITTED"
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+_LINEAGE_SCHEMA = pa.schema([
+    ("_pid", pa.int32()),
+    ("row_count", pa.int64()),
+    ("url_min", pa.string()),
+    ("url_max", pa.string()),
+    ("warc_ts_watermark", pa.timestamp("us", tz="UTC")),
+    ("stage", pa.string()),
+    ("model_version", pa.string()),
+])
+_METRICS_SCHEMA = pa.schema([
+    ("stage", pa.string()),
+    ("metric", pa.string()),
+    ("value", pa.int64()),
+    ("model_version", pa.string()),
+])
+# a row group whose writer left no min/max statistics for a column
+_UNKNOWN = object()
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -73,6 +111,40 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
+
+
+def _column_stats(md: pq.FileMetaData, column: str, kind: type):
+    """(min, max) of top-level ``column`` per non-empty row group of one
+    footer: ``(None, None)`` when the group holds only nulls,
+    ``_UNKNOWN`` when its statistics are missing or not of ``kind``
+    (INT96 timestamps; parquet-mr drops values over 4 KiB).  A file
+    without the column yields nothing."""
+    idx = [j for j in range(md.num_columns) if md.schema.column(j).path == column]
+    if not idx:
+        return
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        if rg.num_rows == 0:
+            continue
+        st = rg.column(idx[0]).statistics
+        if st is not None and st.has_min_max and isinstance(st.max, kind):
+            yield st.min, st.max
+        elif st is not None and st.has_null_count and st.null_count == rg.num_rows:
+            yield None, None
+        else:
+            yield _UNKNOWN, _UNKNOWN
+
+
+def _fold(values, pick):
+    """``pick`` (min/max) over row-group values, skipping all-null
+    groups; null as soon as one group is ``_UNKNOWN``."""
+    out = None
+    for v in values:
+        if v is _UNKNOWN:
+            return None
+        if v is not None:
+            out = v if out is None else pick(out, v)
+    return out
 
 
 class ParquetStageBackend:
@@ -101,14 +173,66 @@ class ParquetStageBackend:
         if os.path.exists(path):
             shutil.rmtree(path)
 
-    def write(self, name: str, df: DataFrame, partition_by) -> None:
+    def write(self, name: str, df: DataFrame, partition_by) -> dict:
+        """Write the data; returns what the marker records about it:
+        the schema the directory reads back as (partition columns
+        last)."""
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(self._dir(name))
+        parts = list(partition_by or ())
+        schema = StructType(
+            [f for f in df.schema if f.name not in parts]
+            + [df.schema[c] for c in parts]
+        )
+        return {"schema": schema.jsonValue()}
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._dir(name))
+        reader = self.spark.read
+        schema = self._marker(name).get("schema")
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.parquet(self._dir(name))
+
+    def _marker(self, name: str) -> dict:
+        path = os.path.join(self._dir(name), _MARKER)
+        if not os.path.exists(path):
+            return {}
+        with open(path, encoding="utf-8") as fh:
+            return json.load(fh)
+
+    def write_lineage(self, name: str) -> None:
+        """One lineage row per write task, from the footers of its
+        ``part-NNNNN`` files (see module docstring)."""
+        footers: dict[int, list] = {}
+        for d, subdirs, files in os.walk(self._dir(name)):
+            subdirs[:] = [s for s in subdirs if not s.startswith(("_", "."))]
+            for f in files:
+                m = _PART_FILE.match(f)
+                if m:
+                    footers.setdefault(int(m.group(1)), []).append(
+                        pq.read_metadata(os.path.join(d, f))
+                    )
+        rows = []
+        for pid, mds in sorted(footers.items()):
+            row_count = sum(md.num_rows for md in mds)
+            if row_count == 0:
+                continue
+            urls = [s for md in mds for s in _column_stats(md, "url", str)]
+            stamps = [s for md in mds for s in _column_stats(md, "warc_ts", datetime)]
+            rows.append({
+                "_pid": pid,
+                "row_count": row_count,
+                "url_min": _fold((lo for lo, _ in urls), min),
+                "url_max": _fold((hi for _, hi in urls), max),
+                "warc_ts_watermark": _fold((hi for _, hi in stamps), max),
+                "stage": name,
+                "model_version": MODEL_VERSION,
+            })
+        self.write_side(
+            "lineage", name, pa.Table.from_pylist(rows, schema=_LINEAGE_SCHEMA)
+        )
 
     def commit(self, name: str, meta: dict) -> None:
         with open(
@@ -116,8 +240,11 @@ class ParquetStageBackend:
         ) as fh:
             json.dump(meta, fh)
 
-    def write_side(self, kind: str, name: str, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self._side_dir(kind, name))
+    def write_side(self, kind: str, name: str, table: pa.Table) -> None:
+        path = self._side_dir(kind, name)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
     def read_side(self, kind: str, name: str) -> DataFrame:
         return self.spark.read.parquet(self._side_dir(kind, name))
@@ -127,7 +254,7 @@ class ParquetStageBackend:
         verified sibling-directory swap (same recoverable protocol as
         streaming.incremental.compact_neardup_state), marker preserved."""
         path = self._dir(name)
-        df = self.spark.read.parquet(path)
+        df = self.read(name)
         n_rows = df.count()
         tmp = path + ".compacting"
         shutil.rmtree(tmp, ignore_errors=True)
@@ -193,12 +320,14 @@ class IcebergStageBackend:
         # previous committed snapshot stays readable until the swap)
         pass
 
-    def write(self, name: str, df: DataFrame, partition_by) -> None:
+    def write(self, name: str, df: DataFrame, partition_by) -> dict:
         writer = df.writeTo(self._tbl(name)).using("iceberg")
         if partition_by:
             writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
         # atomic snapshot; clears properties -> stage lands UNcommitted
         writer.createOrReplace()
+        # the table carries its own schema
+        return {}
 
     def read(self, name: str) -> DataFrame:
         return self.spark.table(self._tbl(name))
@@ -212,7 +341,34 @@ class IcebergStageBackend:
             f"ALTER TABLE {self._tbl(name)} SET TBLPROPERTIES ({props})"
         )
 
-    def write_side(self, kind: str, name: str, df: DataFrame) -> None:
+    def write_lineage(self, name: str) -> None:
+        """One row per physical partition of the committed table: url
+        range, warc_ts watermark, row count, model version.  Columns
+        the stage lacks are recorded as nulls."""
+        df = self.read(name)
+        cols = set(df.columns)
+        url_col = F.col("url") if "url" in cols else F.lit(None).cast("string")
+        ts_col = (
+            F.col("warc_ts") if "warc_ts" in cols else F.lit(None).cast("timestamp")
+        )
+        lineage = (
+            df.withColumn("_pid", F.spark_partition_id())
+            .groupBy("_pid")
+            .agg(
+                F.count(F.lit(1)).alias("row_count"),
+                F.min(url_col).alias("url_min"),
+                F.max(url_col).alias("url_max"),
+                F.max(ts_col).alias("warc_ts_watermark"),
+            )
+            .withColumn("stage", F.lit(name))
+            .withColumn("model_version", F.lit(MODEL_VERSION))
+        )
+        self._write_side_df("lineage", name, lineage)
+
+    def write_side(self, kind: str, name: str, table: pa.Table) -> None:
+        self._write_side_df(kind, name, self.spark.createDataFrame(table))
+
+    def _write_side_df(self, kind: str, name: str, df: DataFrame) -> None:
         df.writeTo(f"{self.ns}.`_{kind}_{name}`").using(
             "iceberg"
         ).createOrReplace()
@@ -264,16 +420,16 @@ class StageStore:
         — the P9 drop-count contract (rex/data/transforms/sent_re.py:
         44-58 logs exactly these per transform)."""
         rows = [
-            (name, k, int(v) if v is not None else 0, MODEL_VERSION)
+            {
+                "stage": name,
+                "metric": k,
+                "value": int(v) if v is not None else 0,
+                "model_version": MODEL_VERSION,
+            }
             for k, v in sorted(values.items())
         ]
         self._impl.write_side(
-            "metrics",
-            name,
-            self.spark.createDataFrame(
-                rows,
-                "stage string, metric string, value long, model_version string",
-            ).coalesce(1),
+            "metrics", name, pa.Table.from_pylist(rows, schema=_METRICS_SCHEMA)
         )
 
     def metrics(self, name: str) -> DataFrame:
@@ -313,33 +469,9 @@ class StageStore:
         self._impl.clear(name)
 
         df = compute()
-        self._impl.write(name, df, partition_by)
-        written = self._impl.read(name)
-        self._write_lineage(name, written)
+        written = self._impl.write(name, df, partition_by)
+        self._impl.write_lineage(name)
         self._impl.commit(
-            name, {"stage": name, "model_version": MODEL_VERSION}
+            name, {"stage": name, "model_version": MODEL_VERSION, **written}
         )
         return self.read(name)
-
-    def _write_lineage(self, name: str, df: DataFrame) -> None:
-        """One row per physical partition: url range, warc_ts watermark,
-        row count, model version (north-star lineage contract).
-        Columns the stage lacks are recorded as nulls."""
-        cols = set(df.columns)
-        url_col = F.col("url") if "url" in cols else F.lit(None).cast("string")
-        ts_col = (
-            F.col("warc_ts") if "warc_ts" in cols else F.lit(None).cast("timestamp")
-        )
-        lineage = (
-            df.withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid")
-            .agg(
-                F.count(F.lit(1)).alias("row_count"),
-                F.min(url_col).alias("url_min"),
-                F.max(url_col).alias("url_max"),
-                F.max(ts_col).alias("warc_ts_watermark"),
-            )
-            .withColumn("stage", F.lit(name))
-            .withColumn("model_version", F.lit(MODEL_VERSION))
-        )
-        self._impl.write_side("lineage", name, lineage)

@@ -378,9 +378,10 @@ def connected_components(
         probe = canon.limit(threshold + 1).collect()
         if len(probe) <= threshold:
             mapping = _driver_union_find([(r["a"], r["b"]) for r in probe])
-            spark = edges.sparkSession
+            # a pandas frame crosses as Arrow: no Python-worker tasks
+            frame = pd.DataFrame(mapping, columns=["node_id", "component"])
             schema = "node_id long, component long"
-            return spark.createDataFrame(mapping, schema=schema), 0
+            return edges.sparkSession.createDataFrame(frame, schema=schema), 0
 
     if checkpoint_dir is not None:
         edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
@@ -508,8 +509,11 @@ def canonicalize_surfaces(
                 )
                 for r in probe
             ]
+            frame = pd.DataFrame(
+                rows, columns=["surface", "freq", "node_id", "entity_id"]
+            )
             return spark.createDataFrame(
-                rows, "surface string, freq long, node_id long, entity_id long"
+                frame, "surface string, freq long, node_id long, entity_id long"
             )
 
     # nodes feeds three edge sources plus the final label join: persist

@@ -45,6 +45,11 @@ _DEFAULTS = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.files.maxPartitionBytes": str(256 * 1024 * 1024),
     "spark.sql.session.timeZone": "UTC",
+    # INT96 (Spark's default) timestamps carry no parquet min/max
+    # statistics, and the StageStore reads its lineage watermark
+    # (warc_ts) from those statistics; microseconds are also Iceberg's
+    # timestamp unit.  Spark has no per-write option for this.
+    "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     "spark.ui.enabled": "false",
     "spark.driver.host": "127.0.0.1",
 }

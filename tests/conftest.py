@@ -1,6 +1,23 @@
+import uuid
+
 import pytest
 
 from rex_spark.session import get_session
+
+
+def spark_jobs(spark, fn):
+    """Run ``fn()``; return its result and the number of Spark jobs it
+    started."""
+    sc = spark.sparkContext
+    group = f"spark_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        result = fn()
+    finally:
+        sc._jsc.clearJobGroup()  # noqa: SLF001
+    # job-start events reach the status store through the async bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")
