@@ -26,9 +26,10 @@ Pipeline:
                           with support counts, salted-repartition ready.
 
 Scale notes: LSH band join is the only quadratic-risk step; banding
-keys bound bucket sizes and a bucket-size cap drops degenerate buckets
-(counted, not silent).  Component ids are min-node-id, so results are
-deterministic.
+keys bound bucket sizes and buckets of more than MAX_BUCKET surfaces
+are dropped, uncounted, before the join (identical normalized forms
+are still linked by the exact-norm edges).  Component ids are
+min-node-id, so results are deterministic.
 """
 
 from __future__ import annotations
@@ -40,7 +41,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -90,7 +90,9 @@ def _alias_edges(spark, nodes: DataFrame) -> DataFrame:
         for s in surfaces:
             surf = " ".join(s.split()) if not kb._is_zh(s) else " ".join(s)
             rows.append((canonical, surf))
-    alias_df = spark.createDataFrame(rows, ["canonical", "surface"])
+    # a pandas frame crosses as Arrow: no Python-worker tasks
+    frame = pd.DataFrame(rows, columns=["canonical", "surface"])
+    alias_df = spark.createDataFrame(frame, "canonical string, surface string")
     linked = nodes.join(F.broadcast(alias_df), "surface").select(
         "canonical", "node_id"
     )
@@ -112,94 +114,83 @@ def _exact_norm_edges(nodes: DataFrame) -> DataFrame:
     )
 
 
-_SHINGLE_SCHEMA = StructType(
+_LSH_SCHEMA = StructType(
     [
         StructField("node_id", LongType(), False),
-        StructField("shingles", ArrayType(StringType()), False),
-    ]
-)
-
-_SIG_SCHEMA = StructType(
-    [
-        StructField("node_id", LongType(), False),
-        StructField("band_id", IntegerType(), False),
-        StructField("band_key", LongType(), False),
+        StructField("shingles", ArrayType(StringType(), False), False),
+        StructField("band_keys", ArrayType(LongType(), False), False),
     ]
 )
 
 
-def _shingle_table(nodes: DataFrame) -> DataFrame:
-    """One Arrow pass: (node_id, sorted char-3-gram shingles of norm);
-    empty-shingle surfaces are dropped (they cannot LSH-link)."""
+def _lsh_table(nodes: DataFrame) -> DataFrame:
+    """One Arrow pass: (node_id, sorted char-3-gram shingles of norm,
+    NUM_BANDS band keys of their MinHash signature); empty-shingle
+    surfaces are dropped (they cannot LSH-link)."""
+    import numpy as np
+    import pyarrow as pa
 
-    def shingle_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    params = minhash_params(NUM_PERM)
+
+    def lsh_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             ids, shs = [], []
-            for node_id, norm in zip(pdf["node_id"], pdf["norm"]):
+            node_ids = batch.column("node_id").to_pylist()
+            for node_id, norm in zip(node_ids, batch.column("norm").to_pylist()):
                 sh = sorted(set(char_shingles(norm or "", 3)))
                 if sh:
                     ids.append(node_id)
                     shs.append(sh)
-            yield pd.DataFrame({"node_id": ids, "shingles": shs})
+            keys = band_keys_batch(minhash_signatures_batch(shs, params), NUM_BANDS)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids, pa.int64()),
+                    pa.array(shs, pa.list_(pa.string())),
+                    pa.ListArray.from_arrays(
+                        np.arange(0, NUM_BANDS * (len(ids) + 1), NUM_BANDS, dtype=np.int32),
+                        # signed band-key CONVENTION (shared with
+                        # dedup.band_rows): uint64 -> int64 by
+                        # bit-reinterpretation (two's complement view),
+                        # NOT an offset shift — persisted band tables
+                        # from the two LSH surfaces must stay
+                        # join-comparable.  A zero-row batch still has
+                        # a typed (0, NUM_BANDS) key matrix.
+                        pa.array(keys.reshape(-1).view(np.int64)),
+                    ),
+                ],
+                names=["node_id", "shingles", "band_keys"],
+            )
 
-    return nodes.select("node_id", "norm").mapInPandas(
-        shingle_batches, schema=_SHINGLE_SCHEMA
-    )
+    return nodes.select("node_id", "norm").mapInArrow(lsh_batches, schema=_LSH_SCHEMA)
 
 
 def _lsh_edges(nodes: DataFrame) -> DataFrame:
     """MinHash-LSH candidates verified with exact Jaccard (J6).
 
-    r4 shape (soak-profiled: the edge build dominated the CC soak
-    14:1): shingling runs in ONE Arrow pass; signatures are the
-    VECTORIZED batch kernels (minhash_signatures_batch /
-    band_keys_batch — pinned equal to the scalar kernels by
-    tests/test_property_kernels.py) derived from that shingle table;
-    and the band rows entering the bucket-size and self-join shuffles
-    are NARROW (node_id, band_id, band_key) — shingle arrays are
-    joined back only for the (small) verified-candidate set, the same
-    design dedup.py measured faster than carrying them on band rows
-    (dedup.py:215-225), and the shuffle-width argument only grows at
-    web scale.
+    The plan crosses into Python ONCE: :func:`_lsh_table` (the
+    vectorized minhash_signatures_batch / band_keys_batch kernels,
+    pinned equal to the scalar kernels by tests/test_property_kernels.py)
+    is cached once and every consumer reads the cache.  The band rows
+    are a JVM ``posexplode`` of its band keys: a Python map under the
+    band self-join would run once per side and per bucket-size
+    aggregate, because the aliased copies get fresh attribute ids that
+    neither the cache nor exchange reuse match.  The band rows entering
+    the bucket-size and self-join shuffles are NARROW (node_id,
+    band_id, band_key) — shingle arrays are joined back only for the
+    (small) candidate set, the same design dedup.py measured faster
+    than carrying them on band rows (dedup.py:215-225), and the
+    shuffle-width argument only grows at web scale.
     """
-    import numpy as np
-
-    params = minhash_params(NUM_PERM)
-
     from pyspark import StorageLevel
 
-    # surface-vocab-sized; persisted because the signature pass and the
-    # two verification joins all consume it within the caller's first
-    # materializing action.
-    sh = _shingle_table(nodes).persist(StorageLevel.MEMORY_AND_DISK)
-
-    def sig_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["node_id"].to_numpy()
-            d = len(ids)
-            sigs = minhash_signatures_batch(
-                [set(s) for s in pdf["shingles"]], params
-            )
-            keys = band_keys_batch(sigs, NUM_BANDS)
-            yield pd.DataFrame(
-                {
-                    "node_id": np.repeat(ids, NUM_BANDS),
-                    "band_id": np.tile(np.arange(NUM_BANDS, dtype=np.int32), d),
-                    # signed band-key CONVENTION (shared with
-                    # dedup.band_rows): uint64 -> int64 by
-                    # bit-reinterpretation (two's complement view), NOT
-                    # an offset shift — persisted band tables from the
-                    # two LSH surfaces must stay join-comparable
-                    "band_key": (
-                        keys.reshape(-1).view(np.int64)
-                        if d
-                        else np.array([], dtype=np.int64)
-                    ),
-                }
-            )
-
-    banded = sh.mapInPandas(sig_batches, schema=_SIG_SCHEMA)
-    # cap degenerate buckets (count them instead of letting the join blow up)
+    # surface-vocab-sized; persisted because the band rows and the two
+    # verification joins all consume it within the eager checkpoint
+    # below
+    lsh = _lsh_table(nodes).persist(StorageLevel.MEMORY_AND_DISK)
+    banded = lsh.select(
+        "node_id", F.posexplode("band_keys").alias("band_id", "band_key")
+    )
+    # drop degenerate buckets instead of letting the join blow up
     bucket_sizes = banded.groupBy("band_id", "band_key").agg(
         F.count(F.lit(1)).alias("bsz")
     )
@@ -217,11 +208,11 @@ def _lsh_edges(nodes: DataFrame) -> DataFrame:
     )
     verified = (
         cand.join(
-            sh.select(F.col("node_id").alias("a"), F.col("shingles").alias("sh_a")),
+            lsh.select(F.col("node_id").alias("a"), F.col("shingles").alias("sh_a")),
             "a",
         )
         .join(
-            sh.select(F.col("node_id").alias("b"), F.col("shingles").alias("sh_b")),
+            lsh.select(F.col("node_id").alias("b"), F.col("shingles").alias("sh_b")),
             "b",
         )
         .withColumn(
@@ -232,14 +223,14 @@ def _lsh_edges(nodes: DataFrame) -> DataFrame:
         .where(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("a", "b")
     )
-    # materialize eagerly (edge-set-sized, tiny next to the shingle
-    # table) so the sh cache can be RELEASED here instead of leaking a
+    # materialize eagerly (edge-set-sized, tiny next to the LSH table)
+    # so the lsh cache can be RELEASED here instead of leaking a
     # persisted DataFrame per canonicalize_surfaces call for the
     # session lifetime — same contract as the nodes persist/unpersist
     # pair in canonicalize_surfaces.  Cluster caveat as there:
     # localCheckpoint -> .checkpoint() on a real deployment.
     verified = verified.localCheckpoint(eager=True)
-    sh.unpersist()
+    lsh.unpersist()
     return verified
 
 
@@ -340,12 +331,14 @@ def connected_components(
     """Large-star/small-star alternation until the edge set is a stable
     star forest.  Returns (node_id -> component_id mapping, iterations).
 
-    Scale-adaptive: the canonical edge set is first probed with a
-    ``limit(threshold + 1)`` collect; if it fits, union-find runs on
-    the driver (0 iterations reported) — at web scale the surface graph
-    exceeds the threshold and the iterative DataFrame loop below runs
-    instead.  Both paths label every node with its component's min node
-    id, so results are identical.
+    Scale-adaptive: the canonical edge set is materialized first (so
+    the upstream edge sources run once), then the materialized table is
+    probed with a ``limit(threshold + 1)`` collect; if it fits,
+    union-find runs on the driver (0 iterations reported) — at web
+    scale the surface graph exceeds the threshold and the iterative
+    DataFrame loop below runs instead, starting from that same
+    materialized table.  Both paths label every node with its
+    component's min node id, so results are identical.
 
     Each round materializes via localCheckpoint: cuts the join-loop
     lineage (REx's pickle-cache analog for iterative state) and gives
@@ -356,13 +349,14 @@ def connected_components(
     to switch every round to reliable ``.checkpoint()`` into that
     (HDFS/object-store) directory instead; results are identical
     (pinned by tests/test_canonical_cc.py).  Convergence is detected
-    by an order-independent (count, hash-sum) digest of the edge set —
-    a single aggregation per round instead of two exceptAll jobs.  A
-    digest collision between two DIFFERENT edge sets would stop the
-    loop before convergence and could yield wrong labels; with a
-    64-bit hash-sum the per-round collision probability is ~2^-64,
-    which we accept in exchange for halving the per-round job count
-    (an exact exceptAll check would double it back).
+    by an order-independent (count, ``bit_xor`` of 64-bit row hashes)
+    digest of the edge set — a single aggregation per round instead of
+    two exceptAll jobs.  A digest collision between two DIFFERENT edge
+    sets would stop the loop before convergence and could yield wrong
+    labels; with a 64-bit xor digest the per-round collision
+    probability is ~2^-64, which we accept in exchange for halving the
+    per-round job count (an exact exceptAll check would double it
+    back).
     """
     canon = (
         edges.select(
@@ -371,18 +365,6 @@ def connected_components(
         .where(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
     )
-    threshold = (
-        DRIVER_CC_MAX_EDGES if driver_max_edges is None else driver_max_edges
-    )
-    if threshold > 0:
-        probe = canon.limit(threshold + 1).collect()
-        if len(probe) <= threshold:
-            mapping = _driver_union_find([(r["a"], r["b"]) for r in probe])
-            # a pandas frame crosses as Arrow: no Python-worker tasks
-            frame = pd.DataFrame(mapping, columns=["node_id", "component"])
-            schema = "node_id long, component long"
-            return edges.sparkSession.createDataFrame(frame, schema=schema), 0
-
     if checkpoint_dir is not None:
         edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
@@ -394,7 +376,21 @@ def connected_components(
         def _materialize(df: DataFrame) -> DataFrame:
             return df.localCheckpoint()
 
+    # materialized before the probe, so the edge sources upstream run
+    # once whichever path is taken
     cur = _materialize(canon)
+    threshold = (
+        DRIVER_CC_MAX_EDGES if driver_max_edges is None else driver_max_edges
+    )
+    if threshold > 0:
+        probe = cur.limit(threshold + 1).collect()
+        if len(probe) <= threshold:
+            mapping = _driver_union_find([(r["a"], r["b"]) for r in probe])
+            # a pandas frame crosses as Arrow: no Python-worker tasks
+            frame = pd.DataFrame(mapping, columns=["node_id", "component"])
+            schema = "node_id long, component long"
+            return edges.sparkSession.createDataFrame(frame, schema=schema), 0
+
     prev_digest = _edge_digest(cur)
     iterations = 0
     for _ in range(max_iterations):
