@@ -34,28 +34,16 @@ min-node-id, so results are deterministic.
 
 from __future__ import annotations
 
-from typing import Iterator, Tuple
+from typing import Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..kernels import kb
-from ..kernels.hashing import (
-    band_keys,
-    band_keys_batch,
-    minhash_params,
-    minhash_signature,
-    minhash_signatures_batch,
-)
+from ..kernels.hashing import band_keys, minhash_params, minhash_signature
 from ..kernels.textnorm import char_shingles
+from .dedup import lsh_pairs, lsh_table
 
 NUM_PERM = 64
 NUM_BANDS = 16
@@ -114,124 +102,20 @@ def _exact_norm_edges(nodes: DataFrame) -> DataFrame:
     )
 
 
-_LSH_SCHEMA = StructType(
-    [
-        StructField("node_id", LongType(), False),
-        StructField("shingles", ArrayType(StringType(), False), False),
-        StructField("band_keys", ArrayType(LongType(), False), False),
-    ]
-)
-
-
-def _lsh_table(nodes: DataFrame) -> DataFrame:
-    """One Arrow pass: (node_id, sorted char-3-gram shingles of norm,
-    NUM_BANDS band keys of their MinHash signature); empty-shingle
-    surfaces are dropped (they cannot LSH-link)."""
-    import numpy as np
-    import pyarrow as pa
-
-    params = minhash_params(NUM_PERM)
-
-    def lsh_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ids, shs = [], []
-            node_ids = batch.column("node_id").to_pylist()
-            for node_id, norm in zip(node_ids, batch.column("norm").to_pylist()):
-                sh = sorted(set(char_shingles(norm or "", 3)))
-                if sh:
-                    ids.append(node_id)
-                    shs.append(sh)
-            keys = band_keys_batch(minhash_signatures_batch(shs, params), NUM_BANDS)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids, pa.int64()),
-                    pa.array(shs, pa.list_(pa.string())),
-                    pa.ListArray.from_arrays(
-                        np.arange(0, NUM_BANDS * (len(ids) + 1), NUM_BANDS, dtype=np.int32),
-                        # signed band-key CONVENTION (shared with
-                        # dedup.band_rows): uint64 -> int64 by
-                        # bit-reinterpretation (two's complement view),
-                        # NOT an offset shift — persisted band tables
-                        # from the two LSH surfaces must stay
-                        # join-comparable.  A zero-row batch still has
-                        # a typed (0, NUM_BANDS) key matrix.
-                        pa.array(keys.reshape(-1).view(np.int64)),
-                    ),
-                ],
-                names=["node_id", "shingles", "band_keys"],
-            )
-
-    return nodes.select("node_id", "norm").mapInArrow(lsh_batches, schema=_LSH_SCHEMA)
-
-
 def _lsh_edges(nodes: DataFrame) -> DataFrame:
-    """MinHash-LSH candidates verified with exact Jaccard (J6).
-
-    The plan crosses into Python ONCE: :func:`_lsh_table` (the
-    vectorized minhash_signatures_batch / band_keys_batch kernels,
-    pinned equal to the scalar kernels by tests/test_property_kernels.py)
-    is cached once and every consumer reads the cache.  The band rows
-    are a JVM ``posexplode`` of its band keys: a Python map under the
-    band self-join would run once per side and per bucket-size
-    aggregate, because the aliased copies get fresh attribute ids that
-    neither the cache nor exchange reuse match.  The band rows entering
-    the bucket-size and self-join shuffles are NARROW (node_id,
-    band_id, band_key) — shingle arrays are joined back only for the
-    (small) candidate set, the same design dedup.py measured faster
-    than carrying them on band rows (dedup.py:215-225), and the
-    shuffle-width argument only grows at web scale.
-    """
-    from pyspark import StorageLevel
-
-    # surface-vocab-sized; persisted because the band rows and the two
-    # verification joins all consume it within the eager checkpoint
-    # below
-    lsh = _lsh_table(nodes).persist(StorageLevel.MEMORY_AND_DISK)
-    banded = lsh.select(
-        "node_id", F.posexplode("band_keys").alias("band_id", "band_key")
+    """MinHash-LSH candidates over char-3-gram shingles of ``norm``,
+    verified with exact Jaccard (J6): dedup.lsh_table + dedup.lsh_pairs,
+    the one LSH implementation shared with document near-dup.  One
+    Python pass; shingle-less surfaces are dropped; band buckets over
+    MAX_BUCKET are dropped before the self-join; the verified edges are
+    checkpointed eagerly."""
+    table = lsh_table(
+        nodes, "node_id", "norm", lambda norm: char_shingles(norm or "", 3),
+        NUM_PERM, NUM_BANDS,
     )
-    # drop degenerate buckets instead of letting the join blow up
-    bucket_sizes = banded.groupBy("band_id", "band_key").agg(
-        F.count(F.lit(1)).alias("bsz")
+    return lsh_pairs(table, "node_id", JACCARD_THRESHOLD, max_bucket=MAX_BUCKET).select(
+        "a", "b"
     )
-    banded = banded.join(
-        bucket_sizes.where(F.col("bsz") <= MAX_BUCKET), ["band_id", "band_key"]
-    )
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band_id", "band_key"])
-        .where(F.col("x.node_id") < F.col("y.node_id"))
-        .select(
-            F.col("x.node_id").alias("a"), F.col("y.node_id").alias("b")
-        )
-        .dropDuplicates(["a", "b"])
-    )
-    verified = (
-        cand.join(
-            lsh.select(F.col("node_id").alias("a"), F.col("shingles").alias("sh_a")),
-            "a",
-        )
-        .join(
-            lsh.select(F.col("node_id").alias("b"), F.col("shingles").alias("sh_b")),
-            "b",
-        )
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
-        )
-        .where(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("a", "b")
-    )
-    # materialize eagerly (edge-set-sized, tiny next to the LSH table)
-    # so the lsh cache can be RELEASED here instead of leaking a
-    # persisted DataFrame per canonicalize_surfaces call for the
-    # session lifetime — same contract as the nodes persist/unpersist
-    # pair in canonicalize_surfaces.  Cluster caveat as there:
-    # localCheckpoint -> .checkpoint() on a real deployment.
-    verified = verified.localCheckpoint(eager=True)
-    lsh.unpersist()
-    return verified
 
 
 def similarity_edges(spark, nodes: DataFrame) -> DataFrame:

@@ -14,6 +14,12 @@ All operate on the ``documents`` table shape
                            only meet inside a band bucket, verified with
                            exact Jaccard.  The 100 TB path (cost ~
                            O(docs x bands), never all-pairs).
+- ``lsh_table`` / ``lsh_pairs``  the one MinHash-LSH implementation
+                           under minhash_lsh_pairs, canonical.py's fuzzy
+                           surface edges and streaming/incremental.py's
+                           near-dup state: one Arrow pass to (id,
+                           shingles, band keys), narrow JVM band rows,
+                           one band self-join, exact-Jaccard verify.
 - ``simhash_pairs``        64-bit SimHash, blocked by 4x16-bit chunks
                            (pigeonhole: hamming<=3 pairs share a chunk),
                            verified by exact hamming distance.
@@ -25,15 +31,15 @@ where expressible (exact variants) and rows-only checks otherwise.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    IntegerType,
     LongType,
+    StringType,
     StructField,
     StructType,
 )
@@ -148,103 +154,152 @@ def ngram_jaccard_pairs(
     return out
 
 
-_SIG_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("band_id", IntegerType(), False),
-        StructField("band_key", LongType(), False),
-    ]
-)
-
 NUM_PERM = 128
 NUM_BANDS = 32
 
 
-def band_rows(
-    documents: DataFrame,
-    n: int = 3,
-    num_perm: int = NUM_PERM,
-    num_bands: int = NUM_BANDS,
+def lsh_table(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_fn: Callable[[str | None], Iterable[str]],
+    num_perm: int,
+    num_bands: int,
 ) -> DataFrame:
-    """(doc_id, text) -> one row per (doc_id, band_id, band_key):
-    the MinHash band signatures minhash_lsh_pairs blocks on, exposed
-    so the incremental path (streaming/incremental.py) can maintain
-    them as a persistent stage table with the batch kernels."""
+    """One Arrow pass: ``(id_col, shingles, band_keys)`` — the sorted
+    distinct shingles of ``text_col`` and the ``num_bands`` LSH band
+    keys of their MinHash signature.  Rows with no shingles are dropped
+    (they cannot LSH-link).
+
+    Band keys follow one signed CONVENTION: the uint64 key's bits
+    viewed as int64 (two's complement), NOT an offset shift — the
+    incremental near-dup state persists them, so every band table must
+    use exactly this mapping to stay join-comparable."""
     import numpy as np
+    import pyarrow as pa
 
     params = minhash_params(num_perm)
+    schema = StructType(
+        [
+            StructField(id_col, LongType(), False),
+            StructField("shingles", ArrayType(StringType(), False), False),
+            StructField("band_keys", ArrayType(LongType(), False), False),
+        ]
+    )
 
-    def sig_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            doc_ids = pdf["doc_id"].to_numpy()
-            shingle_lists = []
-            for text in pdf["text"]:
-                toks = " ".join((text or "").lower().split()).split(" ")
-                shingle_lists.append(set(ngrams(toks, n)))
-            sigs = minhash_signatures_batch(shingle_lists, params)
-            keys = band_keys_batch(sigs, num_bands)  # (D, bands)
-            d = len(doc_ids)
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.repeat(doc_ids, num_bands),
-                    "band_id": np.tile(
-                        np.arange(num_bands, dtype=np.int32), d
+    def lsh_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            ids, shs = [], []
+            texts = batch.column(text_col).to_pylist()
+            for row_id, text in zip(batch.column(id_col).to_pylist(), texts):
+                sh = sorted(set(shingle_fn(text)))
+                if sh:
+                    ids.append(row_id)
+                    shs.append(sh)
+            # a zero-row batch still has a typed (0, num_bands) matrix
+            keys = band_keys_batch(minhash_signatures_batch(shs, params), num_bands)
+            offsets = np.arange(0, num_bands * (len(ids) + 1), num_bands, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ids, pa.int64()),
+                    pa.array(shs, pa.list_(pa.string())),
+                    pa.ListArray.from_arrays(
+                        offsets, pa.array(keys.reshape(-1).view(np.int64))
                     ),
-                    # signed band-key CONVENTION (shared with
-                    # canonical._lsh_edges): uint64 -> int64 by
-                    # bit-reinterpretation (two's complement view), NOT
-                    # an offset shift — the incremental near-dup state
-                    # persists these rows, so any surface emitting band
-                    # keys must use this exact mapping
-                    "band_key": (
-                        keys.reshape(-1).view(np.int64)
-                        if d
-                        else np.array([], dtype=np.int64)
-                    ),
-                }
+                ],
+                names=[id_col, "shingles", "band_keys"],
             )
 
-    src = _parallelize(documents.select("doc_id", "text"))
-    return src.mapInPandas(sig_batches, schema=_SIG_SCHEMA)
+    return df.select(id_col, text_col).mapInArrow(lsh_batches, schema=schema)
 
 
-def shingle_rows(documents: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, text) -> (doc_id, sh: sorted distinct shingles) — the
-    exact-Jaccard verify side of minhash_lsh_pairs, exposed for the
-    incremental path.  An Arrow UDF rather than the JVM
-    transform/slice expression: building slice-and-concat results per
-    document in Catalyst codegen measured ~4x slower than the same
-    loop in Python for long documents."""
-    src = _parallelize(documents.select("doc_id", "text"))
-
-    def sh_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_sh = [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = " ".join((text or "").lower().split()).split(" ")
-                out_ids.append(doc_id)
-                out_sh.append(sorted(set(ngrams(toks, n))))
-            yield pd.DataFrame({"doc_id": out_ids, "sh": out_sh})
-
-    return src.mapInPandas(sh_batches, schema="doc_id long, sh array<string>")
+def band_rows(table: DataFrame, id_col: str) -> DataFrame:
+    """:func:`lsh_table` rows -> one narrow JVM row per
+    ``(id_col, band_id int, band_key long)``."""
+    return table.select(id_col, F.posexplode("band_keys").alias("band_id", "band_key"))
 
 
-def verify_jaccard_pairs(
-    cand: DataFrame, sh: DataFrame, threshold: float
+def verify_jaccard(
+    cand: DataFrame, table: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
-    """(a, b) candidates x (doc_id, sh) shingles -> exact-Jaccard
-    verified pairs (a, b, jaccard >= threshold)."""
+    """(a, b) candidates -> (a, b, jaccard) with the exact Jaccard of
+    their ``shingles`` in ``table`` at least ``threshold``."""
+
+    def side(name):
+        return table.select(
+            F.col(id_col).alias(name), F.col("shingles").alias(f"sh_{name}")
+        )
+
     return (
-        cand.join(sh.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a")), "a")
-        .join(sh.select(F.col("doc_id").alias("b"), F.col("sh").alias("sh_b")), "b")
+        cand.join(side("a"), "a")
+        .join(side("b"), "b")
         .withColumn(
             "jaccard",
             F.size(F.array_intersect("sh_a", "sh_b"))
             / F.size(F.array_union("sh_a", "sh_b")),
         )
         .where(F.col("jaccard") >= threshold)
-        .select("a", "b", F.round("jaccard", 6).alias("jaccard"))
+        .select("a", "b", "jaccard")
     )
+
+
+def lsh_pairs(
+    table: DataFrame, id_col: str, threshold: float, max_bucket: int | None = None
+) -> DataFrame:
+    """Band-bucket self-join of an :func:`lsh_table`, verified with
+    exact Jaccard -> (a < b, jaccard >= threshold).
+
+    The table is persisted once and read by every consumer: a Python
+    map under the self-join would otherwise run once per aliased side
+    and per aggregate (fresh attribute ids defeat exchange reuse).  The
+    band rows entering the bucket-size and self-join shuffles are
+    narrow; shingle arrays are joined back only for the candidates.
+    Buckets of more than ``max_bucket`` rows are dropped before the
+    join.  The result is checkpointed eagerly so the table can be
+    released here rather than leak for the session lifetime
+    (localCheckpoint -> .checkpoint() on a real deployment).
+    """
+    from pyspark import StorageLevel
+
+    table = table.persist(StorageLevel.MEMORY_AND_DISK)
+    banded = band_rows(table, id_col)
+    if max_bucket is not None:
+        sizes = banded.groupBy("band_id", "band_key").agg(
+            F.count(F.lit(1)).alias("bsz")
+        )
+        banded = banded.join(
+            sizes.where(F.col("bsz") <= max_bucket), ["band_id", "band_key"]
+        )
+    cand = (
+        banded.alias("x")
+        .join(banded.alias("y"), ["band_id", "band_key"])
+        .where(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
+        .select(F.col(f"x.{id_col}").alias("a"), F.col(f"y.{id_col}").alias("b"))
+        .dropDuplicates(["a", "b"])
+    )
+    pairs = verify_jaccard(cand, table, id_col, threshold).localCheckpoint(eager=True)
+    table.unpersist()
+    return pairs
+
+
+def document_lsh_table(
+    documents: DataFrame,
+    n: int = 3,
+    num_perm: int = NUM_PERM,
+    num_bands: int = NUM_BANDS,
+) -> DataFrame:
+    """(doc_id, text) -> :func:`lsh_table` over lower-cased,
+    whitespace-collapsed token n-grams (empty or null text is the
+    single shingle ``""``) — shared by minhash_lsh_pairs and the
+    incremental near-dup state, so both shingle identically.  The loop
+    runs in Python: building slice-and-concat results per document in
+    Catalyst codegen measured ~4x slower for long documents."""
+
+    def shingles(text):
+        return ngrams(" ".join((text or "").lower().split()).split(" "), n)
+
+    src = _parallelize(documents.select("doc_id", "text"))
+    return lsh_table(src, "doc_id", "text", shingles, num_perm, num_bands)
 
 
 def minhash_lsh_pairs(
@@ -262,25 +317,14 @@ def minhash_lsh_pairs(
     thresholds the two agree with overwhelming probability, which the
     tests exploit.
 
-    Composed from band_rows (banding) + shingle_rows + verify_jaccard_
-    pairs (exact verify) — the same pieces the incremental streaming
-    dedup reuses.  Verify shingles ride a second Arrow pass rather
-    than the band rows: carrying shingles on band rows (one UDF pass,
-    canonical.py-style) was MEASURED SLOWER at sf0.1 (median 1.54s vs
-    1.46s, 3 runs) — the 32x-duplicated arrays widen the band
-    self-join shuffle by more than the saved scan, and at web scale
-    that shuffle amplification only grows, while this design ships
-    shingles solely for the (small) candidate set.
+    One :func:`document_lsh_table` pass, then :func:`lsh_pairs` — the
+    same code canonical.py's fuzzy edges and the incremental streaming
+    dedup run.  Eager: the pairs are checkpointed before this returns.
     """
-    banded = band_rows(documents, n=n, num_perm=num_perm, num_bands=num_bands)
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band_id", "band_key"])
-        .where(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .dropDuplicates(["a", "b"])
+    table = document_lsh_table(documents, n, num_perm, num_bands)
+    return lsh_pairs(table, "doc_id", threshold).select(
+        "a", "b", F.round("jaccard", 6).alias("jaccard")
     )
-    return verify_jaccard_pairs(cand, shingle_rows(documents, n=n), threshold)
 
 
 _SIMHASH_SCHEMA = StructType(

@@ -84,65 +84,21 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 1227) -> np.ndarray:
     return vals.reshape(n_planes, dim)
 
 
-# Measured crossover for impl="auto" (tools/bucketed_bench.py; full
-# grid + reasoning in BASELINE.md "LSH bucketing impl guard"): the
-# literal plan pays a FIXED driver/plan-build cost of ~0.7-1 ms per
-# inlined weight (py4j literal construction + codegen) but its
-# executor per-row cost is tiny, while the Arrow path is the reverse
-# (near-zero fixed, per-row cost that grows with tables x dim — the
-# fan-out ships each vector n_tables times through Arrow).  Measured
-# break-even: ~132k rows at the default 4x16x64 cell (4,096 weights)
-# but ~21k rows at 4x64x256 (65,536 weights) — Arrow's per-row cost
-# grows FASTER than linearly in the weight count, so the threshold
-# scales inversely with weights.  The inverse-linear model below
-# under-estimates the big-cell crossover (6k vs measured 21k), i.e.
-# errs toward literal — the bounded mistake (cost capped by the fixed
-# plan build) and the right bias for an engine designed for scale.
-BUCKETED_ARROW_MAX_ROWS = 100_000  # at the default 4,096-weight cell
-
-
-def _arrow_max_rows(n_planes: int, n_tables: int, dim: int) -> int:
-    weights = n_planes * n_tables * dim
-    return max(1_000, int(BUCKETED_ARROW_MAX_ROWS * 4_096 / weights))
-
-
 def bucketed(
     e: DataFrame,
     n_planes: int = 4,
     n_tables: int = 16,
     dim: int = 64,
-    impl: str = "auto",
-    n_rows_hint: int | None = None,
 ) -> DataFrame:
     """_normed() rows -> one row per (vec_id, table_id, bucket):
     sign-pattern bucket in each of ``n_tables`` hyperplane tables.
 
-    ``impl="literal"`` evaluates the dot products JVM-side with the
-    plane weights inlined as plan literals (whole-stage codegen, zero
-    Python); ``"arrow"`` computes all buckets in one vectorized numpy
-    matmul inside mapInPandas (plan size O(1) in dim x tables).
-    ``"auto"``: arrow only when ``n_rows_hint`` says the input is
-    small enough (< the weight-scaled ``_arrow_max_rows``) for the
-    literal plan's fixed build cost to dominate; literal otherwise —
-    including when no hint is given, because this engine designs for
-    the 100 TB case and the measured executor throughput of the
-    literal plan wins 7-30x there (BASELINE.md grid; the r3 "codegen
-    bloat" suspicion measured REAL for plan build — 205 s at 262k
-    weights — but amortized away at scale).  Both implementations produce identical
-    buckets on every measured input (same hyperplanes, float64 dots;
-    pinned by tests/test_similarity_bucketing.py) — a sign flip would
-    need a dot product within float-summation-order epsilon of
-    exactly 0.
+    The dot products are evaluated JVM-side with the plane weights
+    inlined as plan literals (whole-stage codegen, zero Python).  The
+    plan build costs ~1 ms per inlined weight, amortized away at scale,
+    where the literal plan's executor throughput wins (BASELINE.md
+    "LSH bucketing impl guard").
     """
-    if impl == "auto":
-        impl = (
-            "arrow"
-            if n_rows_hint is not None
-            and n_rows_hint < _arrow_max_rows(n_planes, n_tables, dim)
-            else "literal"
-        )
-    if impl == "arrow":
-        return _bucketed_arrow(e, n_planes, n_tables, dim)
 
     def bucket_cols():
         cols = []
@@ -180,48 +136,6 @@ def bucketed(
     return tagged.select(
         "vec_id", "v", "norm", F.explode(bucket_structs).alias("tb")
     ).select("vec_id", "v", "norm", "tb.table_id", "tb.bucket")
-
-
-def _bucketed_arrow(
-    e: DataFrame, n_planes: int, n_tables: int, dim: int
-) -> DataFrame:
-    """Arrow twin of the literal bucketing: one (tables*planes, dim)
-    float64 matmul per batch, signs packed to bucket ints, fan-out done
-    row-wise in pandas.  Same _hyperplanes seeds, so buckets match the
-    literal plan."""
-    import pandas as pd
-
-    planes = np.stack(
-        [_hyperplanes(dim, n_planes, seed=1227 + t) for t in range(n_tables)]
-    )  # (n_tables, n_planes, dim)
-    weights = planes.reshape(n_tables * n_planes, dim)
-    powers = (1 << np.arange(n_planes)).astype(np.int64)
-
-    def bucket_batches(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vecs = np.asarray([list(v) for v in pdf["v"]], dtype=np.float64)
-            dots = vecs @ weights.T  # (rows, tables*planes)
-            bits = (dots >= 0).reshape(len(pdf), n_tables, n_planes)
-            buckets = (bits * powers).sum(axis=2).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy().repeat(n_tables),
-                    "v": [v for v in pdf["v"] for _ in range(n_tables)],
-                    "norm": pdf["norm"].to_numpy().repeat(n_tables),
-                    "table_id": np.tile(
-                        np.arange(n_tables, dtype=np.int32), len(pdf)
-                    ),
-                    "bucket": buckets.reshape(-1),
-                }
-            )
-
-    return e.mapInPandas(
-        bucket_batches,
-        schema="vec_id long, v array<double>, norm double, "
-        "table_id int, bucket int",
-    )
 
 
 def lsh_ann_topk(

@@ -145,16 +145,17 @@ def incremental_neardup(
 
     Per micro-batch of pages (doc identity = xxhash64(url)):
 
-    1. band signatures + shingle sets for the batch docs, with the
-       SAME kernels as the batch ``minhash_lsh_pairs`` (band_rows /
-       shingle_rows);
+    1. one ``document_lsh_table`` pass over the batch docs, the SAME
+       Arrow pass and shingling as the batch ``minhash_lsh_pairs``,
+       checkpointed once; the ``bands`` rows (``band_rows``) and the
+       ``shingles`` rows are both projections of it;
     2. candidates = batch band rows joined against the band table
        (previous batches + this one) on (band_id, band_key) — each
        pair is discovered exactly once, in the batch where its LATER
        member arrives, so new waves only pay for their own band keys,
        never a full-history self-join;
     3. exact-Jaccard verify against the persistent shingle table
-       (verify_jaccard_pairs), pairs appended to ``pairs``.
+       (``verify_jaccard``), pairs appended to ``pairs``.
 
     State tables live under ``state_root`` (bands/, shingles/,
     pairs/), each row stamped with batch_id; every write is guarded by
@@ -174,7 +175,7 @@ def incremental_neardup(
     """
     import os
 
-    from ..operators.dedup import band_rows, shingle_rows, verify_jaccard_pairs
+    from ..operators.dedup import band_rows, document_lsh_table, verify_jaccard
 
     # A crash mid-compaction can leave a table dir absent with its
     # .pre-compact sibling holding the state; running on the bare
@@ -202,8 +203,9 @@ def incremental_neardup(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         docs = _docs(batch_df)
-        new_bands = band_rows(docs, n=n).localCheckpoint(eager=True)
-        new_sh = shingle_rows(docs, n=n).localCheckpoint(eager=True)
+        table = document_lsh_table(docs, n=n).localCheckpoint(eager=True)
+        new_bands = band_rows(table, "doc_id")
+        new_sh = table.select("doc_id", F.col("shingles").alias("sh"))
         if not _has_batch(spark, bands_dir, batch_id):
             new_bands.withColumn("batch_id", F.lit(batch_id)).write.mode(
                 "append"
@@ -234,11 +236,14 @@ def incremental_neardup(
         # batch — no cross-batch duplicates to filter
         all_sh = spark.read.parquet(sh_dir).where(
             F.col("batch_id") <= batch_id
-        ).select("doc_id", "sh")
-        verified = verify_jaccard_pairs(cand, all_sh, threshold)
-        verified.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).parquet(pairs_dir)
+        ).select("doc_id", F.col("sh").alias("shingles"))
+        verified = verify_jaccard(cand, all_sh, "doc_id", threshold)
+        verified.select(
+            "a",
+            "b",
+            F.round("jaccard", 6).alias("jaccard"),
+            F.lit(batch_id).alias("batch_id"),
+        ).write.mode("append").parquet(pairs_dir)
 
     writer = (
         pages_stream.writeStream.foreachBatch(process)

@@ -1,7 +1,10 @@
-"""The distributed MinHash-LSH edge source: its physical plan crosses
-into Python once, its band rows stay narrow, and its edge set equals
-the in-process replica on the vocabularies that reach the edge cases
-(dropped buckets, shingle-less surfaces, empty batches and tables)."""
+"""The one MinHash-LSH implementation (dedup.lsh_table + lsh_pairs):
+its physical plan crosses into Python once and its band rows stay
+narrow under both callers (canonical surfaces, document near-dup); the
+canonical edge set equals the in-process replica on the vocabularies
+that reach the edge cases (dropped buckets, shingle-less surfaces,
+empty batches and tables); document near-dup keeps the empty-text
+shingle."""
 
 import itertools
 import re
@@ -16,6 +19,7 @@ from rex_spark.operators.canonical import (
     similarity_edges,
     surface_nodes,
 )
+from rex_spark.operators.dedup import minhash_lsh_pairs
 
 # ArrowEvalPython, MapInPandas, (Python)MapInArrow, FlatMapGroupsInPandas...
 _PYTHON_NODE = re.compile(r"Python|InPandas|InArrow")
@@ -63,15 +67,26 @@ def _recording_checkpoints(monkeypatch, df_class):
     return plans
 
 
-def test_lsh_plan_is_one_python_pass_with_narrow_band_rows(spark, monkeypatch):
+def _canonical_run(spark):
+    from tools.cc_soak import build_surface_mentions
+
+    mentions = build_surface_mentions(spark, 60)
+    return canonicalize_surfaces(spark, mentions, driver_max_surfaces=0)
+
+
+def _dedup_run(spark):
+    from __spark_entry__ import ORACLE_SF, q_minhash_lsh
+
+    return q_minhash_lsh(spark, ORACLE_SF)
+
+
+@pytest.mark.parametrize("run", [_canonical_run, _dedup_run], ids=["canonical", "dedup"])
+def test_lsh_plan_is_one_python_pass_with_narrow_band_rows(spark, monkeypatch, run):
     """One Python map node (the shingle + band-key pass, cached and
     read by every consumer), not one per self-join side and per
     bucket-size aggregate.  No exchange feeding a band join carries the
     shingle arrays."""
-    from tools.cc_soak import build_surface_mentions
-
-    mentions = build_surface_mentions(spark, 60)
-    plans = _recording_checkpoints(monkeypatch, type(mentions))
+    plans = _recording_checkpoints(monkeypatch, type(spark.range(0)))
     # shuffle joins, the shape of a vocabulary too large to broadcast:
     # a broadcast join has no exchange on its streamed side (the
     # adaptive threshold defaults to this one)
@@ -79,9 +94,12 @@ def test_lsh_plan_is_one_python_pass_with_narrow_band_rows(spark, monkeypatch):
     saved = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
-        canonicalize_surfaces(spark, mentions, driver_max_surfaces=0).collect()
+        out = run(spark)
+        out.collect()
     finally:
         spark.conf.set(key, saved)
+    # the returned frame's own plan too: a lazy result runs its Python here
+    plans.append(out._jdf.queryExecution().executedPlan())
 
     python = [
         {
@@ -92,7 +110,7 @@ def test_lsh_plan_is_one_python_pass_with_narrow_band_rows(spark, monkeypatch):
         for plan in plans
     ]
     lsh = [nodes for nodes in python if nodes]
-    assert len(lsh) == 1, python  # only the LSH edges run Python
+    assert len(lsh) == 1, python  # only the LSH pairs run Python
     assert len(lsh[0]) == 1, lsh[0]
     (plan,) = [p for p, nodes in zip(plans, python) if nodes]
 
@@ -172,3 +190,20 @@ def test_lsh_edges_on_empty_inputs(spark, surfaces):
     assert _edges(similarity_edges(spark, nodes)) == _driver_similarity_edges(
         nodes.collect()
     )
+
+
+def test_minhash_lsh_pairs_keeps_empty_text_shingle(spark):
+    """Empty and null text are the single shingle "" (the oracle gold's
+    ``text or ""``), so they pair with each other at Jaccard 1.0: the
+    shared pass's "no shingles -> drop" rule never drops a document.
+    Whitespace and case do not matter; an empty table gives no rows."""
+    rows = [
+        (1, ""), (2, ""), (3, None),
+        (4, "the quick brown fox jumps"), (5, "The quick  brown fox jumps"),
+        (6, "a b"),
+    ]
+    schema = "doc_id long, text string"
+    docs = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3), schema)
+    got = {tuple(r) for r in minhash_lsh_pairs(docs).collect()}
+    assert got == {(1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0), (4, 5, 1.0)}
+    assert minhash_lsh_pairs(spark.createDataFrame([], schema)).count() == 0
