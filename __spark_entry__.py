@@ -857,21 +857,10 @@ def q_kg_edges(spark, sf):
 
 
 def _shared_sentences(spark) -> DataFrame:
-    """clean+segment of the deterministic corpus, persisted once per
-    session — shared by the casrel and usm query paths (each used to
-    rebuild it, doubling the driver pass's text-plane work)."""
-    def build():
-        from pyspark import StorageLevel
-
-        from rex_spark.operators.textplane import clean_pages, segment_sentences
-        from rex_spark.pipeline import build_pages_df
-
-        pages = build_pages_df(spark, 200, seed=42)
-        return segment_sentences(clean_pages(pages)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-
-    return _kg_cached(spark, "sentences", build)
+    """Sentence rows of the shared pipeline run (same 200-page corpus;
+    its plane is persisted with sentence text) — read by the casrel
+    and usm query paths, so the driver pass runs one text plane."""
+    return _shared_kg_run(spark)["sentences"]
 
 
 def q_kg_casrel(spark, sf):

@@ -1,30 +1,28 @@
 """Extraction plane: mentions (NER), candidate pairs (J1), scored triples.
 
-The pipeline's text plane is ``extract_plane``: pages (or filtered
-docs) -> sentences + mentions + scored triples in ONE Arrow crossing,
-with the per-entity fan-out left to JVM projections (``plane_sentences``
-/ ``plane_mentions`` / ``plane_triples``).  Mentions and pairs never
+The text plane is ``extract_plane``: pages (or filtered docs) ->
+sentences + mentions + scored triples in ONE Arrow crossing, with the
+per-entity fan-out left to JVM projections (``plane_sentences`` /
+``plane_mentions`` / ``plane_triples``).  Mentions and pairs never
 leave the executor, so the whole text->triple path is shuffle-free.
+It is the only Spark-side caller of the sentence extractor
+(``extract_sentence``); its reference is the in-process kernel itself
+(kernels/extractor.py), which the tests compare it with row for row.
 
-The composable operators stay as query surfaces and test references:
-``detect_mentions`` -> ``candidate_pairs`` -> ``score_pairs`` expose
-each intermediate as a real DataFrame (REx exposes the same
-intermediates: entity lists, candidate pairs per
-rex/data/transforms/sent_re.py:50-63, per-pair scores per
-rex/models/sent_pcnn.py), and ``extract_triples_fused`` scores a
-sentences table in one mapInPandas.  Tests pin them equal to the plane.
-
-Candidate generation avoids a two-sided shuffle join: mentions are
-grouped per sentence (one shuffle) and pairs expand in-partition via
-explode, rather than self-joining the mentions table (two shuffles +
-skew on hot sentences).
+``candidate_pairs`` and ``filter_valid_mentions`` are the pair-level
+query surfaces over a mentions table (REx exposes the same
+intermediates: entity lists and candidate pairs per
+rex/data/transforms/sent_re.py:44-63) and carry its per-transform drop
+counts.  Candidate generation avoids a two-sided shuffle join:
+mentions are grouped per sentence (one shuffle) and pairs expand
+in-partition via explode, rather than self-joining the mentions table
+(two shuffles + skew on hot sentences).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -39,19 +37,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..kernels.extractor import extract_mentions, extract_sentence, score_pair
+from ..kernels.extractor import extract_mentions, extract_sentence
 
-MENTIONS_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("sent_id", IntegerType(), False),
-        StructField("ent_type", StringType(), False),
-        StructField("start", IntegerType(), False),
-        StructField("end", IntegerType(), False),
-        StructField("surface", StringType(), False),
-    ]
-)
-
+# the row shape every plugin extractor (casrel, usm, registered
+# mechanisms) emits; plane_triples projects to the same columns
 TRIPLES_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
@@ -67,28 +56,6 @@ TRIPLES_SCHEMA = StructType(
         StructField("score", FloatType(), False),
     ]
 )
-
-
-def detect_mentions(sentences: DataFrame) -> DataFrame:
-    """sentences -> one row per typed entity span (W1/M4 role)."""
-
-    def mention_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: List[tuple] = []
-            for url, sid, tokens in zip(pdf["url"], pdf["sent_id"], pdf["tokens"]):
-                for surface, etype, s, e in extract_mentions(list(tokens)):
-                    rows.append((url, sid, etype, s, e, surface))
-            yield pd.DataFrame(
-                rows, columns=["url", "sent_id", "ent_type", "start", "end", "surface"]
-            ).astype(
-                {"sent_id": "int32", "start": "int32", "end": "int32"}
-                if rows
-                else {}
-            )
-
-    return sentences.select("url", "sent_id", "tokens").mapInPandas(
-        mention_batches, schema=MENTIONS_SCHEMA
-    )
 
 
 def filter_valid_mentions(
@@ -171,96 +138,6 @@ def candidate_pairs(
     return pairs
 
 
-def score_pairs(pairs: DataFrame, sentences: DataFrame) -> DataFrame:
-    """M1 role: per-pair relation scores via the deterministic kernel.
-
-    Joins pair rows back to sentence tokens (broadcast is wrong here —
-    both sides are big — so this is a co-partitioned shuffle join on
-    the sentence key), then scores in Arrow batches and thresholds
-    (T3) + dedups keep-best per (url, sent_id, subj, pred, obj).
-    """
-    withtok = pairs.join(
-        sentences.select("url", "warc_ts", "sent_id", "tokens"), ["url", "sent_id"]
-    )
-
-    def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: List[tuple] = []
-            for url, wts, sid, head, tail, tokens in zip(
-                pdf["url"], pdf["warc_ts"], pdf["sent_id"],
-                pdf["head"], pdf["tail"], pdf["tokens"],
-            ):
-                toks = list(tokens)
-                h = (head["surface"], head["ent_type"], head["start"], head["end"])
-                t = (tail["surface"], tail["ent_type"], tail["start"], tail["end"])
-                scored = score_pair(toks, h, t)
-                if scored is None:
-                    continue
-                rel, sc = scored
-                rows.append(
-                    (url, wts, sid, h[0], rel, t[0], h[2], h[3], t[2], t[3], sc)
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "warc_ts", "sent_id", "subj", "pred", "obj",
-                    "h_start", "h_end", "t_start", "t_end", "score",
-                ],
-            )
-            if rows:
-                out = out.astype(
-                    {
-                        "sent_id": "int32", "h_start": "int32", "h_end": "int32",
-                        "t_start": "int32", "t_end": "int32", "score": "float32",
-                    }
-                )
-            yield out
-
-    scored = withtok.mapInPandas(score_batches, schema=TRIPLES_SCHEMA)
-    return dedup_keep_best(scored, ["url", "sent_id", "subj", "pred", "obj"])
-
-
-def extract_triples_fused(
-    sentences: DataFrame, max_pairs_per_sentence: int | None = 400
-) -> DataFrame:
-    """Fused sentences -> scored triples (shuffle-free production path).
-
-    Shares extract_sentence's pair-cap contract with extract_plane:
-    over-cap sentences take the exact gap-banded linear path (never
-    dropped, identical output); pass None for the reference-exact
-    quadratic kernel."""
-
-    def triple_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: List[tuple] = []
-            for url, wts, sid, tokens in zip(
-                pdf["url"], pdf["warc_ts"], pdf["sent_id"], pdf["tokens"]
-            ):
-                for subj, rel, obj, hs, he, ts, te, sc in extract_sentence(
-                    list(tokens), max_pairs=max_pairs_per_sentence
-                ):
-                    rows.append((url, wts, sid, subj, rel, obj, hs, he, ts, te, sc))
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "warc_ts", "sent_id", "subj", "pred", "obj",
-                    "h_start", "h_end", "t_start", "t_end", "score",
-                ],
-            )
-            if rows:
-                out = out.astype(
-                    {
-                        "sent_id": "int32", "h_start": "int32", "h_end": "int32",
-                        "t_start": "int32", "t_end": "int32", "score": "float32",
-                    }
-                )
-            yield out
-
-    return sentences.select("url", "warc_ts", "sent_id", "tokens").mapInPandas(
-        triple_batches, schema=TRIPLES_SCHEMA
-    )
-
-
 # Mentions and triples travel as PARALLEL PRIMITIVE ARRAYS, not
 # array<struct>: pyarrow converts list<string>/list<int> columns on a
 # C fast path, while list-of-dict struct columns fall back to per-
@@ -308,14 +185,14 @@ def extract_plane(
     inside the crossing) or a docs table carrying ``clean_text`` (e.g.
     doc-filtered docs, read as is).
 
-    The composable stages (clean_pages -> segment_sentences ->
-    detect_mentions / extract_triples_fused) each pay a full
-    JVM->Arrow->pandas->Arrow->JVM round trip over the whole text
-    plane; at benchmark scale those crossings dominate the actual
-    kernel CPU.  This operator runs the same kernels back to back
-    inside one mapInPandas and leaves the fan-out to JVM-side
-    ``explode`` (plane_mentions / plane_triples), which is narrow and
-    cheap.  Output is pinned identical to the composable path by
+    A chain of one stage per step (strip -> segment -> mentions ->
+    triples) would pay a full JVM->Arrow->Python->Arrow->JVM round trip
+    per step over the whole text plane; at benchmark scale those
+    crossings dominate the actual kernel CPU.  This operator runs the
+    kernels back to back inside one mapInArrow and leaves the fan-out
+    to JVM-side ``explode`` (plane_mentions / plane_triples), which is
+    narrow and cheap.  Output is pinned identical to the in-process
+    kernel (extract_document / extract_mentions) by
     tests/test_pipeline_e2e.py.
 
     ``max_pairs_per_sentence`` bounds the kernel's quadratic pair loop
@@ -325,8 +202,7 @@ def extract_plane(
     the exact gap-banded linear path (extract_sentence_banded — output
     provably identical to the uncapped kernel) and emit with
     ``t_capped`` true so downstream lineage can still count them (P9
-    contract).  extract_triples_fused shares the same kernel call, so
-    both recover identically by construction.
+    contract).
     """
     import pyarrow as pa
 
@@ -479,17 +355,6 @@ def plane_triples(plane: DataFrame) -> DataFrame:
         F.col("t.t_te").alias("t_end"),
         F.col("t.t_score").alias("score"),
     )
-
-
-def dedup_keep_best(triples: DataFrame, keys: List[str]) -> DataFrame:
-    """Keep the highest-scoring row per key (the one window op we add
-    beyond the reference, SURVEY.md §2.5): max_by over a groupBy — no
-    full sort, map-side partial aggregation, skew-safe under AQE."""
-    others = [c for c in triples.columns if c not in keys]
-    agg = triples.groupBy(*keys).agg(
-        F.max_by(F.struct(*others), F.col("score")).alias("_best")
-    )
-    return agg.select(*keys, *[F.col(f"_best.{c}").alias(c) for c in others])
 
 
 def document_triple_set(triples: DataFrame) -> DataFrame:

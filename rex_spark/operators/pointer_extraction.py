@@ -41,11 +41,12 @@ def pointer_decode_sentence(
     """One sentence -> scored triples via the two-stage pointer decode.
 
     Returns rows shaped like kernels.extractor.extract_sentence.
-    ``max_pairs`` is the same whole-sentence pathological-pair cap as
-    every other extraction mechanism (candidate_pairs / extract_plane /
-    extract_triples_fused / USM): len(mentions)^2 over the cap skips
-    the sentence.  The gold replica calls this function with the same
-    default, so engine and oracle drop in lockstep.
+    ``max_pairs`` is the whole-sentence pathological-pair cap, the
+    same 400 as candidate_pairs / extract_plane / USM: len(mentions)^2
+    over the cap skips the sentence here (extract_plane instead
+    recovers it on the exact banded path).  The gold replica calls
+    this function with the same default, so engine and oracle drop in
+    lockstep.
     """
     ments = extract_mentions(tokens)
     if len(ments) < 2:
@@ -105,8 +106,11 @@ def pointer_decode_sentence(
 def casrel_extract(sentences: DataFrame) -> DataFrame:
     """sentences -> triples through the pointer-decode path (M3 slot).
 
-    Same stage interface and output schema as extract_triples_fused;
-    swap one for the other to swap extraction mechanisms.
+    ``sentences`` is ``plane_sentences`` of a plane built with text
+    (url, warc_ts, sent_id and tokens are read); the output has
+    TRIPLES_SCHEMA, the columns of ``plane_triples`` — so
+    ``run_pipeline(extractor="casrel")`` swaps it in for the plane's
+    own triples.
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -1,38 +1,31 @@
-"""Text-plane stages: pages -> docs -> sentences.
+"""Text-plane tables: the pages and docs schemas and the docs strip.
 
-Reference parity: the pages->docs strip is the F12 contract (byte-
-identical clean_text per url); docs->sentences re-expresses REx's
-sent_seg + converter tokenization (P1/P2, rex/utils/segmentation.py,
-data/NYT10/convert.py:16) as one Arrow-batched mapInPandas followed by
-a relational explode.
+``clean_pages`` is pages -> docs, the F12 contract (byte-identical
+clean_text per url): the docs table that run_pipeline returns, doc
+filters read and streaming near-dup shingles.  Sentences, mentions and triples come from
+``operators.extraction.extract_plane``, which runs the same strip
+inside its own single Arrow crossing.
 
-Scale notes:
-- html never travels past the strip stage (select/prune immediately);
-- sentence explode multiplies rows ~30x, so it happens AFTER the
-  Python stage inside the same task (no shuffle between strip and
-  segment);
-- both stages are narrow (no shuffle at all from parquet scan to
-  sentence rows).
+Scale note: html never travels past the strip (select/prune
+immediately), and the strip is narrow (no shuffle from parquet scan to
+docs).
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    IntegerType,
     StringType,
     StructField,
     StructType,
     TimestampType,
 )
 
-from ..kernels.textnorm import html_to_text, sent_seg, tokenize
+from ..kernels.textnorm import html_to_text
 
 PAGES_SCHEMA = StructType(
     [
@@ -50,17 +43,6 @@ DOCS_SCHEMA = StructType(
         StructField("warc_ts", TimestampType(), False),
         StructField("lang", StringType(), True),
         StructField("clean_text", StringType(), True),
-    ]
-)
-
-SENTENCES_SCHEMA = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), False),
-        StructField("lang", StringType(), True),
-        StructField("sent_id", IntegerType(), False),
-        StructField("sent", StringType(), True),
-        StructField("tokens", ArrayType(StringType()), True),
     ]
 )
 
@@ -88,55 +70,3 @@ def clean_pages(pages: DataFrame) -> DataFrame:
             )
 
     return src.mapInPandas(strip_batches, schema=DOCS_SCHEMA)
-
-
-def segment_sentences(docs: DataFrame) -> DataFrame:
-    """docs -> sentences: segmentation + tokenization in one narrow stage.
-
-    lang=='zh' selects zh punctuation + char tokens; everything else
-    uses en rules (extractor.extract_document parity).
-    """
-
-    def seg_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: List[str] = []
-            tss = []
-            langs: List[str] = []
-            sids: List[int] = []
-            sents: List[str] = []
-            toks: List[List[str]] = []
-            for url, ts, lang, text in zip(
-                pdf["url"], pdf["warc_ts"], pdf["lang"], pdf["clean_text"]
-            ):
-                seg_lang = "zh" if lang == "zh" else "en"
-                for sid, sent in enumerate(sent_seg(text or "", lang=seg_lang)):
-                    urls.append(url)
-                    tss.append(ts)
-                    langs.append(lang)
-                    sids.append(sid)
-                    sents.append(sent)
-                    toks.append(tokenize(sent, lang=seg_lang))
-            yield pd.DataFrame(
-                {
-                    "url": pd.Series(urls, dtype="object"),
-                    "warc_ts": pd.Series(tss, dtype="datetime64[ns]" if not tss else None),
-                    "lang": pd.Series(langs, dtype="object"),
-                    "sent_id": pd.Series(sids, dtype="int32"),
-                    "sent": pd.Series(sents, dtype="object"),
-                    "tokens": pd.Series(toks, dtype="object"),
-                }
-            )
-
-    return docs.select("url", "warc_ts", "lang", "clean_text").mapInPandas(
-        seg_batches, schema=SENTENCES_SCHEMA
-    )
-
-
-def tokenize_column(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Pure-relational tokenizer (P1) for already-clean text columns:
-    lower + whitespace split, JVM-side (used by the documents-table
-    text ops where REx converter semantics suffice)."""
-    return df.withColumn(
-        "tokens",
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-    )

@@ -23,9 +23,10 @@ relations from the three-way label-consistent join — so label
 cross-talk between same-relation triples in one sentence reproduces
 the reference's behavior rather than "fixing" it.
 
-Scale shape: the whole thing is one mapInPandas over sentence rows —
-the text plane stays narrow (no shuffle); downstream dedup/graph ops
-own the shuffles, exactly like the fused and CasRel extractors.
+Scale shape: the whole thing is one mapInPandas over the plane's
+sentence rows — the text plane stays narrow (no shuffle); downstream
+dedup/graph ops own the shuffles, exactly like the fused plane and
+the CasRel extractor.
 Agreement with the fused pair-scorer path is pinned at P/R >= 0.95 by
 tests (the pointer algebra can merge/cross spans the pair scorer keeps
 distinct, a known property of pointer unification).
@@ -238,7 +239,7 @@ def usm_sentence_scored(
 
 def usm_extract(sentences: DataFrame) -> DataFrame:
     """sentences -> (url, sent_id, subj, pred, obj, spans) via the USM
-    slot — same stage interface as the fused / CasRel extractors."""
+    slot — plane_sentences rows in, like casrel_extract."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

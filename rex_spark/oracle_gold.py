@@ -98,9 +98,9 @@ def _kg_scalar_run(n_pages: int = KG_PAGES, seed: int = KG_SEED):
     for p in pages:
         clean = html_to_text(p["html"])
         # max_pairs=400: the SAME pair-cap contract as the engine's
-        # production paths (extract_plane / extract_triples_fused
-        # defaults) — over-cap sentences take the exact banded path on
-        # both sides, in lockstep by construction (same kernel call).
+        # text plane (extract_plane's default) — over-cap sentences
+        # take the exact banded path on both sides, in lockstep by
+        # construction (same kernel call).
         # The deterministic corpus never reaches the cap anyway
         # (pinned by tests/test_drop_metrics.py::
         # test_corpus_never_hits_pair_cap), so this stays
@@ -124,23 +124,78 @@ def _kg_scalar_run(n_pages: int = KG_PAGES, seed: int = KG_SEED):
 
 
 def _canonicalize_py(freq: Counter) -> Dict[str, int]:
-    """surface -> component id via the driver-escape edge builder +
-    union-find (operators/canonical.py), with locally assigned node
-    ids — the component PARTITION is id-choice invariant."""
-    from .operators.canonical import _driver_similarity_edges, _driver_union_find
+    """surface -> component id, built source-side: the three edge
+    sources operators/canonical.py unions (KB alias groups, equal
+    normalized forms, MinHash-LSH banding over char-3-gram shingles
+    verified by exact Jaccard) rebuilt here from the gazetteer,
+    normalize_surface_py and the batch hashing kernels, then one
+    union-find.  Only canonical's parameters are shared.  Node ids are
+    local (sorted surface order) — the component PARTITION is id-choice
+    invariant."""
+    from .kernels import kb
+    from .kernels.hashing import (
+        band_keys_batch,
+        minhash_params,
+        minhash_signatures_batch,
+    )
+    from .kernels.textnorm import char_shingles
+    from .operators.canonical import (
+        JACCARD_THRESHOLD,
+        MAX_BUCKET,
+        NUM_BANDS,
+        NUM_PERM,
+    )
 
     surfaces = sorted(freq)
-    rows = [
-        {
-            "surface": s,
-            "freq": freq[s],
-            "node_id": i,
-            "norm": normalize_surface_py(s),
-        }
-        for i, s in enumerate(surfaces)
-    ]
-    comp = dict(_driver_union_find(sorted(_driver_similarity_edges(rows))))
-    return {s: comp.get(i, i) for i, s in enumerate(surfaces)}
+    node = {s: i for i, s in enumerate(surfaces)}
+    parent = list(range(len(surfaces)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    def union(ids) -> None:
+        roots = [find(i) for i in ids]
+        for r in roots:
+            parent[r] = min(roots)
+
+    groups: Dict[object, List[int]] = {}
+    # a KB alias mentions as its gazetteer token tuple joined by spaces
+    for bucket in kb.gazetteer().values():
+        for toks, _etype, canonical in bucket:
+            surface = " ".join(toks)
+            if surface in node:
+                groups.setdefault(("kb", canonical), []).append(node[surface])
+    norms = [normalize_surface_py(s) for s in surfaces]
+    for i, norm in enumerate(norms):
+        groups.setdefault(("norm", norm), []).append(i)
+    for ids in groups.values():
+        union(ids)
+
+    shingles = [set(char_shingles(norm, 3)) for norm in norms]
+    keep = [i for i, sh in enumerate(shingles) if sh]
+    keys = band_keys_batch(
+        minhash_signatures_batch(
+            [sorted(shingles[i]) for i in keep], minhash_params(NUM_PERM)
+        ),
+        NUM_BANDS,
+    )
+    buckets: Dict[tuple, List[int]] = {}
+    for row, i in enumerate(keep):
+        for band_id, key in enumerate(keys[row].tolist()):
+            buckets.setdefault((band_id, key), []).append(i)
+    for ids in buckets.values():
+        if len(ids) > MAX_BUCKET:
+            continue
+        for x, a in enumerate(ids):
+            for b in ids[x + 1:]:
+                inter = len(shingles[a] & shingles[b])
+                union_size = len(shingles[a]) + len(shingles[b]) - inter
+                if inter / union_size >= JACCARD_THRESHOLD:
+                    union((a, b))
+    return {s: find(i) for i, s in enumerate(surfaces)}
 
 
 def ensure_kg_gold() -> Dict[str, str]:

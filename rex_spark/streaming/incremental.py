@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extraction import document_triple_set, extract_plane, plane_triples
-from ..operators.textplane import PAGES_SCHEMA, clean_pages, segment_sentences
+from ..operators.textplane import PAGES_SCHEMA, clean_pages
 
 
 def stream_pages(
@@ -385,6 +385,11 @@ def running_surface_state(
     batch graph plane's surface_nodes frequency table, and the state a
     continuously-updating entity canonicalizer reads.
 
+    Mentions come from the batch text plane: ``extract_plane`` without
+    sentence text (one Arrow crossing per micro-batch) and a JVM
+    explode of its ``m_surface`` array, so the streamed surfaces are
+    the batch pipeline's by construction.
+
     The reference has no streaming analog (its datasets are static);
     this is the Spark-native design: per-key state lives in the state
     store (checkpointed, restart-safe), each micro-batch's mention rows
@@ -397,23 +402,10 @@ def running_surface_state(
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    from ..kernels.extractor import extract_mentions
-
-    sentences = segment_sentences(clean_pages(pages_stream))
-
-    def mention_batches(batches):
-        for pdf in batches:
-            rows = []
-            for url, wts, tokens in zip(
-                pdf["url"], pdf["warc_ts"], pdf["tokens"]
-            ):
-                us = int(pd.Timestamp(wts).value // 1000)
-                for surface, _et, _s, _e in extract_mentions(list(tokens)):
-                    rows.append((surface, url, us))
-            yield pd.DataFrame(rows, columns=["surface", "url", "warc_us"])
-
-    mentions = sentences.select("url", "warc_ts", "tokens").mapInPandas(
-        mention_batches, schema="surface string, url string, warc_us long"
+    mentions = extract_plane(pages_stream, include_text=False).select(
+        F.explode("m_surface").alias("surface"),
+        "url",
+        F.unix_micros("warc_ts").alias("warc_us"),
     )
 
     out_schema = (

@@ -3,8 +3,9 @@
 The sample emits a ``cooccurs_with`` triple for every pair of ADJACENT
 content words (alphabetic, length >= 4 — the tokenizer lowercases, so
 don't key on capitalization) — deliberately trivial, but shaped
-exactly like a real mechanism: sentence rows in
-(``rex_spark.operators.textplane.SENTENCES_SCHEMA``), triple rows out
+exactly like a real mechanism: sentence rows in (the columns of
+``rex_spark.operators.extraction.plane_sentences``: url, warc_ts, lang,
+sent_id, sent, tokens), triple rows out
 (``rex_spark.operators.extraction.TRIPLES_SCHEMA``).
 
 It is written as pure DataFrame expressions, so it runs JVM-side under

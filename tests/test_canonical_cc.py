@@ -77,12 +77,11 @@ def test_driver_canonicalization_matches_distributed(spark):
     """The driver-side small-vocabulary canonicalization (same kernels,
     same banding) must produce exactly the distributed path's labels."""
     from rex_spark.operators.canonical import canonicalize_surfaces
-    from rex_spark.operators.extraction import detect_mentions
-    from rex_spark.operators.textplane import clean_pages, segment_sentences
+    from rex_spark.operators.extraction import extract_plane, plane_mentions
     from rex_spark.pipeline import build_pages_df
 
-    mentions = detect_mentions(
-        segment_sentences(clean_pages(build_pages_df(spark, 100, seed=42)))
+    mentions = plane_mentions(
+        extract_plane(build_pages_df(spark, 100, seed=42), include_text=False)
     )
     drv = canonicalize_surfaces(spark, mentions)
     dist = canonicalize_surfaces(spark, mentions, driver_max_surfaces=0)

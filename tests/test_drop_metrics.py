@@ -75,15 +75,10 @@ def test_fused_plane_caps_pathological_sentences_in_lockstep(spark):
 
     from rex_spark.operators.extraction import (
         candidate_pairs,
-        detect_mentions,
         extract_plane,
         plane_mentions,
     )
-    from rex_spark.operators.textplane import (
-        PAGES_SCHEMA,
-        clean_pages,
-        segment_sentences,
-    )
+    from rex_spark.operators.textplane import PAGES_SCHEMA
 
     bomb = "acme corp " * 21  # 21 mentions -> 441 pairs > 400 cap
     ts = datetime.datetime(2024, 1, 1)
@@ -110,13 +105,12 @@ def test_fused_plane_caps_pathological_sentences_in_lockstep(spark):
     assert plane.where(~F.col("t_capped") & (F.size("t_subj") > 0)).count() == 1
     # mention fan-out unaffected by the cap
     assert plane_mentions(plane).where(F.col("url") == "u1").count() == 21
-    plane.unpersist()
 
     # the pair-level composable surface still drops the same sentence
-    ments = detect_mentions(segment_sentences(clean_pages(pages)))
-    pairs = candidate_pairs(ments, max_pairs_per_sentence=400)
+    pairs = candidate_pairs(plane_mentions(plane), max_pairs_per_sentence=400)
     assert pairs.where(F.col("url") == "u1").count() == 0
     assert pairs.where(F.col("url") == "u2").count() > 0
+    plane.unpersist()
 
     # cap off -> reference-exact (sentence scored, quadratic and all)
     uncapped = extract_plane(pages, max_pairs_per_sentence=None)
@@ -127,24 +121,16 @@ def test_fused_plane_caps_pathological_sentences_in_lockstep(spark):
 def test_overcap_document_recovers_uncapped_triples(spark):
     """VERDICT r3 #6: a planted document whose single long sentence
     blows the pair cap (3,600 pairs > 400) yields EXACTLY the uncapped
-    in-process kernel's triple set through both production planes —
-    long documents no longer silently truncate pair coverage."""
+    in-process kernel's triple set through the text plane — long
+    documents no longer silently truncate pair coverage."""
     import datetime
 
     from pyspark.sql import functions as F
 
     from rex_spark.kernels.extractor import extract_sentence
     from rex_spark.kernels.textnorm import tokenize
-    from rex_spark.operators.extraction import (
-        extract_plane,
-        extract_triples_fused,
-        plane_triples,
-    )
-    from rex_spark.operators.textplane import (
-        PAGES_SCHEMA,
-        clean_pages,
-        segment_sentences,
-    )
+    from rex_spark.operators.extraction import extract_plane, plane_triples
+    from rex_spark.operators.textplane import PAGES_SCHEMA
 
     frags = [
         "alice johnson works for globex",
@@ -182,11 +168,6 @@ def test_overcap_document_recovers_uncapped_triples(spark):
     got_fused = got(plane_triples(plane))
     plane.unpersist()
     assert got_fused == want
-
-    got_store = got(
-        extract_triples_fused(segment_sentences(clean_pages(pages)))
-    )
-    assert got_store == want
 
 
 def test_banded_equals_quadratic_property():

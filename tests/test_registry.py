@@ -46,24 +46,25 @@ def test_get_unknown_raises_with_known_names():
 
 def test_custom_extractor_through_pipeline(spark):
     """A user-registered mechanism runs through run_pipeline exactly
-    like the built-ins (same composable stages, graph plane intact)."""
+    like the built-ins (same stage interface, graph plane intact)."""
 
-    @register("extractor", name="fused_again")
-    def fused_again(sentences):
-        from rex_spark.operators.extraction import extract_triples_fused
+    @register("extractor", name="casrel_again")
+    def casrel_again(sentences):
+        from rex_spark.operators.pointer_extraction import casrel_extract
 
-        return extract_triples_fused(sentences)
+        return casrel_extract(sentences)
 
     try:
         pages = build_pages_df(spark, 40, seed=42)
-        r = run_pipeline(spark, pages, store=None, extractor="fused_again")
-        base = run_pipeline(spark, pages, store=None)
+        r = run_pipeline(spark, pages, store=None, extractor="casrel_again")
+        base = run_pipeline(spark, pages, store=None, extractor="casrel")
         key = ["url", "subj", "pred", "obj"]
         got = {tuple(x) for x in r["triple_set"].select(*key).collect()}
         want = {tuple(x) for x in base["triple_set"].select(*key).collect()}
         assert got == want and got
+        assert r["edges"].count() == base["edges"].count() > 0
     finally:
-        NAMESPACE_REGISTRY["extractor"].pop("fused_again", None)
+        NAMESPACE_REGISTRY["extractor"].pop("casrel_again", None)
 
     with pytest.raises(ValueError, match="unknown extractor"):
-        run_pipeline(spark, pages, store=None, extractor="fused_again")
+        run_pipeline(spark, pages, store=None, extractor="casrel_again")

@@ -150,12 +150,12 @@ def test_extractor_stages_do_not_cross_resume(spark, pages, tmp_path):
     assert os.path.exists(os.path.join(root, "edges_casrel", "_STAGE_COMMITTED"))
     key = ["url", "subj", "pred", "obj"]
     cas_set = {tuple(r) for r in r_cas["triple_set"].select(*key).collect()}
+    from rex_spark.operators.extraction import extract_plane, plane_sentences
     from rex_spark.operators.pointer_extraction import casrel_extract
-    from rex_spark.operators.textplane import clean_pages, segment_sentences
 
     want = {
         tuple(r)
-        for r in casrel_extract(segment_sentences(clean_pages(pages)))
+        for r in casrel_extract(plane_sentences(extract_plane(pages)))
         .select(*key)
         .distinct()
         .collect()

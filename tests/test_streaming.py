@@ -1,14 +1,21 @@
 """Structured Streaming incremental ingest: the streamed triple set
-must equal the batch pipeline's on the same pages, across multiple
-micro-batches, and restart must not duplicate output."""
+must equal the in-process reference extractor's on the same pages,
+across multiple micro-batches, and restart must not duplicate output."""
 
 import glob
 import os
+from collections import Counter
 
 import pytest
 
-from rex_spark.operators.extraction import document_triple_set, extract_triples_fused
-from rex_spark.operators.textplane import clean_pages, segment_sentences
+from rex_spark.kernels.extractor import (
+    document_triples,
+    extract_document,
+    extract_mentions,
+)
+from rex_spark.kernels.synth import make_pages
+from rex_spark.kernels.textnorm import html_to_text
+from rex_spark.operators.textplane import clean_pages
 from rex_spark.pipeline import build_pages_df
 from rex_spark.streaming import (
     incremental_triples,
@@ -54,15 +61,14 @@ def test_stream_matches_batch(spark, pages_dir, tmp_path):
     streamed = spark.read.parquet(out)
     assert streamed.select("batch_id").distinct().count() >= 2  # micro-batched
 
-    batch = document_triple_set(
-        extract_triples_fused(
-            segment_sentences(clean_pages(build_pages_df(spark, N_PAGES, seed=42)))
-        )
-    )
+    want = {
+        (p["url"], *t)
+        for p in make_pages(N_PAGES, seed=42)[0]
+        for t in document_triples(html_to_text(p["html"]), p["lang"])
+    }
     cols = ["url", "subj", "pred", "obj"]
     s = {tuple(r) for r in streamed.select(*cols).collect()}
-    b = {tuple(r) for r in batch.select(*cols).collect()}
-    assert s == b
+    assert want and s == want
 
     # restart with the same checkpoint: nothing new to process, no dupes
     q2 = incremental_triples(stream_pages(spark, pages_dir), out, ckpt)
@@ -259,10 +265,6 @@ def test_running_surface_state(spark, pages_dir, tmp_path):
     surface frequency table across micro-batches (outputMode update
     emits one row per touched key per batch; the last row per key is
     the final state)."""
-    from pyspark.sql import functions as F
-
-    from rex_spark.operators.extraction import detect_mentions
-
     q = (
         running_surface_state(
             stream_pages(spark, pages_dir, max_files_per_trigger=1)
@@ -287,19 +289,40 @@ def test_running_surface_state(spark, pages_dir, tmp_path):
     }
     assert got, "stateful op emitted nothing"
 
-    batch_mentions = detect_mentions(
-        segment_sentences(clean_pages(build_pages_df(spark, N_PAGES, seed=42)))
-    )
-    want = {
-        r["surface"]: (r["n"], r["n_docs"])
-        for r in batch_mentions.groupBy("surface")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("url").alias("n_docs"),
-        )
-        .collect()
-    }
+    n_mentions, urls = Counter(), {}
+    for p in make_pages(N_PAGES, seed=42)[0]:
+        for _sid, _sent, toks, _triples in extract_document(
+            html_to_text(p["html"]), p["lang"]
+        ):
+            for surface, _etype, _start, _end in extract_mentions(toks):
+                n_mentions[surface] += 1
+                urls.setdefault(surface, set()).add(p["url"])
+    want = {s: (n, len(urls[s])) for s, n in n_mentions.items()}
     assert got == want
+
+
+def test_running_surface_state_plan_is_one_arrow_crossing(
+    spark, pages_dir, tmp_path
+):
+    """The surface state reads the batch text plane: each micro-batch
+    runs exactly one Python crossing (extract_plane's MapInArrow) before
+    the stateful fold, and no mapInPandas stages."""
+    import re
+
+    q = (
+        running_surface_state(stream_pages(spark, pages_dir))
+        .writeStream.format("memory")
+        .queryName("surface_state_plan")
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / "ckpt_plan"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    _drain(q)
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    assert len(re.findall(r"\bMapInArrow\b", plan)) == 1, plan
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 0, plan
+    assert len(re.findall(r"\bFlatMapGroupsInPandasWithState\b", plan)) == 1, plan
 
 
 def test_windowed_counts(spark, pages_dir, tmp_path):

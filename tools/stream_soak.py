@@ -131,13 +131,13 @@ def main() -> None:
     # batch parity on the identical full corpus
     from rex_spark.operators.extraction import (
         document_triple_set,
-        extract_triples_fused,
+        extract_plane,
+        plane_triples,
     )
-    from rex_spark.operators.textplane import clean_pages, segment_sentences
 
     all_pages = build_pages_df_distributed(spark, per_wave * n_waves, seed=42)
     batch = document_triple_set(
-        extract_triples_fused(segment_sentences(clean_pages(all_pages)))
+        plane_triples(extract_plane(all_pages, include_text=False))
     )
     key = ["url", "subj", "pred", "obj"]
     streamed = spark.read.parquet(output_dir).select(*key).distinct()
@@ -161,9 +161,9 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from rex_spark.operators.dedup import minhash_lsh_pairs
-    from rex_spark.operators.textplane import clean_pages as _cp
+    from rex_spark.operators.textplane import clean_pages
 
-    docs_all = _cp(all_pages).select(
+    docs_all = clean_pages(all_pages).select(
         F.xxhash64("url").alias("doc_id"), F.col("clean_text").alias("text")
     )
     batch_pairs = minhash_lsh_pairs(docs_all, threshold=0.5)
