@@ -886,10 +886,10 @@ def q_kg_usm(spark, sf):
     decodes entities AND relation triples.  Cached like the other
     extractor paths — one execution per session."""
     def build():
-        from rex_spark.operators.usm import usm_extract
+        from rex_spark.operators.usm import usm_extract_scored
 
         return (
-            usm_extract(_shared_sentences(spark))
+            usm_extract_scored(_shared_sentences(spark))
             .select("url", "subj", "pred", "obj")
             .distinct()
             .localCheckpoint(eager=False)

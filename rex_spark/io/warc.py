@@ -164,6 +164,47 @@ def parse_warc(payload: bytes) -> List[Tuple[str, dt.datetime, bytes]]:
     return list(iter_warc(payload))
 
 
+def expand_warc_records(files, schema, corrupt: str):
+    """binaryFile rows -> one ``schema`` row per WARC response record:
+    (url, warc_ts, html), then null for every further field of
+    ``schema``.  Records stream out of iter_warc and leave in bounded
+    frames, so a 1 GB crawl file never becomes one pandas frame.
+
+    ``corrupt``: ``"fail"`` — a bad byte fails the task — or
+    ``"skip"`` — keep every record parsed before the first bad byte of
+    a file and drop the rest of THAT file only (the fuzz gate pins
+    that parse errors are always ValueError, so "skip" can't mask a
+    programming bug)."""
+    import pandas as pd
+
+    names = [f.name for f in schema.fields]
+    pad = (None,) * (len(names) - 3)
+
+    def expand(batches):
+        CHUNK_ROWS = 2048
+        rows = []
+        for pdf in batches:
+            for content in pdf["content"]:
+                it = iter_warc(bytes(content))
+                while True:
+                    try:
+                        row = next(it)
+                    except StopIteration:
+                        break
+                    except ValueError:
+                        if corrupt == "fail":
+                            raise
+                        break  # rest of this file; prior records kept
+                    rows.append(row + pad)
+                    if len(rows) >= CHUNK_ROWS:
+                        yield pd.DataFrame(rows, columns=names)
+                        rows = []
+        if rows:
+            yield pd.DataFrame(rows, columns=names)
+
+    return files.select("content").mapInPandas(expand, schema=schema)
+
+
 def read_warc(spark, path: str, corrupt: str = "fail"):
     """Directory (or glob) of *.warc / *.warc.gz files -> DataFrame
     (url, warc_ts, html).  One input task per FILE (binaryFile
@@ -171,15 +212,11 @@ def read_warc(spark, path: str, corrupt: str = "fail"):
     parallelism knob is the file count — exactly the Common-Crawl
     layout's contract.  html carries the HTTP response body bytes.
 
-    ``corrupt``: ``"fail"`` (default, strict — a bad byte fails the
-    task) or ``"skip"`` — keep every record parsed before the first
-    bad byte of a file and drop the rest of THAT file only; at crawl
-    scale some files WILL be truncated and one of them must not kill
-    a 100 TB ingest (the fuzz gate pins that parse errors are always
-    ValueError, so "skip" can't mask a programming bug)."""
+    ``corrupt``: ``"fail"`` (default, strict) or ``"skip"`` (see
+    expand_warc_records) — at crawl scale some files WILL be truncated
+    and one of them must not kill a 100 TB ingest."""
     if corrupt not in ("fail", "skip"):
         raise ValueError(f"corrupt must be 'fail' or 'skip', got {corrupt!r}")
-    import pandas as pd
     from pyspark.sql.types import (
         BinaryType,
         StringType,
@@ -195,33 +232,5 @@ def read_warc(spark, path: str, corrupt: str = "fail"):
             StructField("html", BinaryType(), False),
         ]
     )
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def expand(batches):
-        # bounded output frames: a 1 GB crawl file must never become
-        # ONE pandas frame (records stream out of iter_warc; only
-        # CHUNK_ROWS rows are materialized at a time)
-        CHUNK_ROWS = 2048
-        rows = []
-        for pdf in batches:
-            for content in pdf["content"]:
-                it = iter_warc(bytes(content))
-                while True:
-                    try:
-                        row = next(it)
-                    except StopIteration:
-                        break
-                    except ValueError:
-                        if corrupt == "fail":
-                            raise
-                        break  # rest of this file; prior records kept
-                    rows.append(row)
-                    if len(rows) >= CHUNK_ROWS:
-                        yield pd.DataFrame(
-                            rows, columns=["url", "warc_ts", "html"]
-                        )
-                        rows = []
-        if rows:
-            yield pd.DataFrame(rows, columns=["url", "warc_ts", "html"])
-
-    return files.mapInPandas(expand, schema=schema)
+    files = spark.read.format("binaryFile").load(path)
+    return expand_warc_records(files, schema, corrupt)

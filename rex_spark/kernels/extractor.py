@@ -18,6 +18,7 @@ MODEL_VERSION recorded in lineage).
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
 from typing import Dict, List, Sequence, Tuple
 
 from . import kb
@@ -75,6 +76,13 @@ def score_pair(
     return rel, round(score, 6)
 
 
+def tail_band(starts: Sequence[int], head_end: int) -> Tuple[int, int]:
+    """The [lo, hi) slice of the ascending mention ``starts`` that
+    score_pair can accept as tails of a head ending at ``head_end``:
+    exactly the starts in [head_end, head_end + _MAX_GAP]."""
+    return bisect_left(starts, head_end), bisect_right(starts, head_end + _MAX_GAP)
+
+
 def _score_into(
     best: Dict[Tuple[str, str, str], ScoredTriple],
     tokens: Sequence[str],
@@ -121,15 +129,12 @@ def extract_sentence_banded(
     locality exact, with no window-margin approximation and no span
     re-anchoring.
     """
-    from bisect import bisect_left, bisect_right
-
     if mentions is None:
         mentions = extract_mentions(tokens)
     best: Dict[Tuple[str, str, str], ScoredTriple] = {}
     starts = [m[2] for m in mentions]  # ascending by construction
     for head in mentions:
-        lo = bisect_left(starts, head[3])
-        hi = bisect_right(starts, head[3] + _MAX_GAP)
+        lo, hi = tail_band(starts, head[3])
         for tail in mentions[lo:hi]:
             _score_into(best, tokens, head, tail)
     return sorted(best.values())

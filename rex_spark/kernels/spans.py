@@ -14,12 +14,12 @@ from bisect import bisect_left, bisect_right
 from typing import Iterable, List, Sequence, Tuple
 
 
-def find_closest_span_pairs(
-    head: Sequence[int], tail: Sequence[int], backtrace: bool = True
+def closest_span_pairs(
+    heads: Sequence[int], tails: Sequence[int], backtrace: bool = True
 ) -> List[Tuple[int, int]]:
-    """Pair 0/1 head-pointer and tail-pointer vectors into (start, end) spans."""
-    heads = [i for i, v in enumerate(head) if v == 1]
-    tails = [i for i, v in enumerate(tail) if v == 1]
+    """Pair sorted, distinct head and tail positions into (start, end)
+    spans — the position-list core of find_closest_span_pairs, at
+    O((heads + tails) log tails) whatever the sequence length."""
     used = dict.fromkeys(tails, False)
 
     pairs: List[Tuple[int, int]] = []
@@ -37,6 +37,17 @@ def find_closest_span_pairs(
                 if j > 0:
                     pairs.append((heads[j - 1], t))
     return pairs
+
+
+def find_closest_span_pairs(
+    head: Sequence[int], tail: Sequence[int], backtrace: bool = True
+) -> List[Tuple[int, int]]:
+    """Pair 0/1 head-pointer and tail-pointer vectors into (start, end) spans."""
+    return closest_span_pairs(
+        [i for i, v in enumerate(head) if v == 1],
+        [i for i, v in enumerate(tail) if v == 1],
+        backtrace,
+    )
 
 
 def find_closest_span_pairs_with_index(

@@ -8,6 +8,9 @@ leave the executor, so the whole text->triple path is shuffle-free.
 It is the only Spark-side caller of the sentence extractor
 (``extract_sentence``); its reference is the in-process kernel itself
 (kernels/extractor.py), which the tests compare it with row for row.
+``decode_sentences`` is the one Arrow crossing every per-sentence model
+slot (casrel, usm, scaffolded mechanisms) runs over the plane's
+sentence rows.
 
 ``candidate_pairs`` and ``filter_valid_mentions`` are the pair-level
 query surfaces over a mentions table (REx exposes the same
@@ -21,7 +24,7 @@ in-partition via explode, rather than self-joining the mentions table
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterable, Iterator, List, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -303,6 +306,68 @@ def extract_plane(
             F.timestamp_micros("warc_us").alias("warc_ts") if n == "warc_us" else n
             for n in names
         ]
+    )
+
+
+def decode_sentences(
+    sentences: DataFrame,
+    decode: Callable[[List[str]], Iterable[tuple]],
+    fields: Sequence[StructField],
+) -> DataFrame:
+    """sentence rows -> ``(url, warc_ts, sent_id, *row)`` for every
+    ``row`` of ``decode(tokens)``, in ONE Arrow crossing: the Spark
+    side of a per-sentence model slot (casrel, usm, a scaffolded
+    mechanism).
+
+    ``sentences`` carries url, warc_ts, sent_id and tokens (the
+    columns of ``plane_sentences`` of a plane built with text);
+    ``decode`` is called once per sentence with its token list and
+    returns rows shaped like ``fields``.  warc_ts crosses as epoch
+    micros, as in extract_plane.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType(
+        [
+            StructField("url", StringType(), False),
+            StructField("warc_us", LongType(), True),
+            StructField("sent_id", IntegerType(), False),
+            *fields,
+        ]
+    )
+    out_schema = to_arrow_schema(schema)
+
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in it:
+            src, rows = [], []
+            # to_pandas + tolist: several times faster than
+            # ListArray.to_pylist for the token lists
+            for i, toks in enumerate(rb.column(3).to_pandas()):
+                for row in decode(toks.tolist()):
+                    src.append(i)
+                    rows.append(row)
+            # the key columns never become Python objects: each output
+            # row takes them from its sentence's input row
+            take = pa.array(src, type=pa.int32())
+            cols = list(zip(*rows)) or [()] * len(fields)
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(k).take(take) for k in range(3)]
+                + [pa.array(c, type=f.type) for c, f in zip(cols, list(out_schema)[3:])],
+                schema=out_schema,
+            )
+
+    return (
+        sentences.select(
+            "url", F.unix_micros("warc_ts").alias("warc_us"), "sent_id", "tokens"
+        )
+        .mapInArrow(batches, schema=schema)
+        .select(
+            "url",
+            F.timestamp_micros("warc_us").alias("warc_ts"),
+            "sent_id",
+            *[f.name for f in fields],
+        )
     )
 
 

@@ -2,19 +2,24 @@
 
 Re-expresses the decode path of the reference's CasRel joint extractor
 (rex/models/casrel.py:115-188 + rex/modules/span.py:99-146): stage 1
-decodes SUBJECT spans from head/tail pointer vectors via
-closest-span pairing (rex/utils/span.py:8-52 semantics, kernel
-kernels/spans.py); stage 2, conditioned on each subject, decodes
-per-relation OBJECT pointer vectors into spans and emits triples.
+decodes SUBJECT spans from head/tail pointers via closest-span pairing
+(rex/utils/span.py:8-52 semantics, kernel kernels/spans.py); stage 2,
+conditioned on each subject, decodes per-relation OBJECT pointers into
+spans and emits triples.
 
-The pointer vectors here come from a deterministic stand-in "tagger"
-(the gazetteer + pattern scorer that plays the role of the trained
-model everywhere in this repo); a real CasRel checkpoint would produce
-them from sigmoids and thresholding (rex/modules/span.py:112-115) with
-eval batch size 1 — which maps to the per-sentence loop inside the
-Arrow batch, NOT to one-row batches (the reference's constraint,
-conf/ere/casrel_webnlg.yaml eval_batch_size: 1, is an artifact of its
-tensor shapes; a UDF loops sentences inside large batches freely).
+The pointers here come from a deterministic stand-in "tagger" (the
+gazetteer + pattern scorer that plays the role of the trained model
+everywhere in this repo); a real CasRel checkpoint would produce them
+from sigmoids and thresholding (rex/modules/span.py:112-115) with eval
+batch size 1 — which maps to the per-sentence call inside the Arrow
+batch (``decode_sentences``), NOT to one-row batches (the reference's
+constraint, conf/ere/casrel_webnlg.yaml eval_batch_size: 1, is an
+artifact of its tensor shapes).
+
+Pointers are kept as sorted position lists rather than n-length 0/1
+vectors, and stage 2 scans only the objects inside the scorer's gap
+band (``tail_band``), so every sentence decodes exactly — no pair cap
+— at near-linear cost in its mentions.
 
 Pointer decoding genuinely differs from pair scoring on nested
 mentions with different end positions (the pointer representation
@@ -25,79 +30,60 @@ tests pin that bound on the synthetic corpus.
 
 from __future__ import annotations
 
-from typing import Iterator, List, Sequence, Tuple
+from typing import List, Sequence, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..kernels.extractor import extract_mentions, score_pair
-from ..kernels.spans import find_closest_span_pairs
-from .extraction import TRIPLES_SCHEMA
+from ..kernels.extractor import extract_mentions, score_pair, tail_band
+from ..kernels.spans import closest_span_pairs
+from .extraction import TRIPLES_SCHEMA, decode_sentences
 
 
-def pointer_decode_sentence(
-    tokens: Sequence[str], max_pairs: int | None = 400
-) -> List[Tuple]:
+def pointer_decode_sentence(tokens: Sequence[str]) -> List[Tuple]:
     """One sentence -> scored triples via the two-stage pointer decode.
 
-    Returns rows shaped like kernels.extractor.extract_sentence.
-    ``max_pairs`` is the whole-sentence pathological-pair cap, the
-    same 400 as candidate_pairs / extract_plane / USM: len(mentions)^2
-    over the cap skips the sentence here (extract_plane instead
-    recovers it on the exact banded path).  The gold replica calls
-    this function with the same default, so engine and oracle drop in
-    lockstep.
+    Returns rows shaped like kernels.extractor.extract_sentence.  The
+    output equals the decode over full-length 0/1 pointer vectors and
+    every (subject, object) pair (pinned by tests/test_drop_metrics.py):
+    score_pair rejects every object outside the subject's gap band, so
+    the band scan sees every object the full scan would keep, in the
+    same order.
     """
     ments = extract_mentions(tokens)
-    if len(ments) < 2:
-        return []
-    if max_pairs is not None and len(ments) * len(ments) > max_pairs:
-        return []
-    n = len(tokens)
+    starts = [m[2] for m in ments]  # ascending and distinct by construction
+    by_span = {(m[2], m[3] - 1): m for m in ments}
 
-    # stage 1: subject pointer vectors over token positions
-    subj_heads = [0] * n
-    subj_tails = [0] * n
-    for _surf, _et, s, e in ments:
-        subj_heads[s] = 1
-        subj_tails[e - 1] = 1
-    subj_spans = find_closest_span_pairs(subj_heads, subj_tails)
+    # stage 1: subject head/tail pointers
+    subj_spans = closest_span_pairs(starts, sorted({m[3] - 1 for m in ments}))
 
-    by_span = {(s, e): m for m in ments for s, e in [(m[2], m[3] - 1)]}
     out: List[Tuple] = []
-    seen = set()
     for hs, he in subj_spans:
         subj = by_span.get((hs, he))
         if subj is None:
             continue  # pointer pair not an actual mention (nested mix-up)
-        # stage 2: per-relation object pointer vectors conditioned on subj
-        rel_vecs: dict = {}
+        # stage 2: per-relation object pointers conditioned on subj
+        rel_ptrs: dict = {}
         rel_score: dict = {}
-        for obj in ments:
-            if obj[2] == subj[2] and obj[3] == subj[3]:
-                continue
+        lo, hi = tail_band(starts, subj[3])
+        for obj in ments[lo:hi]:
             scored = score_pair(tokens, subj, obj)
             if scored is None:
                 continue
             rel, sc = scored
-            h, t = rel_vecs.setdefault(rel, ([0] * n, [0] * n))
-            h[obj[2]] = 1
-            t[obj[3] - 1] = 1
+            heads, tails = rel_ptrs.setdefault(rel, ([], set()))
+            heads.append(obj[2])  # band order: ascending, distinct
+            tails.add(obj[3] - 1)
             rel_score[(rel, obj[2], obj[3] - 1)] = sc
-        for rel, (h, t) in rel_vecs.items():
-            for os_, oe in find_closest_span_pairs(h, t):
+        for rel, (heads, tails) in rel_ptrs.items():
+            for os_, oe in closest_span_pairs(heads, sorted(tails)):
                 obj = by_span.get((os_, oe))
                 if obj is None:
                     continue
-                sc = rel_score.get((rel, os_, oe), 0.0)
-                key = (subj[2], subj[3], rel, os_, oe)
-                if key in seen:
-                    continue
-                seen.add(key)
                 out.append(
                     (
                         subj[0], rel, obj[0],
-                        subj[2], subj[3], obj[2], obj[3], sc,
+                        subj[2], subj[3], obj[2], obj[3],
+                        rel_score.get((rel, os_, oe), 0.0),
                     )
                 )
     return out
@@ -112,33 +98,6 @@ def casrel_extract(sentences: DataFrame) -> DataFrame:
     ``run_pipeline(extractor="casrel")`` swaps it in for the plane's
     own triples.
     """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: List[tuple] = []
-            for url, wts, sid, tokens in zip(
-                pdf["url"], pdf["warc_ts"], pdf["sent_id"], pdf["tokens"]
-            ):
-                for subj, rel, obj, hs, he, ts, te, sc in pointer_decode_sentence(
-                    list(tokens)
-                ):
-                    rows.append((url, wts, sid, subj, rel, obj, hs, he, ts, te, sc))
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "warc_ts", "sent_id", "subj", "pred", "obj",
-                    "h_start", "h_end", "t_start", "t_end", "score",
-                ],
-            )
-            if rows:
-                out = out.astype(
-                    {
-                        "sent_id": "int32", "h_start": "int32", "h_end": "int32",
-                        "t_start": "int32", "t_end": "int32", "score": "float32",
-                    }
-                )
-            yield out
-
-    return sentences.select("url", "warc_ts", "sent_id", "tokens").mapInPandas(
-        batches, schema=TRIPLES_SCHEMA
+    return decode_sentences(
+        sentences, pointer_decode_sentence, TRIPLES_SCHEMA.fields[3:]
     )

@@ -23,10 +23,11 @@ relations from the three-way label-consistent join — so label
 cross-talk between same-relation triples in one sentence reproduces
 the reference's behavior rather than "fixing" it.
 
-Scale shape: the whole thing is one mapInPandas over the plane's
-sentence rows — the text plane stays narrow (no shuffle); downstream
-dedup/graph ops own the shuffles, exactly like the fused plane and
-the CasRel extractor.
+Scale shape: each slot is one ``decode_sentences`` Arrow crossing over
+the plane's sentence rows — narrow, no shuffle; downstream dedup/graph
+ops own the shuffles, exactly like the fused plane and the CasRel
+extractor.  Unlike CasRel, USM keeps the 400-pair sentence cap (see
+``usm_extract_scored``).
 Agreement with the fused pair-scorer path is pinned at P/R >= 0.95 by
 tests (the pointer algebra can merge/cross spans the pair scorer keeps
 distinct, a known property of pointer unification).
@@ -34,13 +35,14 @@ distinct, a known property of pointer unification).
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Sequence, Tuple
+from typing import Dict, List, Sequence, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import IntegerType, StringType, StructField
 
 from ..kernels import kb
 from ..kernels.extractor import extract_mentions, score_pair
+from .extraction import TRIPLES_SCHEMA, decode_sentences
 
 Link = Tuple[int, int, int]  # (i, j, link_type)
 
@@ -72,11 +74,11 @@ def _usm_encode(
     them (spans in the inclusive link-index convention) — kept so the
     scored extraction path doesn't re-run the pair scorer.
 
-    ``max_pairs``: the same whole-sentence pathological-pair cap as
-    every other mechanism — a sentence whose len(mentions)^2 exceeds
-    it emits NO links at all (skipped entirely, like candidate_pairs'
+    ``max_pairs``: the text plane's pair cap — a sentence whose
+    len(mentions)^2 exceeds it (a ``t_capped`` sentence of the plane)
+    emits NO links at all (skipped entirely, like candidate_pairs'
     drop).  The gold replica uses the same default, so engine and
-    oracle drop in lockstep."""
+    oracle skip the same sentences."""
     ments = extract_mentions(tokens)
     if max_pairs is not None and len(ments) * len(ments) > max_pairs:
         return [], [], [], {}
@@ -237,44 +239,6 @@ def usm_sentence_scored(
     return ent_rows, rel_rows
 
 
-def usm_extract(sentences: DataFrame) -> DataFrame:
-    """sentences -> (url, sent_id, subj, pred, obj, spans) via the USM
-    slot — plane_sentences rows in, like casrel_extract."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: List[tuple] = []
-            for url, sid, tokens in zip(
-                pdf["url"], pdf["sent_id"], pdf["tokens"]
-            ):
-                _ents, rels = usm_sentence(list(tokens))
-                for subj, rel, obj, hs, he, ts, te in rels:
-                    rows.append((url, sid, subj, rel, obj, hs, he, ts, te))
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "sent_id", "subj", "pred", "obj",
-                    "h_start", "h_end", "t_start", "t_end",
-                ],
-            )
-            if rows:
-                out = out.astype(
-                    {
-                        "sent_id": "int32", "h_start": "int32", "h_end": "int32",
-                        "t_start": "int32", "t_end": "int32",
-                    }
-                )
-            yield out
-
-    return sentences.select("url", "sent_id", "tokens").mapInPandas(
-        batches,
-        schema=(
-            "url string, sent_id int, subj string, pred string, obj string,"
-            " h_start int, h_end int, t_start int, t_end int"
-        ),
-    )
-
-
 def usm_extract_scored(sentences: DataFrame) -> DataFrame:
     """sentences -> scored triples in the pipeline's TRIPLES_SCHEMA —
     the M6 slot as a drop-in extraction mechanism for run_pipeline
@@ -284,69 +248,32 @@ def usm_extract_scored(sentences: DataFrame) -> DataFrame:
     stand-in attaches the encoder's own pair score for the decoded
     (subj span, obj span) pair — what a trained USM would expose as
     its ttl logit — carried through from the single encode pass (no
-    re-scoring in the hot path)."""
-    from .extraction import TRIPLES_SCHEMA
+    re-scoring in the hot path).
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: List[tuple] = []
-            for url, wts, sid, tokens in zip(
-                pdf["url"], pdf["warc_ts"], pdf["sent_id"], pdf["tokens"]
-            ):
-                _ents, rels = usm_sentence_scored(list(tokens))
-                for subj, rel, obj, hs, he, ts, te, score in rels:
-                    rows.append(
-                        (url, wts, sid, subj, rel, obj, hs, he, ts, te, score)
-                    )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "warc_ts", "sent_id", "subj", "pred", "obj",
-                    "h_start", "h_end", "t_start", "t_end", "score",
-                ],
-            )
-            if rows:
-                out = out.astype(
-                    {
-                        "sent_id": "int32", "h_start": "int32", "h_end": "int32",
-                        "t_start": "int32", "t_end": "int32", "score": "float32",
-                    }
-                )
-            yield out
-
-    return sentences.select("url", "warc_ts", "sent_id", "tokens").mapInPandas(
-        batches, schema=TRIPLES_SCHEMA
+    Sentences over the 400-pair cap emit nothing: they are exactly the
+    sentences the text plane flags ``t_capped`` (same mentions, same
+    cap), which the plane itself still extracts on its banded path.
+    The cap stays because the decode's nested-loop joins grow faster
+    than linearly with the number of links."""
+    return decode_sentences(
+        sentences, lambda toks: usm_sentence_scored(toks)[1], TRIPLES_SCHEMA.fields[3:]
     )
 
 
 def usm_entities(sentences: DataFrame) -> DataFrame:
-    """sentences -> typed entity spans from the SAME unified pass (the
+    """sentences -> (url, warc_ts, sent_id, ent_type, start, end,
+    surface): typed entity spans from the SAME unified pass (the
     property that distinguishes USM from the pipeline NER: entities and
     relations decode from one set of link matrices)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: List[tuple] = []
-            for url, sid, tokens in zip(
-                pdf["url"], pdf["sent_id"], pdf["tokens"]
-            ):
-                ents, _rels = usm_sentence(list(tokens))
-                for surf, etype, s, e in ents:
-                    rows.append((url, sid, etype, s, e, surf))
-            out = pd.DataFrame(
-                rows,
-                columns=["url", "sent_id", "ent_type", "start", "end", "surface"],
-            )
-            if rows:
-                out = out.astype(
-                    {"sent_id": "int32", "start": "int32", "end": "int32"}
-                )
-            yield out
-
-    return sentences.select("url", "sent_id", "tokens").mapInPandas(
-        batches,
-        schema=(
-            "url string, sent_id int, ent_type string, start int, end int,"
-            " surface string"
-        ),
+    return decode_sentences(
+        sentences,
+        lambda toks: [
+            (etype, s, e, surf) for surf, etype, s, e in usm_sentence_scored(toks)[0]
+        ],
+        [
+            StructField("ent_type", StringType(), False),
+            StructField("start", IntegerType(), False),
+            StructField("end", IntegerType(), False),
+            StructField("surface", StringType(), False),
+        ],
     )

@@ -99,8 +99,10 @@ def _kg_scalar_run(n_pages: int = KG_PAGES, seed: int = KG_SEED):
         clean = html_to_text(p["html"])
         # max_pairs=400: the SAME pair-cap contract as the engine's
         # text plane (extract_plane's default) — over-cap sentences
-        # take the exact banded path on both sides, in lockstep by
-        # construction (same kernel call).
+        # take the exact banded path on both sides (same kernel
+        # call).  CasRel has no cap: pointer_decode_sentence decodes
+        # every sentence exactly.  USM skips over-cap sentences on
+        # both sides (same encoder, same default cap).
         # The deterministic corpus never reaches the cap anyway
         # (pinned by tests/test_drop_metrics.py::
         # test_corpus_never_hits_pair_cap), so this stays

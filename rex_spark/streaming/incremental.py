@@ -45,8 +45,11 @@ def stream_warc_pages(
     null — a raw dump has neither; the pipeline recomputes).  New
     crawl files landing in ``path`` become micro-batches, so the
     same exactly-once foreachBatch pipeline that consumes the parquet
-    stream consumes the crawl as it is written."""
-    import pandas as pd
+    stream consumes the crawl as it is written.
+
+    A corrupt file contributes the records before its first bad byte
+    and nothing after (read_warc's ``corrupt="skip"``): a failed
+    micro-batch would replay the same file on every retry."""
     from pyspark.sql.types import (
         BinaryType,
         LongType,
@@ -56,7 +59,7 @@ def stream_warc_pages(
         TimestampType,
     )
 
-    from ..io.warc import iter_warc
+    from ..io.warc import expand_warc_records
 
     bin_schema = StructType(
         [
@@ -71,27 +74,8 @@ def stream_warc_pages(
         .schema(bin_schema)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .load(path)
-        .select("content")
     )
-
-    def expand(batches):
-        CHUNK_ROWS = 2048
-        rows = []
-        for pdf in batches:
-            for content in pdf["content"]:
-                for url, ts, html in iter_warc(bytes(content)):
-                    rows.append((url, ts, html, None, None))
-                    if len(rows) >= CHUNK_ROWS:
-                        yield pd.DataFrame(
-                            rows, columns=[f.name for f in PAGES_SCHEMA.fields]
-                        )
-                        rows = []
-        if rows:
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PAGES_SCHEMA.fields]
-            )
-
-    return files.mapInPandas(expand, schema=PAGES_SCHEMA)
+    return expand_warc_records(files, PAGES_SCHEMA, "skip")
 
 
 def incremental_triples(

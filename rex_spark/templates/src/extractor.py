@@ -10,8 +10,10 @@ sent_id, sent, tokens), triple rows out
 
 It is written as pure DataFrame expressions, so it runs JVM-side under
 whole-stage codegen with no Python in the hot path.  If your mechanism
-needs a model, follow ``operators/pointer_extraction.py`` instead:
-a ``mapInPandas`` over the same input/output schemas.
+needs a model, write a per-sentence ``decode(tokens) -> rows`` and pass
+it to ``rex_spark.operators.extraction.decode_sentences`` with
+``TRIPLES_SCHEMA.fields[3:]``, as ``operators/pointer_extraction.py``
+does: one Arrow crossing, no hand-written ``mapInPandas``.
 """
 
 from pyspark.sql import DataFrame, functions as F

@@ -118,35 +118,43 @@ def test_fused_plane_caps_pathological_sentences_in_lockstep(spark):
     assert row["t_capped"] is False
 
 
+_FRAGS = [
+    "alice johnson works for globex",
+    "bob smith founded acme corp",
+    "grace hopper leads initech",
+]
+LONG_SENT = " and ".join(_FRAGS * 10)  # 60 mentions, 3600 pairs
+
+
+def _long_sentence_pages(spark):
+    """One page whose single sentence is LONG_SENT."""
+    import datetime
+
+    from rex_spark.operators.textplane import PAGES_SCHEMA
+
+    ts = datetime.datetime(2024, 1, 1)
+    return spark.createDataFrame(
+        [("u1", ts, f"<html><body>{LONG_SENT}</body></html>".encode(), None, "en")],
+        PAGES_SCHEMA,
+    )
+
+
 def test_overcap_document_recovers_uncapped_triples(spark):
     """VERDICT r3 #6: a planted document whose single long sentence
     blows the pair cap (3,600 pairs > 400) yields EXACTLY the uncapped
     in-process kernel's triple set through the text plane — long
     documents no longer silently truncate pair coverage."""
-    import datetime
-
     from pyspark.sql import functions as F
 
     from rex_spark.kernels.extractor import extract_sentence
     from rex_spark.kernels.textnorm import tokenize
     from rex_spark.operators.extraction import extract_plane, plane_triples
-    from rex_spark.operators.textplane import PAGES_SCHEMA
 
-    frags = [
-        "alice johnson works for globex",
-        "bob smith founded acme corp",
-        "grace hopper leads initech",
-    ]
-    long_sent = " and ".join(frags * 10)  # 60 mentions, 3600 pairs
-    toks = tokenize(long_sent, lang="en")
+    toks = tokenize(LONG_SENT, lang="en")
     gold = extract_sentence(toks, max_pairs=None)
     assert len({(t[0], t[1], t[2]) for t in gold}) >= 3  # nonvacuous
 
-    ts = datetime.datetime(2024, 1, 1)
-    pages = spark.createDataFrame(
-        [("u1", ts, f"<html><body>{long_sent}</body></html>".encode(), None, "en")],
-        PAGES_SCHEMA,
-    )
+    pages = _long_sentence_pages(spark)
     import numpy as np
 
     def f32(x):
@@ -170,17 +178,93 @@ def test_overcap_document_recovers_uncapped_triples(spark):
     assert got_fused == want
 
 
-def test_banded_equals_quadratic_property():
-    """Property pin: the gap-banded loop equals the uncapped quadratic
-    loop on randomized gazetteer/filler token soup — the exactness
-    argument (score_pair's gap bound) checked mechanically."""
+def test_overcap_sentence_casrel_exact_usm_skipped(spark):
+    """The over-cap sentence through the plugin slots: CasRel's pointer
+    decode has no pair cap, so run_pipeline(extractor="casrel") gives
+    the fused plane's triple set; USM keeps the cap and skips exactly
+    the sentence the plane flags t_capped."""
+    from pyspark.sql import functions as F
+
+    from rex_spark.operators.extraction import (
+        document_triple_set,
+        extract_plane,
+        plane_sentences,
+        plane_triples,
+    )
+    from rex_spark.operators.usm import usm_entities, usm_extract_scored
+    from rex_spark.pipeline import run_pipeline
+
+    pages = _long_sentence_pages(spark)
+    plane = extract_plane(pages).cache()
+    assert [r["t_capped"] for r in plane.collect()] == [True]
+    fused = {tuple(r) for r in document_triple_set(plane_triples(plane)).collect()}
+    assert fused == {
+        ("u1", "alice johnson", "works_for", "globex"),
+        ("u1", "bob smith", "founded", "acme corp"),
+        ("u1", "grace hopper", "boss_of", "initech"),
+    }
+    r = run_pipeline(spark, pages, store=None, extractor="casrel")
+    key = ["url", "subj", "pred", "obj"]
+    assert {tuple(x) for x in r["triple_set"].select(*key).collect()} == fused
+
+    sentences = plane_sentences(plane.where(F.col("t_capped")))
+    assert usm_extract_scored(sentences).count() == 0
+    assert usm_entities(sentences).count() == 0
+    plane.unpersist()
+
+
+def _vector_pointer_decode(tokens):
+    """The pointer decode over full-length 0/1 pointer vectors, scoring
+    every (subject, object) mention pair: the quadratic reference
+    pointer_decode_sentence must equal."""
+    from rex_spark.kernels.extractor import extract_mentions, score_pair
+    from rex_spark.kernels.spans import find_closest_span_pairs
+
+    ments = extract_mentions(tokens)
+    if len(ments) < 2:
+        return []
+    n = len(tokens)
+    subj_heads = [0] * n
+    subj_tails = [0] * n
+    for _surf, _et, s, e in ments:
+        subj_heads[s] = 1
+        subj_tails[e - 1] = 1
+    by_span = {(m[2], m[3] - 1): m for m in ments}
+    out, seen = [], set()
+    for hs, he in find_closest_span_pairs(subj_heads, subj_tails):
+        subj = by_span.get((hs, he))
+        if subj is None:
+            continue
+        rel_vecs, rel_score = {}, {}
+        for obj in ments:
+            if obj[2] == subj[2] and obj[3] == subj[3]:
+                continue
+            scored = score_pair(tokens, subj, obj)
+            if scored is None:
+                continue
+            rel, sc = scored
+            h, t = rel_vecs.setdefault(rel, ([0] * n, [0] * n))
+            h[obj[2]] = 1
+            t[obj[3] - 1] = 1
+            rel_score[(rel, obj[2], obj[3] - 1)] = sc
+        for rel, (h, t) in rel_vecs.items():
+            for os_, oe in find_closest_span_pairs(h, t):
+                obj = by_span.get((os_, oe))
+                key = (subj[2], subj[3], rel, os_, oe)
+                if obj is None or key in seen:
+                    continue
+                seen.add(key)
+                out.append((subj[0], rel, obj[0], subj[2], subj[3], obj[2],
+                            obj[3], rel_score.get((rel, os_, oe), 0.0)))
+    return out
+
+
+def _token_soups(seed, cases, max_parts=40):
+    """Random gazetteer/filler token soups (nested surfaces, pattern
+    gaps and fillers mixed)."""
     import random
 
     from rex_spark.kernels import kb
-    from rex_spark.kernels.extractor import (
-        extract_sentence,
-        extract_sentence_banded,
-    )
 
     surfaces = sorted(
         {t for b in kb.gazetteer().values() for (t, _et, _c) in b}
@@ -189,14 +273,48 @@ def test_banded_equals_quadratic_property():
         ("works", "for"), ("founded",), ("leads",), ("is", "employed", "by"),
         ("and",), ("the",), ("meanwhile",), (",",), ("visited",),
     ]
-    rng = random.Random(1227)
-    for _case in range(60):
+    rng = random.Random(seed)
+    for _case in range(cases):
         toks: list[str] = []
-        for _ in range(rng.randint(1, 40)):
+        for _ in range(rng.randint(1, max_parts)):
             if rng.random() < 0.6:
                 toks.extend(rng.choice(surfaces))
             else:
                 toks.extend(rng.choice(connectors))
+        yield toks
+
+
+def test_pointer_decode_equals_vector_decode_property():
+    """Property pin: the band-scan, position-list pointer decode equals
+    the full 0/1-vector decode over every mention pair, on random token
+    soups and on the 60-mention sentence (whose 30 rows are the fused
+    plane's 3 triples)."""
+    from rex_spark.kernels.textnorm import tokenize
+    from rex_spark.operators.pointer_extraction import pointer_decode_sentence
+
+    for toks in _token_soups(2024, 300):
+        assert pointer_decode_sentence(toks) == _vector_pointer_decode(toks), toks
+    long_toks = tokenize(LONG_SENT, lang="en")
+    rows = pointer_decode_sentence(long_toks)
+    assert rows == _vector_pointer_decode(long_toks)
+    assert len(rows) == 30
+    assert {r[:3] for r in rows} == {
+        ("alice johnson", "works_for", "globex"),
+        ("bob smith", "founded", "acme corp"),
+        ("grace hopper", "boss_of", "initech"),
+    }
+
+
+def test_banded_equals_quadratic_property():
+    """Property pin: the gap-banded loop equals the uncapped quadratic
+    loop on randomized gazetteer/filler token soup — the exactness
+    argument (score_pair's gap bound) checked mechanically."""
+    from rex_spark.kernels.extractor import (
+        extract_sentence,
+        extract_sentence_banded,
+    )
+
+    for toks in _token_soups(1227, 60):
         assert extract_sentence_banded(toks) == extract_sentence(
             toks, max_pairs=None
         ), toks

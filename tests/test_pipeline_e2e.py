@@ -11,7 +11,8 @@
    surface variants merge (a~b, b~c => one component);
 5. distributed faceted PRF1 agrees with the in-process kernel;
 6. with a StageStore the text plane is one stage made by one Arrow
-   crossing, and the stored graph outputs equal the storeless ones.
+   crossing, and the stored graph outputs equal the storeless ones;
+7. the CasRel and USM slots add one Arrow crossing to the plane's.
 """
 
 import re
@@ -345,3 +346,16 @@ def test_store_plane_is_one_crossing_and_matches_storeless(spark, tmp_path, filt
         assert nodes.count("MapInPandas") == 1
     for name in (f"surfaces{fsfx}", f"entities{fsfx}", f"edges{fsfx}"):
         assert not _python_nodes(computed[name]), name
+
+
+@pytest.mark.parametrize("slot", ["casrel", "usm"])
+def test_plugin_slot_plan_is_plane_plus_one_arrow_crossing(spark, slot):
+    """A pointer-decode slot over the plane's sentences crosses into
+    Python once more than the plane: 2 MapInArrow nodes, no MapInPandas."""
+    from rex_spark.operators.pointer_extraction import casrel_extract
+    from rex_spark.operators.usm import usm_extract_scored
+
+    extract = {"casrel": casrel_extract, "usm": usm_extract_scored}[slot]
+    out = extract(plane_sentences(extract_plane(build_pages_df(spark, 10, seed=42))))
+    assert _python_nodes(out) == ["MapInArrow", "MapInArrow"]
+    assert out.collect()

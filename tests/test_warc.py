@@ -236,3 +236,37 @@ def test_warc_negative_content_length_is_corrupt_not_infinite():
     )
     with pytest.raises(ValueError):
         parse_warc(rec)
+
+
+def test_stream_warc_pages_drains_past_truncated_file(spark, tmp_path):
+    """One truncated crawl file must not wedge the stream: the query
+    drains, the good file's records land, and the truncated file
+    contributes the records before its first bad byte."""
+    from rex_spark.io.warc import iter_warc
+    from rex_spark.streaming import stream_warc_pages
+
+    recs = _recs(20)
+    bad = encode_warc_gz(recs[10:])[:-40]  # truncate the last member
+    crawl = tmp_path / "crawl"
+    crawl.mkdir()
+    (crawl / "good.warc.gz").write_bytes(encode_warc_gz(recs[:10]))
+    (crawl / "bad.warc.gz").write_bytes(bad)
+    prefix = []
+    with pytest.raises(ValueError):
+        for url, _ts, _html in iter_warc(bad):
+            prefix.append(url)
+    assert prefix  # nonvacuous: the file has a good prefix
+
+    out = tmp_path / "out"
+    q = (
+        stream_warc_pages(spark, str(crawl), max_files_per_trigger=1)
+        .select("url")
+        .writeStream.format("parquet")
+        .option("path", str(out))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = [r["url"] for r in spark.read.parquet(str(out)).collect()]
+    assert sorted(got) == sorted([u for u, _, _ in recs[:10]] + prefix)

@@ -3,7 +3,8 @@
 Same synthetic corpus, same downstream contract (distinct document
 triple set), three mechanisms: the fused pair scorer (one mapInArrow
 plane), the CasRel two-stage pointer decode, and the USM unified
-pointer-algebra decode (both composable-stage mapInPandas paths).
+pointer-algebra decode (each the plane plus one ``decode_sentences``
+mapInArrow over its sentence rows).
 Median of SPARK_GRAFT_BENCH_RUNS (default 3) timed runs after a warm
 run, caches cleared between runs.
 
@@ -97,15 +98,10 @@ def main() -> None:
             "| extractor | wall (s) | all runs (s) | distinct triples | pages/s |\n"
             "|---|---|---|---|---|\n"
             f"{rows}\n\n"
-            "Counting ONLY the triple set, the three mechanisms land "
-            "within VM noise of each other: the composable pointer paths "
-            "(casrel/usm) run segment + extract as separate crossings but "
-            "skip materializing the mention/sentence arrays the fused "
-            "plane always carries, so neither shape dominates for a "
-            "single output.  The fused plane wins when the full pipeline "
-            "consumes several outputs (sentences + mentions + triples "
-            "from ONE crossing — the kg_pipeline bench shape); all three "
-            "are shuffle-free to triple emission.  "
+            "The pointer paths (casrel/usm) run the fused plane (with "
+            "sentence text) plus one decode_sentences crossing over its "
+            "sentence rows; all three are shuffle-free to triple "
+            "emission.  "
             + (
                 "Set agreement this run: the distinct triple sets are "
                 "IDENTICAL (measured symmetric difference vs fused = 0 "
