@@ -8,6 +8,11 @@ This is the frozen stand-in for REx's neural scorers (SURVEY.md §2.10):
   a candidate (head, tail) pair gets a per-relation score; here the
   deterministic pattern match replaces the PCNN sigmoid
   (rex/models/sent_pcnn.py:11-55 row contract: pair in -> scores out).
+- ``scored_pairs``      is the one pair scan (the fused plane and the
+  USM encoder read it; the CasRel decode scans the same ``tail_band``
+  per subject): it visits only the tails inside the scorer's gap band,
+  so every sentence is scored exactly at near-linear cost in its
+  mentions, and no slot needs a pair cap.
 - ``extract_sentence`` / ``extract_document`` compose the full path the
   Spark pipeline distributes; running them in-process IS the oracle the
   P/R>=0.95 contract compares against.
@@ -19,7 +24,7 @@ MODEL_VERSION recorded in lineage).
 from __future__ import annotations
 
 from bisect import bisect_left, bisect_right
-from typing import Dict, List, Sequence, Tuple
+from typing import Dict, Iterator, List, Sequence, Tuple
 
 from . import kb
 from .textnorm import sent_seg, tokenize
@@ -83,61 +88,27 @@ def tail_band(starts: Sequence[int], head_end: int) -> Tuple[int, int]:
     return bisect_left(starts, head_end), bisect_right(starts, head_end + _MAX_GAP)
 
 
-def _score_into(
-    best: Dict[Tuple[str, str, str], ScoredTriple],
-    tokens: Sequence[str],
-    head: Mention,
-    tail: Mention,
-) -> None:
-    """Score one candidate pair and fold it into the keep-best dict
-    (strictly-greater replacement, so score ties keep the FIRST
-    encountered candidate — iteration order is part of the contract)."""
-    if (head[2], head[3]) == (tail[2], tail[3]):
-        return
-    scored = score_pair(tokens, head, tail)
-    if scored is None:
-        return
-    rel, score = scored
-    if score < kb.SCORE_THRESHOLD:
-        return
-    key = (head[0], rel, tail[0])
-    cand: ScoredTriple = (
-        head[0], rel, tail[0], head[2], head[3], tail[2], tail[3], score,
-    )
-    prev = best.get(key)
-    if prev is None or cand[7] > prev[7]:
-        best[key] = cand
+def scored_pairs(
+    tokens: Sequence[str], mentions: List[Mention]
+) -> Iterator[Tuple[Mention, Mention, str, float]]:
+    """Every candidate pair the scorer accepts, as (head, tail, rel,
+    score): pairs score_pair scores at or above kb.SCORE_THRESHOLD,
+    with distinct head and tail spans.
 
-
-def extract_sentence_banded(
-    tokens: Sequence[str], mentions: List[Mention] | None = None
-) -> List[ScoredTriple]:
-    """Gap-banded EXACT extraction: linear-cost path for sentences
-    whose quadratic pair loop would blow past the cap (the
-    long-document recovery VERDICT r3 #6 asked for).
-
-    score_pair only ever accepts pairs with ``0 <= t_start - h_end <=
-    _MAX_GAP``, so restricting each head's tail scan (via bisect on
-    the position-sorted mention list) to exactly that band visits the
-    complete set of candidates score_pair can accept, in the same
-    (head, tail) lexicographic order as the quadratic loop — identical
-    keep-first-on-tie behavior, hence output == the uncapped
-    ``extract_sentence`` ALWAYS, at O(mentions x (_MAX_GAP + band
-    occupancy)) instead of O(mentions^2) (pinned by
-    tests/test_drop_metrics.py).  This supersedes windowed chunking
-    (W5 chunk_windows) for this extractor: the gap bound makes
-    locality exact, with no window-margin approximation and no span
-    re-anchoring.
+    score_pair only accepts pairs with ``0 <= t_start - h_end <=
+    _MAX_GAP``, so each head's tails are scanned over ``tail_band`` of
+    the position-sorted mentions only: the complete set of acceptable
+    pairs, in (head, tail) mention order, at O(mentions x band
+    occupancy) instead of O(mentions^2).  Every band tail starts at or
+    after the head's end, so its span always differs from the head's.
     """
-    if mentions is None:
-        mentions = extract_mentions(tokens)
-    best: Dict[Tuple[str, str, str], ScoredTriple] = {}
     starts = [m[2] for m in mentions]  # ascending by construction
     for head in mentions:
         lo, hi = tail_band(starts, head[3])
         for tail in mentions[lo:hi]:
-            _score_into(best, tokens, head, tail)
-    return sorted(best.values())
+            scored = score_pair(tokens, head, tail)
+            if scored is not None and scored[1] >= kb.SCORE_THRESHOLD:
+                yield head, tail, scored[0], scored[1]
 
 
 def extract_sentence(
@@ -145,23 +116,21 @@ def extract_sentence(
     max_pairs: int | None = None,
     mentions: List[Mention] | None = None,
 ) -> List[ScoredTriple]:
-    """Mentions -> all ordered candidate pairs -> scored triples.
+    """Mentions -> accepted candidate pairs -> scored triples.
 
-    Candidate generation mirrors J1 (all head/tail mention pairs with
-    distinct spans, rex/data/transforms/sent_re.py:50-63); scoring +
+    Candidate generation mirrors J1 (head/tail mention pairs with
+    distinct spans, rex/data/transforms/sent_re.py:50-63) restricted to
+    the pairs the scorer can accept (``scored_pairs``); scoring +
     thresholding mirrors T3.  Output is deduplicated on the triple key
-    keeping the max score (the dedup-keep-best window, SURVEY.md §2.5).
+    keeping the max score (the dedup-keep-best window, SURVEY.md
+    §2.5); ties keep the FIRST pair in (head, tail) order.  The output
+    equals the quadratic all-pairs composition on every sentence
+    (pinned by tests/test_drop_metrics.py), so no sentence needs a
+    pair cap.
 
-    ``max_pairs``: if set and len(mentions)^2 exceeds it, the sentence
-    switches to :func:`extract_sentence_banded` — the exact
-    linear-cost path — instead of the quadratic loop (pre-r4 behavior
-    dropped such sentences; they now extract fully).  The result is
-    provably identical either way, so ``max_pairs`` is purely a COST
-    bound, never a semantics knob.  None (default) keeps the
-    reference-exact quadratic composition the P/R oracle compares
-    against.  operators.extraction.candidate_pairs (the J1 pair-level
-    query surface) retains its drop cap: the full pair set really is
-    quadratic — only the gap-bounded scorer admits linear recovery.
+    ``max_pairs`` is accepted and ignored: no sentence needs a cap,
+    and the keyword stays only for callers that still pass one
+    (perfbench/layers.py's kernel microbench).
 
     ``mentions``: the sentence's ``extract_mentions(tokens)`` when the
     caller already has them (extract_plane emits them too), so they
@@ -169,31 +138,29 @@ def extract_sentence(
     """
     if mentions is None:
         mentions = extract_mentions(tokens)
-    if max_pairs is not None and len(mentions) * len(mentions) > max_pairs:
-        return extract_sentence_banded(tokens, mentions)
     best: Dict[Tuple[str, str, str], ScoredTriple] = {}
-    for head in mentions:
-        for tail in mentions:
-            _score_into(best, tokens, head, tail)
+    for head, tail, rel, score in scored_pairs(tokens, mentions):
+        key = (head[0], rel, tail[0])
+        prev = best.get(key)
+        if prev is None or score > prev[7]:
+            best[key] = (
+                head[0], rel, tail[0], head[2], head[3], tail[2], tail[3], score,
+            )
     return sorted(best.values())
 
 
 def extract_document(
-    clean_text: str, lang: str = "en", max_pairs: int | None = None
+    clean_text: str, lang: str = "en"
 ) -> List[Tuple[int, str, List[str], List[ScoredTriple]]]:
     """clean_text -> [(sent_id, sentence, tokens, scored triples)].
 
     The segmentation language follows the page's lang column
-    (BASELINE.json input_hint); anything non-zh uses en rules.
-    ``max_pairs`` passes through to extract_sentence (None =
-    reference-exact)."""
+    (BASELINE.json input_hint); anything non-zh uses en rules."""
     seg_lang = "zh" if lang == "zh" else "en"
     out = []
     for sent_id, sent in enumerate(sent_seg(clean_text, lang=seg_lang)):
         tokens = tokenize(sent, lang=seg_lang)
-        out.append(
-            (sent_id, sent, tokens, extract_sentence(tokens, max_pairs=max_pairs))
-        )
+        out.append((sent_id, sent, tokens, extract_sentence(tokens)))
     return out
 
 

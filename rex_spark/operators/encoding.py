@@ -1,7 +1,7 @@
 """Label encoding operators (SURVEY §2.2 P7/P8).
 
-P8 one-hot / multi-hot re-expresses rex/data/label_encoder.py:59-68
-(convert_to_multi_hot / convert_to_one_hot) as a relational shape: the
+P8 multi-hot re-expresses rex/data/label_encoder.py:59-68
+(convert_to_multi_hot) as a relational shape: the
 label vocabulary is an EXPLICIT ordered list (the LabelEncoder's
 id->label mapping), and the hot vector is built JVM-side with
 ``transform`` + ``array_contains`` over the per-group label set — no
@@ -37,14 +37,3 @@ def multi_hot_encode(
         F.size(F.array_intersect(F.col("_seen"), vocab)).alias("n_labels"),
     )
 
-
-def one_hot_encode(
-    df: DataFrame, label_col: str, labels: list[str]
-) -> DataFrame:
-    """Row-wise one-hot of ``label_col`` (the convert_to_one_hot shape);
-    labels outside the vocabulary encode to all zeros."""
-    vocab = F.array(*[F.lit(x) for x in labels])
-    oh = F.transform(
-        vocab, lambda lab: (lab == F.col(label_col)).cast("int")
-    )
-    return df.withColumn("one_hot", oh)

@@ -87,9 +87,14 @@ def filter_valid_mentions(
     return mentions.where(fits), mentions.where(~fits)
 
 
+# the pair-count bound of the J1 pair surface: candidate_pairs drops a
+# sentence with more mention pairs, and extract_plane flags it t_capped
+PAIR_CAP = 400
+
+
 def candidate_pairs(
     mentions: DataFrame,
-    max_pairs_per_sentence: int = 400,
+    max_pairs_per_sentence: int = PAIR_CAP,
     observation=None,
 ) -> DataFrame:
     """J1: all ordered (head, tail) mention pairs with distinct spans
@@ -176,11 +181,7 @@ PLANE_SCHEMA = StructType(
 )
 
 
-def extract_plane(
-    pages: DataFrame,
-    include_text: bool = True,
-    max_pairs_per_sentence: int | None = 400,
-) -> DataFrame:
+def extract_plane(pages: DataFrame, include_text: bool = True) -> DataFrame:
     """pages -> per-sentence rows with nested mention/triple arrays, in
     ONE Arrow crossing.
 
@@ -198,16 +199,17 @@ def extract_plane(
     kernel (extract_document / extract_mentions) by
     tests/test_pipeline_e2e.py.
 
-    ``max_pairs_per_sentence`` bounds the kernel's quadratic pair loop
-    on pathological sentences (a page whose "sentence" repeats a
-    gazetteer surface thousands of times would otherwise stall one
-    executor core).  Over-cap sentences are NOT dropped: they route to
-    the exact gap-banded linear path (extract_sentence_banded — output
-    provably identical to the uncapped kernel) and emit with
-    ``t_capped`` true so downstream lineage can still count them (P9
-    contract).
+    Every sentence is scored exactly: the kernel's gap-banded pair scan
+    costs near-linear time in the mentions, so a pathological sentence
+    (a gazetteer surface repeated thousands of times) cannot stall an
+    executor core.  A sentence with more than ``PAIR_CAP`` mention
+    pairs is still flagged ``t_capped`` so downstream lineage can count
+    them (P9 contract) — they are the sentences ``candidate_pairs``
+    drops.
     """
     import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from ..kernels.textnorm import html_to_text, sent_seg, tokenize
 
@@ -232,42 +234,31 @@ def extract_plane(
         )
     )
     names = [f.name for f in schema.fields]
-    pa_types = {
-        "url": pa.string(), "warc_us": pa.int64(), "lang": pa.string(),
-        "sent_id": pa.int32(), "sent": pa.string(),
-        "tokens": pa.list_(pa.string()),
-        "m_type": pa.list_(pa.string()), "m_start": pa.list_(pa.int32()),
-        "m_end": pa.list_(pa.int32()), "m_surface": pa.list_(pa.string()),
-        "t_subj": pa.list_(pa.string()), "t_pred": pa.list_(pa.string()),
-        "t_obj": pa.list_(pa.string()), "t_hs": pa.list_(pa.int32()),
-        "t_he": pa.list_(pa.int32()), "t_ts": pa.list_(pa.int32()),
-        "t_te": pa.list_(pa.int32()), "t_score": pa.list_(pa.float32()),
-        "t_capped": pa.bool_(),
-    }
-    out_schema = pa.schema([(n, pa_types[n]) for n in names])
+    out_schema = to_arrow_schema(schema)
+    # url, warc_us and lang lead both schemas: they are taken from the
+    # input rows, the remaining columns are built per sentence
+    built = list(out_schema)[3:]
 
     # mapInArrow, not mapInPandas: RecordBatches in and out, no pandas
     # block construction / dtype inference on either side of the
     # boundary — at millions of rows that layer is pure overhead.
     def plane_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
-            cols = {k: [] for k in names}
-            for url, us, lang, raw in zip(
-                rb.column(0).to_pylist(),
-                rb.column(1).to_pylist(),
-                rb.column(2).to_pylist(),
-                rb.column(3).to_pylist(),
-            ):
+            src_rows = []
+            cols = {f.name: [] for f in built}
+            # to_pandas + tolist: several times faster than to_pylist;
+            # the key columns never become Python objects
+            raws = rb.column(3).to_pandas().tolist()
+            zh = pc.fill_null(pc.equal(rb.column(2), "zh"), False).to_pandas()
+            for i, (raw, is_zh) in enumerate(zip(raws, zh.tolist())):
                 if raw is None:
                     text = ""
                 else:
                     text = raw if from_docs else html_to_text(raw)
-                seg_lang = "zh" if lang == "zh" else "en"
+                seg_lang = "zh" if is_zh else "en"
                 for sid, sent in enumerate(sent_seg(text, lang=seg_lang)):
                     toks = tokenize(sent, lang=seg_lang)
-                    cols["url"].append(url)
-                    cols["warc_us"].append(us)
-                    cols["lang"].append(lang)
+                    src_rows.append(i)
                     cols["sent_id"].append(sid)
                     if include_text:
                         cols["sent"].append(sent)
@@ -277,17 +268,8 @@ def extract_plane(
                     cols["m_type"].append([m[1] for m in ms])
                     cols["m_start"].append([m[2] for m in ms])
                     cols["m_end"].append([m[3] for m in ms])
-                    capped = (
-                        max_pairs_per_sentence is not None
-                        and len(ms) * len(ms) > max_pairs_per_sentence
-                    )
-                    cols["t_capped"].append(capped)
-                    # over-cap sentences take the exact gap-banded
-                    # linear path inside extract_sentence (flagged,
-                    # never dropped)
-                    tr = extract_sentence(
-                        toks, max_pairs=max_pairs_per_sentence, mentions=ms
-                    )
+                    cols["t_capped"].append(len(ms) * len(ms) > PAIR_CAP)
+                    tr = extract_sentence(toks, mentions=ms)
                     cols["t_subj"].append([t[0] for t in tr])
                     cols["t_pred"].append([t[1] for t in tr])
                     cols["t_obj"].append([t[2] for t in tr])
@@ -296,8 +278,10 @@ def extract_plane(
                     cols["t_ts"].append([t[5] for t in tr])
                     cols["t_te"].append([t[6] for t in tr])
                     cols["t_score"].append([t[7] for t in tr])
+            take = pa.array(src_rows, type=pa.int32())
             yield pa.RecordBatch.from_arrays(
-                [pa.array(cols[n], type=pa_types[n]) for n in names],
+                [rb.column(k).take(take) for k in range(3)]
+                + [pa.array(cols[f.name], type=f.type) for f in built],
                 schema=out_schema,
             )
 

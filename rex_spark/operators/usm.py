@@ -21,13 +21,16 @@ exactly, including its join semantics: pairs form from H2H x T2T
 constrained to H2T spans, entities from L2H x L2T with "m" labels,
 relations from the three-way label-consistent join — so label
 cross-talk between same-relation triples in one sentence reproduces
-the reference's behavior rather than "fixing" it.
+the reference's behavior rather than "fixing" it.  The joins are
+hash-indexed, so a sentence's decode cost follows its links and
+decoded rows, not their products.
 
 Scale shape: each slot is one ``decode_sentences`` Arrow crossing over
 the plane's sentence rows — narrow, no shuffle; downstream dedup/graph
 ops own the shuffles, exactly like the fused plane and the CasRel
-extractor.  Unlike CasRel, USM keeps the 400-pair sentence cap (see
-``usm_extract_scored``).
+extractor.  Like both, USM decodes every sentence exactly: the encoder
+reads the fused plane's gap-banded pair scan and the decode is
+output-sensitive, so there is no pair cap.
 Agreement with the fused pair-scorer path is pinned at P/R >= 0.95 by
 tests (the pointer algebra can merge/cross spans the pair scorer keeps
 distinct, a known property of pointer unification).
@@ -41,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, StringType, StructField
 
 from ..kernels import kb
-from ..kernels.extractor import extract_mentions, score_pair
+from ..kernels.extractor import extract_mentions, scored_pairs
 from .extraction import TRIPLES_SCHEMA, decode_sentences
 
 Link = Tuple[int, int, int]  # (i, j, link_type)
@@ -66,7 +69,7 @@ _LABEL_IDX = {v["string"]: k for k, v in LABEL_MAP.items()}
 
 
 def _usm_encode(
-    tokens: Sequence[str], max_pairs: int | None = 400
+    tokens: Sequence[str],
 ) -> Tuple[List[Link], List[Link], List[Link], dict]:
     """Stand-in encoder: the (ttl, ltl, tll) link sets a trained USM
     would emit above threshold for this sentence, plus the
@@ -74,14 +77,9 @@ def _usm_encode(
     them (spans in the inclusive link-index convention) — kept so the
     scored extraction path doesn't re-run the pair scorer.
 
-    ``max_pairs``: the text plane's pair cap — a sentence whose
-    len(mentions)^2 exceeds it (a ``t_capped`` sentence of the plane)
-    emits NO links at all (skipped entirely, like candidate_pairs'
-    drop).  The gold replica uses the same default, so engine and
-    oracle skip the same sentences."""
+    Pairs come from ``scored_pairs``, the gap-banded scan of the fused
+    plane, so every sentence is encoded, however many mentions it has."""
     ments = extract_mentions(tokens)
-    if max_pairs is not None and len(ments) * len(ments) > max_pairs:
-        return [], [], [], {}
     ttl: set = set()
     ltl: set = set()
     tll: set = set()
@@ -91,26 +89,17 @@ def _usm_encode(
         li = _LABEL_IDX[etype]
         ltl.add((li, s, 0))  # L2H
         ltl.add((li, e - 1, 1))  # L2T
-    for head in ments:
-        for tail in ments:
-            if (head[2], head[3]) == (tail[2], tail[3]):
-                continue
-            scored = score_pair(tokens, head, tail)
-            if scored is None:
-                continue
-            rel, score = scored
-            if score < kb.SCORE_THRESHOLD:
-                continue
-            ri = _LABEL_IDX[rel]
-            hs, he = head[2], head[3] - 1
-            ts, te = tail[2], tail[3] - 1
-            pair_scores[(hs, he, rel, ts, te)] = score
-            ttl.add((hs, ts, 1))  # H2H
-            ttl.add((he, te, 2))  # T2T
-            ltl.add((ri, hs, 0))  # L2H (subject head)
-            ltl.add((ri, he, 1))  # L2T (subject tail)
-            tll.add((ts, ri, 0))  # H2L (object head)
-            tll.add((te, ri, 1))  # T2L (object tail)
+    for head, tail, rel, score in scored_pairs(tokens, ments):
+        ri = _LABEL_IDX[rel]
+        hs, he = head[2], head[3] - 1
+        ts, te = tail[2], tail[3] - 1
+        pair_scores[(hs, he, rel, ts, te)] = score
+        ttl.add((hs, ts, 1))  # H2H
+        ttl.add((he, te, 2))  # T2T
+        ltl.add((ri, hs, 0))  # L2H (subject head)
+        ltl.add((ri, he, 1))  # L2T (subject tail)
+        tll.add((ts, ri, 0))  # H2L (object head)
+        tll.add((te, ri, 1))  # T2L (object tail)
     return sorted(ttl), sorted(ltl), sorted(tll), pair_scores
 
 
@@ -133,71 +122,65 @@ def usm_decode(
     INCLUSIVE (reference emits (span, type) with its own end handling;
     we keep the link-index convention and convert at the surface),
     relations = [((hh, ht), rel_string, (th, tt))].
+
+    Each of the reference's nested-loop joins is a hash-indexed join
+    here: H2T tails are indexed by head and the other link families
+    are probed by set membership, so the cost follows the links and
+    decoded rows rather than their products.  The output is the
+    reference's, label cross-talk included (pinned against the
+    nested-loop decode by tests/test_usm.py).
     """
-    # token - token
-    h2t = [(x[0], x[1]) for x in ttl if x[2] == 0]
-    h2t_set = set(h2t)
-    hs = {x[0] for x in h2t}
-    ts = {x[1] for x in h2t}
-    h2h = [(x[0], x[1]) for x in ttl if x[2] == 1 and x[0] in hs and x[1] in hs]
-    t2t = [(x[0], x[1]) for x in ttl if x[2] == 2 and x[0] in ts and x[1] in ts]
-    pairs = []
-    for hh, th in h2h:
-        for ht, tt in t2t:
-            if (hh, ht) in h2t_set and (th, tt) in h2t_set:
-                pairs.append(((hh, ht), (th, tt)))
+    # token - token: H2T spans, indexed by head
+    tails_of: Dict[int, List[int]] = {}
+    for h, t, kind in ttl:
+        if kind == 0:
+            tails_of.setdefault(h, []).append(t)
+    t2t = {(a, b) for a, b, kind in ttl if kind == 2}
+    pairs = {
+        ((hh, ht), (th, tt))
+        for hh, th, kind in ttl
+        if kind == 1
+        for ht in tails_of.get(hh, ())
+        for tt in tails_of.get(th, ())
+        if (ht, tt) in t2t
+    }
 
-    # label - token
-    l2h = [
-        (x[0], x[1])
-        for x in ltl
-        if x[2] == 0 and x[0] in label_map and x[1] in hs
-    ]
-    l2t = [
-        (x[0], x[1])
-        for x in ltl
-        if x[2] == 1 and x[0] in label_map and x[1] in ts
-    ]
-    l2ht = []
-    for l1, h in l2h:
-        for l2, t in l2t:
-            if l1 == l2 and (h, t) in h2t_set:
-                l2ht.append(
-                    ((label_map[l1]["string"], label_map[l1]["type"], l1), (h, t))
-                )
-    ls = {lb[0][2] for lb in l2ht}
+    # label - token: label-typed H2T spans
+    l2t = {(lb, t) for lb, t, kind in ltl if kind == 1}
+    l2ht = {
+        (lb, (h, t))
+        for lb, h, kind in ltl
+        if kind == 0 and lb in label_map
+        for t in tails_of.get(h, ())
+        if (lb, t) in l2t
+    }
 
-    # token - label
-    h2l = [
-        (x[0], x[1]) for x in tll if x[2] == 0 and x[0] in hs and x[1] in ls
-    ]
-    t2l = [
-        (x[0], x[1]) for x in tll if x[2] == 1 and x[0] in ts and x[1] in ls
-    ]
-    ht2l = []
-    for h, l1 in h2l:
-        for t, l2 in t2l:
-            if l1 == l2 and (h, t) in h2t_set and label_map[l1]["type"] == "p":
-                ht2l.append(((h, t), (label_map[l1]["string"], "p", l1)))
+    # token - label: relation-labelled object spans
+    ls = {lb for lb, _span in l2ht}
+    t2l = {(t, lb) for t, lb, kind in tll if kind == 1}
+    ht2l = {
+        ((h, t), lb)
+        for h, lb, kind in tll
+        if kind == 0 and lb in ls and label_map[lb]["type"] == "p"
+        for t in tails_of.get(h, ())
+        if (t, lb) in t2l
+    }
 
     # merge
     ents = sorted(
-        {(ent[1], ent[0][0]) for ent in l2ht if ent[0][1] == "m"}
+        {(span, label_map[lb]["string"]) for lb, span in l2ht
+         if label_map[lb]["type"] == "m"}
     )
-    relations = set()
-    for (hh, ht), (th, tt) in pairs:
-        for l1, (h1, t1) in l2ht:
-            if l1[1] == "p":
-                for (h2, t2), l2 in ht2l:
-                    if l2[1] == "p":
-                        if (
-                            hh == h1
-                            and ht == t1
-                            and th == h2
-                            and tt == t2
-                            and l1[2] == l2[2]
-                        ):
-                            relations.add(((hh, ht), l1[0], (th, tt)))
+    rel_labels: Dict[Tuple[int, int], List[int]] = {}
+    for lb, span in l2ht:
+        if label_map[lb]["type"] == "p":
+            rel_labels.setdefault(span, []).append(lb)
+    relations = {
+        (subj, label_map[lb]["string"], obj)
+        for subj, obj in pairs
+        for lb in rel_labels.get(subj, ())
+        if (obj, lb) in ht2l
+    }
     return ents, sorted(relations)
 
 
@@ -250,11 +233,8 @@ def usm_extract_scored(sentences: DataFrame) -> DataFrame:
     its ttl logit — carried through from the single encode pass (no
     re-scoring in the hot path).
 
-    Sentences over the 400-pair cap emit nothing: they are exactly the
-    sentences the text plane flags ``t_capped`` (same mentions, same
-    cap), which the plane itself still extracts on its banded path.
-    The cap stays because the decode's nested-loop joins grow faster
-    than linearly with the number of links."""
+    Every sentence is decoded, including those the text plane flags
+    ``t_capped``: there is no pair cap."""
     return decode_sentences(
         sentences, lambda toks: usm_sentence_scored(toks)[1], TRIPLES_SCHEMA.fields[3:]
     )

@@ -97,19 +97,10 @@ def _kg_scalar_run(n_pages: int = KG_PAGES, seed: int = KG_SEED):
     freq: Counter = Counter()  # mention surface -> occurrence count
     for p in pages:
         clean = html_to_text(p["html"])
-        # max_pairs=400: the SAME pair-cap contract as the engine's
-        # text plane (extract_plane's default) — over-cap sentences
-        # take the exact banded path on both sides (same kernel
-        # call).  CasRel has no cap: pointer_decode_sentence decodes
-        # every sentence exactly.  USM skips over-cap sentences on
-        # both sides (same encoder, same default cap).
-        # The deterministic corpus never reaches the cap anyway
-        # (pinned by tests/test_drop_metrics.py::
-        # test_corpus_never_hits_pair_cap), so this stays
-        # reference-exact.
-        for _sid, _sent, tokens, scored in extract_document(
-            clean, p["lang"], max_pairs=400
-        ):
+        # Every slot decodes every sentence exactly on both sides (same
+        # kernels): the text plane and USM read the gap-banded pair
+        # scan, CasRel scans the same band per subject — no pair cap.
+        for _sid, _sent, tokens, scored in extract_document(clean, p["lang"]):
             for surface, _et, _s, _e in extract_mentions(tokens):
                 freq[surface] += 1
             for t in scored:

@@ -10,6 +10,31 @@ from rex_spark.io.stages import StageStore
 from rex_spark.operators.extraction import candidate_pairs, filter_valid_mentions
 
 
+def _quadratic_extract_sentence(tokens):
+    """The quadratic all-pairs composition: every ordered (head, tail)
+    mention pair with distinct spans, scored and thresholded, keep-best
+    on the triple key with ties keeping the first pair — the oracle
+    the gap-banded extract_sentence must equal."""
+    from rex_spark.kernels import kb
+    from rex_spark.kernels.extractor import extract_mentions, score_pair
+
+    mentions = extract_mentions(tokens)
+    best = {}
+    for head in mentions:
+        for tail in mentions:
+            if (head[2], head[3]) == (tail[2], tail[3]):
+                continue
+            scored = score_pair(tokens, head, tail)
+            if scored is None or scored[1] < kb.SCORE_THRESHOLD:
+                continue
+            rel, score = scored
+            key = (head[0], rel, tail[0])
+            if key not in best or score > best[key][7]:
+                best[key] = (head[0], rel, tail[0], head[2], head[3],
+                             tail[2], tail[3], score)
+    return sorted(best.values())
+
+
 def _mentions(spark):
     rows = [
         # sentence A: 3 mentions -> 9 > cap(4): dropped whole (6 pairs)
@@ -65,10 +90,10 @@ def test_metrics_land_in_store(spark, tmp_path):
 
 def test_fused_plane_caps_pathological_sentences_in_lockstep(spark):
     """Over-cap sentences are flagged (t_capped) but NOT dropped: the
-    fused plane routes them to the exact gap-banded path, so triples
-    equal the uncapped kernel's.  The composable candidate_pairs
-    surface (J1: the FULL pair set, genuinely quadratic) retains its
-    documented drop cap."""
+    fused plane scores every sentence on the gap-banded pair scan, so
+    their triples equal the quadratic composition's.  The composable
+    candidate_pairs surface (J1: the FULL pair set, genuinely
+    quadratic) retains its documented drop cap."""
     import datetime
 
     from pyspark.sql import functions as F
@@ -94,11 +119,10 @@ def test_fused_plane_caps_pathological_sentences_in_lockstep(spark):
     capped = plane.where(F.col("t_capped")).collect()
     assert [r["url"] for r in capped] == ["u1"]
     assert len(capped[0]["m_surface"]) == 21  # mentions kept (linear work)
-    # the flagged sentence's triples equal the uncapped kernel's
-    from rex_spark.kernels.extractor import extract_sentence
+    # the flagged sentence's triples equal the quadratic composition's
     from rex_spark.kernels.textnorm import tokenize
 
-    gold = extract_sentence(tokenize(bomb.strip(), lang="en"), max_pairs=None)
+    gold = _quadratic_extract_sentence(tokenize(bomb.strip(), lang="en"))
     assert list(zip(capped[0]["t_subj"], capped[0]["t_pred"],
                     capped[0]["t_obj"])) == [(t[0], t[1], t[2]) for t in gold]
     # the healthy page still extracts
@@ -111,11 +135,6 @@ def test_fused_plane_caps_pathological_sentences_in_lockstep(spark):
     assert pairs.where(F.col("url") == "u1").count() == 0
     assert pairs.where(F.col("url") == "u2").count() > 0
     plane.unpersist()
-
-    # cap off -> reference-exact (sentence scored, quadratic and all)
-    uncapped = extract_plane(pages, max_pairs_per_sentence=None)
-    row = uncapped.where(F.col("url") == "u1").collect()[0]
-    assert row["t_capped"] is False
 
 
 _FRAGS = [
@@ -141,17 +160,16 @@ def _long_sentence_pages(spark):
 
 def test_overcap_document_recovers_uncapped_triples(spark):
     """VERDICT r3 #6: a planted document whose single long sentence
-    blows the pair cap (3,600 pairs > 400) yields EXACTLY the uncapped
-    in-process kernel's triple set through the text plane — long
-    documents no longer silently truncate pair coverage."""
+    blows the pair cap (3,600 pairs > 400) yields EXACTLY the quadratic
+    composition's triple set through the text plane — long documents
+    no longer silently truncate pair coverage."""
     from pyspark.sql import functions as F
 
-    from rex_spark.kernels.extractor import extract_sentence
     from rex_spark.kernels.textnorm import tokenize
     from rex_spark.operators.extraction import extract_plane, plane_triples
 
     toks = tokenize(LONG_SENT, lang="en")
-    gold = extract_sentence(toks, max_pairs=None)
+    gold = _quadratic_extract_sentence(toks)
     assert len({(t[0], t[1], t[2]) for t in gold}) >= 3  # nonvacuous
 
     pages = _long_sentence_pages(spark)
@@ -178,11 +196,11 @@ def test_overcap_document_recovers_uncapped_triples(spark):
     assert got_fused == want
 
 
-def test_overcap_sentence_casrel_exact_usm_skipped(spark):
-    """The over-cap sentence through the plugin slots: CasRel's pointer
-    decode has no pair cap, so run_pipeline(extractor="casrel") gives
-    the fused plane's triple set; USM keeps the cap and skips exactly
-    the sentence the plane flags t_capped."""
+def test_overcap_sentence_casrel_and_usm_exact(spark):
+    """The over-cap sentence through the plugin slots: neither CasRel's
+    pointer decode nor USM's pointer algebra has a pair cap, so
+    run_pipeline(extractor="casrel"|"usm") gives the fused plane's
+    triple set, and USM's entity spans come from the same pass."""
     from pyspark.sql import functions as F
 
     from rex_spark.operators.extraction import (
@@ -191,7 +209,7 @@ def test_overcap_sentence_casrel_exact_usm_skipped(spark):
         plane_sentences,
         plane_triples,
     )
-    from rex_spark.operators.usm import usm_entities, usm_extract_scored
+    from rex_spark.operators.usm import usm_entities
     from rex_spark.pipeline import run_pipeline
 
     pages = _long_sentence_pages(spark)
@@ -203,13 +221,14 @@ def test_overcap_sentence_casrel_exact_usm_skipped(spark):
         ("u1", "bob smith", "founded", "acme corp"),
         ("u1", "grace hopper", "boss_of", "initech"),
     }
-    r = run_pipeline(spark, pages, store=None, extractor="casrel")
     key = ["url", "subj", "pred", "obj"]
-    assert {tuple(x) for x in r["triple_set"].select(*key).collect()} == fused
+    for slot in ("casrel", "usm"):
+        r = run_pipeline(spark, pages, store=None, extractor=slot)
+        got = {tuple(x) for x in r["triple_set"].select(*key).collect()}
+        assert got == fused, slot
 
-    sentences = plane_sentences(plane.where(F.col("t_capped")))
-    assert usm_extract_scored(sentences).count() == 0
-    assert usm_entities(sentences).count() == 0
+    ents = usm_entities(plane_sentences(plane.where(F.col("t_capped"))))
+    assert ents.count() == 60
     plane.unpersist()
 
 
@@ -306,27 +325,26 @@ def test_pointer_decode_equals_vector_decode_property():
 
 
 def test_banded_equals_quadratic_property():
-    """Property pin: the gap-banded loop equals the uncapped quadratic
-    loop on randomized gazetteer/filler token soup — the exactness
-    argument (score_pair's gap bound) checked mechanically."""
-    from rex_spark.kernels.extractor import (
-        extract_sentence,
-        extract_sentence_banded,
-    )
+    """Property pin: extract_sentence (the gap-banded pair scan) equals
+    the quadratic all-pairs composition on randomized gazetteer/filler
+    token soup and on the 60-mention sentence — the exactness argument
+    (score_pair's gap bound) checked mechanically."""
+    from rex_spark.kernels.extractor import extract_sentence
+    from rex_spark.kernels.textnorm import tokenize
 
     for toks in _token_soups(1227, 60):
-        assert extract_sentence_banded(toks) == extract_sentence(
-            toks, max_pairs=None
-        ), toks
+        assert extract_sentence(toks) == _quadratic_extract_sentence(toks), toks
+    long_toks = tokenize(LONG_SENT, lang="en")
+    assert extract_sentence(long_toks) == _quadratic_extract_sentence(long_toks)
 
 
 def test_corpus_never_hits_pair_cap():
-    """The deterministic corpus stays strictly under the 400-pair cap
-    in every sentence — the precondition that keeps the capped
-    production paths (and the equally-capped oracle gold) identical to
-    the uncapped reference composition.  If corpus synthesis ever
-    grows a pathological sentence, this fails loudly instead of the
-    driver's kg_* rows going red."""
+    """The deterministic corpus stays within the 400-pair cap in every
+    sentence, so no sentence of it is flagged ``t_capped`` and the
+    candidate_pairs surface drops none of it.  No extractor depends on
+    this any more (every slot decodes every sentence exactly); it keeps
+    the corpus free of pathological sentences, which fail loudly here
+    if corpus synthesis ever grows one."""
     from rex_spark.kernels.extractor import extract_mentions
     from rex_spark.kernels.synth import make_pages
     from rex_spark.kernels.textnorm import html_to_text, sent_seg, tokenize
