@@ -18,8 +18,8 @@ pages DataFrame so the KG job can start from the raw dump:
 
 Parsing is pure stdlib (gzip members via zlib, headers via bytes
 splits).  A writer builds fixtures; corrupt members/records raise
-ValueError so the caller can route through tolerant_map the way every
-other decode surface does.
+ValueError; ``expand_warc_records``' ``corrupt`` policy decides whether
+that fails the task or ends the file.
 """
 
 from __future__ import annotations
@@ -167,42 +167,34 @@ def parse_warc(payload: bytes) -> List[Tuple[str, dt.datetime, bytes]]:
 def expand_warc_records(files, schema, corrupt: str):
     """binaryFile rows -> one ``schema`` row per WARC response record:
     (url, warc_ts, html), then null for every further field of
-    ``schema``.  Records stream out of iter_warc and leave in bounded
-    frames, so a 1 GB crawl file never becomes one pandas frame.
+    ``schema``.  Records stream out of iter_warc inside one
+    ``crossing.fan_out`` and leave in bounded batches, so a 1 GB crawl
+    file never becomes one batch.
 
     ``corrupt``: ``"fail"`` — a bad byte fails the task — or
     ``"skip"`` — keep every record parsed before the first bad byte of
     a file and drop the rest of THAT file only (the fuzz gate pins
     that parse errors are always ValueError, so "skip" can't mask a
     programming bug)."""
-    import pandas as pd
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StructField
 
-    names = [f.name for f in schema.fields]
-    pad = (None,) * (len(names) - 3)
+    from ..operators.crossing import fan_out
 
-    def expand(batches):
-        CHUNK_ROWS = 2048
-        rows = []
-        for pdf in batches:
-            for content in pdf["content"]:
-                it = iter_warc(bytes(content))
-                while True:
-                    try:
-                        row = next(it)
-                    except StopIteration:
-                        break
-                    except ValueError:
-                        if corrupt == "fail":
-                            raise
-                        break  # rest of this file; prior records kept
-                    rows.append(row + pad)
-                    if len(rows) >= CHUNK_ROWS:
-                        yield pd.DataFrame(rows, columns=names)
-                        rows = []
-        if rows:
-            yield pd.DataFrame(rows, columns=names)
+    def records(content):
+        try:
+            for url, ts, html in iter_warc(content):
+                yield url, int(ts.timestamp()) * 1_000_000, html  # whole seconds
+        except ValueError:
+            if corrupt == "fail":
+                raise
+            # "skip": the rest of this file; prior records kept
 
-    return files.select("content").mapInPandas(expand, schema=schema)
+    fields = [schema["url"], StructField("warc_us", LongType(), False), schema["html"]]
+    return fan_out(files, (), ("content",), records, fields).select(
+        "url", "warc_ts", "html",
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields[3:]],
+    )
 
 
 def read_warc(spark, path: str, corrupt: str = "fail"):

@@ -98,16 +98,20 @@ def _html_to_text_reference(html: str) -> str:
     return parser.text()
 
 
-# One tag token: optional end-slash, tag name, attributes (quoted
-# values may contain '>'; unquoted '<' is NOT allowed — HTMLParser
-# treats such tags as bogus text, so the fast path must bail there),
-# optional self-closing slash.  Tag-name charset is stricter than
-# HTMLParser's — anything outside it makes the fast path bail to the
-# reference parser, as does an attribute section that doesn't start
-# with whitespace or '/' (see _fast_parts).
+# One tag token: optional end-slash, tag name, attributes, optional
+# self-closing slash.  Attributes are read as HTMLParser reads them: an
+# '=' and its value (quoted, which may hold '>', or bare, which may end
+# in '/') only right after a name, atomically like its greedy scan.  A
+# '<', or an '=' or quote anywhere else, fails the match and the fast
+# path bails (HTMLParser ends '<E ">">' and '<x ="a>b">' at the first
+# '>').  Tag-name charset is stricter than HTMLParser's — anything
+# outside it makes the fast path bail to the reference parser, as does
+# an attribute section that doesn't start with whitespace or '/' (see
+# _fast_parts).
 _TAG_RE = re.compile(
     r"<(/?)([a-zA-Z][a-zA-Z0-9:_-]*)"
-    r"((?:[^<>\"']|\"[^\"]*\"|'[^']*')*?)(/?)>"
+    r"((?:(?<=[\s/\"'])(?>[^\s\"'<>=/]+\s*=+\s*(?:\"[^\"]*\"|'[^']*'|(?![\"'])[^<>\s]*))"
+    r"|[^<>\"'=])*?)(/?)>"
 )
 # HTMLParser's endtagfind only accepts '</ name >' (optional whitespace)
 # as a CDATA terminator; '</script foo>' / '</script/>' are swallowed as
@@ -153,6 +157,8 @@ def _fast_parts(html: str):
             # junk glued to the tag name (<E'...>): HTMLParser's
             # tolerant scanner may call this bogus data — reference only
             return None
+        if end_slash and ('"' in _attrs or "'" in _attrs):
+            return None  # HTMLParser ends an end tag at its first '>'
         tag = name.lower()
         if end_slash:
             if tag in _SKIP_SUBTREES:

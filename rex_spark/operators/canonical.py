@@ -41,9 +41,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernels import kb
-from ..kernels.hashing import band_keys, minhash_params, minhash_signature
+from ..kernels.hashing import minhash_params
 from ..kernels.textnorm import char_shingles
-from .dedup import lsh_pairs, lsh_table
+from .dedup import lsh_pairs, lsh_table, shingle_band_keys
 
 NUM_PERM = 64
 NUM_BANDS = 16
@@ -102,6 +102,10 @@ def _exact_norm_edges(nodes: DataFrame) -> DataFrame:
     )
 
 
+def _norm_shingles(norm: str | None) -> list:
+    return char_shingles(norm or "", 3)
+
+
 def _lsh_edges(nodes: DataFrame) -> DataFrame:
     """MinHash-LSH candidates over char-3-gram shingles of ``norm``,
     verified with exact Jaccard (J6): dedup.lsh_table + dedup.lsh_pairs,
@@ -109,10 +113,7 @@ def _lsh_edges(nodes: DataFrame) -> DataFrame:
     Python pass; shingle-less surfaces are dropped; band buckets over
     MAX_BUCKET are dropped before the self-join; the verified edges are
     checkpointed eagerly."""
-    table = lsh_table(
-        nodes, "node_id", "norm", lambda norm: char_shingles(norm or "", 3),
-        NUM_PERM, NUM_BANDS,
-    )
+    table = lsh_table(nodes, "node_id", "norm", _norm_shingles, NUM_PERM, NUM_BANDS)
     return lsh_pairs(table, "node_id", JACCARD_THRESHOLD, max_bucket=MAX_BUCKET).select(
         "a", "b"
     )
@@ -334,18 +335,17 @@ def _driver_similarity_edges(rows) -> set:
         if len(ids) > 1:
             rep = min(ids)
             edges.update((i, rep) for i in ids if i != rep)
-    # (c) MinHash-LSH banding + exact-Jaccard verification
-    params = minhash_params(NUM_PERM)
+    # (c) MinHash-LSH banding (lsh_table's kernels) + exact-Jaccard verification
+    kept, shs, keys = shingle_band_keys(
+        [r["norm"] for r in rows], _norm_shingles, minhash_params(NUM_PERM), NUM_BANDS
+    )
     shingle_of = {}
     buckets: dict = {}
-    for r in rows:
-        sh = sorted(set(char_shingles(r["norm"] or "", 3)))
-        if not sh:
-            continue
-        shingle_of[r["node_id"]] = set(sh)
-        sig = minhash_signature(sh, params)
-        for band_id, key in enumerate(band_keys(sig, NUM_BANDS)):
-            buckets.setdefault((band_id, key), []).append(r["node_id"])
+    for i, sh, row_keys in zip(kept, shs, keys.tolist()):
+        node_id = rows[i]["node_id"]
+        shingle_of[node_id] = set(sh)
+        for band_id, key in enumerate(row_keys):
+            buckets.setdefault((band_id, key), []).append(node_id)
     cand = set()
     for ids in buckets.values():
         if len(ids) > MAX_BUCKET:

@@ -31,7 +31,7 @@ where expressible (exact variants) and rows-only checks otherwise.
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Iterator
+from typing import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -158,6 +158,22 @@ NUM_PERM = 128
 NUM_BANDS = 32
 
 
+def shingle_band_keys(
+    texts: Sequence[str | None], shingle_fn: Callable, params: tuple, num_bands: int
+) -> tuple:
+    """texts -> ``(kept, shingles, keys)``: the positions of the texts
+    that have shingles (the rest cannot LSH-link), their sorted distinct
+    shingles and their ``(len(kept), num_bands)`` uint64 band keys."""
+    kept, shs = [], []
+    for i, text in enumerate(texts):
+        sh = sorted(set(shingle_fn(text)))
+        if sh:
+            kept.append(i)
+            shs.append(sh)
+    # a zero-row batch still has a typed (0, num_bands) matrix
+    return kept, shs, band_keys_batch(minhash_signatures_batch(shs, params), num_bands)
+
+
 def lsh_table(
     df: DataFrame,
     id_col: str,
@@ -168,8 +184,8 @@ def lsh_table(
 ) -> DataFrame:
     """One Arrow pass: ``(id_col, shingles, band_keys)`` — the sorted
     distinct shingles of ``text_col`` and the ``num_bands`` LSH band
-    keys of their MinHash signature.  Rows with no shingles are dropped
-    (they cannot LSH-link).
+    keys of their MinHash signature (:func:`shingle_band_keys`).  Rows
+    with no shingles are dropped (they cannot LSH-link).
 
     Band keys follow one signed CONVENTION: the uint64 key's bits
     viewed as int64 (two's complement), NOT an offset shift — the
@@ -189,19 +205,14 @@ def lsh_table(
 
     def lsh_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            ids, shs = [], []
-            texts = batch.column(text_col).to_pylist()
-            for row_id, text in zip(batch.column(id_col).to_pylist(), texts):
-                sh = sorted(set(shingle_fn(text)))
-                if sh:
-                    ids.append(row_id)
-                    shs.append(sh)
-            # a zero-row batch still has a typed (0, num_bands) matrix
-            keys = band_keys_batch(minhash_signatures_batch(shs, params), num_bands)
-            offsets = np.arange(0, num_bands * (len(ids) + 1), num_bands, dtype=np.int32)
+            kept, shs, keys = shingle_band_keys(
+                batch.column(text_col).to_pylist(), shingle_fn, params, num_bands
+            )
+            take = pa.array(kept, pa.int32())
+            offsets = np.arange(0, num_bands * (len(kept) + 1), num_bands, dtype=np.int32)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(ids, pa.int64()),
+                    batch.column(id_col).take(take).cast(pa.int64()),
                     pa.array(shs, pa.list_(pa.string())),
                     pa.ListArray.from_arrays(
                         offsets, pa.array(keys.reshape(-1).view(np.int64))

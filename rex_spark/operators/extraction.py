@@ -1,7 +1,8 @@
 """Extraction plane: mentions (NER), candidate pairs (J1), scored triples.
 
 The text plane is ``extract_plane``: pages (or filtered docs) ->
-sentences + mentions + scored triples in ONE Arrow crossing, with the
+sentences + mentions + scored triples in ONE Arrow crossing
+(``crossing.fan_out``, the one per-row Python crossing), with the
 per-entity fan-out left to JVM projections (``plane_sentences`` /
 ``plane_mentions`` / ``plane_triples``).  Mentions and pairs never
 leave the executor, so the whole text->triple path is shuffle-free.
@@ -10,7 +11,8 @@ It is the only Spark-side caller of the sentence extractor
 (kernels/extractor.py), which the tests compare it with row for row.
 ``decode_sentences`` is the one Arrow crossing every per-sentence model
 slot (casrel, usm, scaffolded mechanisms) runs over the plane's
-sentence rows.
+sentence rows; the slots decode from the plane's own mentions, so
+no slot runs the mention matcher again.
 
 ``candidate_pairs`` and ``filter_valid_mentions`` are the pair-level
 query surfaces over a mentions table (REx exposes the same
@@ -24,7 +26,7 @@ in-partition via explode, rather than self-joining the mentions table
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Iterator, List, Sequence
+from typing import Callable, Iterable, List, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,7 +35,6 @@ from pyspark.sql.types import (
     BooleanType,
     FloatType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -41,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernels.extractor import extract_mentions, extract_sentence
+from .crossing import fan_out
 
 # the row shape every plugin extractor (casrel, usm, registered
 # mechanisms) emits; plane_triples projects to the same columns
@@ -151,15 +153,12 @@ def candidate_pairs(
 # C fast path, while list-of-dict struct columns fall back to per-
 # element Python iteration — measurably slower at millions of spans
 # per batch.  arrays_zip on the JVM side reassembles the structs.
-# warc_ts crosses the UDF boundary as int64 epoch-micros (warc_us):
-# timestamp columns pay tz/unit conversion per element on both sides
-# of the Arrow boundary, a plain long does not; extract_plane converts
-# back with timestamp_micros (JVM-side, free), so the plane it returns
-# carries warc_ts (the StageStore lineage watermark).
+# url, warc_ts and lang are the page's own columns (fan_out's keys);
+# warc_ts is the StageStore lineage watermark.
 PLANE_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
-        StructField("warc_us", LongType(), False),
+        StructField("warc_ts", TimestampType(), False),
         StructField("lang", StringType(), True),
         StructField("sent_id", IntegerType(), False),
         StructField("sent", StringType(), True),
@@ -183,7 +182,7 @@ PLANE_SCHEMA = StructType(
 
 def extract_plane(pages: DataFrame, include_text: bool = True) -> DataFrame:
     """pages -> per-sentence rows with nested mention/triple arrays, in
-    ONE Arrow crossing.
+    ONE Arrow crossing (``crossing.fan_out``).
 
     ``pages`` is a pages table (``html`` is stripped with html_to_text
     inside the crossing) or a docs table carrying ``clean_text`` (e.g.
@@ -193,7 +192,7 @@ def extract_plane(pages: DataFrame, include_text: bool = True) -> DataFrame:
     triples) would pay a full JVM->Arrow->Python->Arrow->JVM round trip
     per step over the whole text plane; at benchmark scale those
     crossings dominate the actual kernel CPU.  This operator runs the
-    kernels back to back inside one mapInArrow and leaves the fan-out
+    kernels back to back inside one crossing and leaves the fan-out
     to JVM-side ``explode`` (plane_mentions / plane_triples), which is
     narrow and cheap.  Output is pinned identical to the in-process
     kernel (extract_document / extract_mentions) by
@@ -207,157 +206,74 @@ def extract_plane(pages: DataFrame, include_text: bool = True) -> DataFrame:
     them (P9 contract) — they are the sentences ``candidate_pairs``
     drops.
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     from ..kernels.textnorm import html_to_text, sent_seg, tokenize
 
     from_docs = "clean_text" in pages.columns
-    src = pages.select(
-        "url",
-        F.unix_micros("warc_ts").alias("warc_us"),
-        "lang",
-        "clean_text" if from_docs else "html",
-    )
-
     # Catalyst cannot prune columns THROUGH a map-in-arrow UDF, so
     # pruning is an operator parameter: consumers that only need
     # mentions + triples (the KG pipeline's graph plane) skip
     # materializing the sentence text and token arrays — roughly half
     # the Arrow bytes.
-    schema = (
-        PLANE_SCHEMA
-        if include_text
-        else StructType(
-            [f for f in PLANE_SCHEMA.fields if f.name not in ("sent", "tokens")]
-        )
-    )
-    names = [f.name for f in schema.fields]
-    out_schema = to_arrow_schema(schema)
-    # url, warc_us and lang lead both schemas: they are taken from the
-    # input rows, the remaining columns are built per sentence
-    built = list(out_schema)[3:]
+    text_cols = ("sent", "tokens")
+    fields = [
+        f for f in PLANE_SCHEMA.fields[3:] if include_text or f.name not in text_cols
+    ]
 
-    # mapInArrow, not mapInPandas: RecordBatches in and out, no pandas
-    # block construction / dtype inference on either side of the
-    # boundary — at millions of rows that layer is pure overhead.
-    def plane_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            src_rows = []
-            cols = {f.name: [] for f in built}
-            # to_pandas + tolist: several times faster than to_pylist;
-            # the key columns never become Python objects
-            raws = rb.column(3).to_pandas().tolist()
-            zh = pc.fill_null(pc.equal(rb.column(2), "zh"), False).to_pandas()
-            for i, (raw, is_zh) in enumerate(zip(raws, zh.tolist())):
-                if raw is None:
-                    text = ""
-                else:
-                    text = raw if from_docs else html_to_text(raw)
-                seg_lang = "zh" if is_zh else "en"
-                for sid, sent in enumerate(sent_seg(text, lang=seg_lang)):
-                    toks = tokenize(sent, lang=seg_lang)
-                    src_rows.append(i)
-                    cols["sent_id"].append(sid)
-                    if include_text:
-                        cols["sent"].append(sent)
-                        cols["tokens"].append(toks)
-                    ms = extract_mentions(toks)
-                    cols["m_surface"].append([m[0] for m in ms])
-                    cols["m_type"].append([m[1] for m in ms])
-                    cols["m_start"].append([m[2] for m in ms])
-                    cols["m_end"].append([m[3] for m in ms])
-                    cols["t_capped"].append(len(ms) * len(ms) > PAIR_CAP)
-                    tr = extract_sentence(toks, mentions=ms)
-                    cols["t_subj"].append([t[0] for t in tr])
-                    cols["t_pred"].append([t[1] for t in tr])
-                    cols["t_obj"].append([t[2] for t in tr])
-                    cols["t_hs"].append([t[3] for t in tr])
-                    cols["t_he"].append([t[4] for t in tr])
-                    cols["t_ts"].append([t[5] for t in tr])
-                    cols["t_te"].append([t[6] for t in tr])
-                    cols["t_score"].append([t[7] for t in tr])
-            take = pa.array(src_rows, type=pa.int32())
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(k).take(take) for k in range(3)]
-                + [pa.array(cols[f.name], type=f.type) for f in built],
-                schema=out_schema,
+    def sentences(lang, raw):
+        text = "" if raw is None else raw if from_docs else html_to_text(raw)
+        seg_lang = "zh" if lang == "zh" else "en"
+        for sid, sent in enumerate(sent_seg(text, lang=seg_lang)):
+            toks = tokenize(sent, lang=seg_lang)
+            ms = extract_mentions(toks)
+            # field-major: one zip per sentence, not one list per field
+            surface, etype, start, end = tuple(zip(*ms)) or ((),) * 4
+            tr = tuple(zip(*extract_sentence(toks, mentions=ms))) or ((),) * 8
+            yield (
+                sid,
+                *((sent, toks) if include_text else ()),
+                etype, start, end, surface,
+                *tr,
+                len(ms) * len(ms) > PAIR_CAP,
             )
 
-    return src.mapInArrow(plane_batches, schema=schema).select(
-        *[
-            F.timestamp_micros("warc_us").alias("warc_ts") if n == "warc_us" else n
-            for n in names
-        ]
+    return fan_out(
+        pages,
+        ("url", "warc_ts", "lang"),
+        ("lang", "clean_text" if from_docs else "html"),
+        sentences,
+        fields,
     )
 
 
 def decode_sentences(
     sentences: DataFrame,
-    decode: Callable[[List[str]], Iterable[tuple]],
+    decode: Callable[[List[str], List[tuple]], Iterable[tuple]],
     fields: Sequence[StructField],
 ) -> DataFrame:
     """sentence rows -> ``(url, warc_ts, sent_id, *row)`` for every
-    ``row`` of ``decode(tokens)``, in ONE Arrow crossing: the Spark
-    side of a per-sentence model slot (casrel, usm, a scaffolded
-    mechanism).
+    ``row`` of ``decode(tokens, mentions)``, in ONE Arrow crossing
+    (``crossing.fan_out``): the Spark side of a per-sentence model slot
+    (casrel, usm, a scaffolded mechanism).
 
-    ``sentences`` carries url, warc_ts, sent_id and tokens (the
-    columns of ``plane_sentences`` of a plane built with text);
-    ``decode`` is called once per sentence with its token list and
-    returns rows shaped like ``fields``.  warc_ts crosses as epoch
-    micros, as in extract_plane.
+    ``sentences`` is ``plane_sentences`` of a plane built with text.
+    ``mentions`` are the plane's, as ``extract_mentions`` gives them:
+    ``(surface, type, start, end)`` tuples.  ``decode`` returns rows
+    shaped like ``fields``.
     """
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    schema = StructType(
-        [
-            StructField("url", StringType(), False),
-            StructField("warc_us", LongType(), True),
-            StructField("sent_id", IntegerType(), False),
-            *fields,
-        ]
-    )
-    out_schema = to_arrow_schema(schema)
-
-    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in it:
-            src, rows = [], []
-            # to_pandas + tolist: several times faster than
-            # ListArray.to_pylist for the token lists
-            for i, toks in enumerate(rb.column(3).to_pandas()):
-                for row in decode(toks.tolist()):
-                    src.append(i)
-                    rows.append(row)
-            # the key columns never become Python objects: each output
-            # row takes them from its sentence's input row
-            take = pa.array(src, type=pa.int32())
-            cols = list(zip(*rows)) or [()] * len(fields)
-            yield pa.RecordBatch.from_arrays(
-                [rb.column(k).take(take) for k in range(3)]
-                + [pa.array(c, type=f.type) for c, f in zip(cols, list(out_schema)[3:])],
-                schema=out_schema,
-            )
-
-    return (
-        sentences.select(
-            "url", F.unix_micros("warc_ts").alias("warc_us"), "sent_id", "tokens"
-        )
-        .mapInArrow(batches, schema=schema)
-        .select(
-            "url",
-            F.timestamp_micros("warc_us").alias("warc_ts"),
-            "sent_id",
-            *[f.name for f in fields],
-        )
+    return fan_out(
+        sentences,
+        ("url", "warc_ts", "sent_id"),
+        ("tokens", "m_surface", "m_type", "m_start", "m_end"),
+        lambda tokens, *m_cols: decode(tokens, list(zip(*m_cols))),
+        fields,
     )
 
 
 def plane_sentences(plane: DataFrame) -> DataFrame:
-    """Sentence rows; ``sent``/``tokens`` only when the plane has them."""
+    """Sentence rows with their mention arrays; ``sent``/``tokens`` only
+    when the plane has them."""
     cols = ("url", "warc_ts", "lang", "sent_id", "sent", "tokens")
+    cols += ("m_type", "m_start", "m_end", "m_surface")
     return plane.select(*[c for c in cols if c in plane.columns])
 
 

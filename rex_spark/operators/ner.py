@@ -3,7 +3,7 @@
 Two implementations of the same semantics, both distributed:
 
 - :func:`decode_mentions_udf` — the REx-parity path: per-row
-  ``mapInPandas`` over (tokens, tags) arrays calling the pinned
+  ``crossing.fan_out`` over (tokens, tags) arrays calling the pinned
   BIO/BMES decode kernel (rex/utils/tagging.py:4-79 semantics,
   re-expressed in kernels/tagging.py).  This is how a real tagger
   model's output is decoded: the sentence fits in a row, no cross-row
@@ -22,9 +22,6 @@ on the same tagged input.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -36,6 +33,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernels.tagging import decode_tag_seq
+from .crossing import fan_out
 
 _MENTION_SCHEMA = StructType(
     [
@@ -112,53 +110,38 @@ def viterbi_decode_mentions(
     so count_illegal_tags on the output is always 0 (pinned by tests).
     Narrow (no shuffle), Arrow-batched.
     """
+    from ..kernels.crf import viterbi_tags
+
     labels = labels or VITERBI_LABELS
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels.crf import viterbi_tags
+    def spans(tokens, emissions):
+        tags = viterbi_tags([list(e) for e in emissions], labels, scheme)
+        return _span_rows(tokens, tags, sep)
 
-        for pdf in it:
-            out = {k: [] for k in ("doc_id", "ent_type", "start", "end", "surface")}
-            for doc_id, tokens, emissions in zip(
-                pdf["doc_id"], pdf["tokens"], pdf["emissions"]
-            ):
-                toks = list(tokens)
-                tags = viterbi_tags([list(e) for e in emissions], labels, scheme)
-                joined = [t + sep for t in toks[:-1]] + toks[-1:] if toks else []
-                for surface, etype, (s, e) in decode_tag_seq(joined, tags):
-                    out["doc_id"].append(doc_id)
-                    out["ent_type"].append(etype)
-                    out["start"].append(s)
-                    out["end"].append(e)
-                    out["surface"].append(surface.rstrip(sep))
-            yield pd.DataFrame(out)
-
-    return scored.mapInPandas(batches, schema=_MENTION_SCHEMA)
+    return fan_out(
+        scored, ("doc_id",), ("tokens", "emissions"), spans, _MENTION_SCHEMA.fields[1:]
+    )
 
 
 def decode_mentions_udf(tagged: DataFrame, sep: str = " ") -> DataFrame:
     """W1 pUDF path: BIO/BMES decode kernel over (tokens, tags) rows.
 
-    Narrow (no shuffle); Arrow-batched; one input row -> k mention rows.
+    Narrow (no shuffle); one input row -> k mention rows.
     """
+    return fan_out(
+        tagged, ("doc_id",), ("tokens", "tags"),
+        lambda tokens, tags: _span_rows(tokens, tags, sep), _MENTION_SCHEMA.fields[1:],
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("doc_id", "ent_type", "start", "end", "surface")}
-            for doc_id, tokens, tags in zip(
-                pdf["doc_id"], pdf["tokens"], pdf["tags"]
-            ):
-                toks = list(tokens)
-                joined = [t + sep for t in toks[:-1]] + toks[-1:] if toks else []
-                for surface, etype, (s, e) in decode_tag_seq(joined, list(tags)):
-                    out["doc_id"].append(doc_id)
-                    out["ent_type"].append(etype)
-                    out["start"].append(s)
-                    out["end"].append(e)
-                    out["surface"].append(surface.rstrip(sep))
-            yield pd.DataFrame(out)
 
-    return tagged.mapInPandas(batches, schema=_MENTION_SCHEMA)
+def _span_rows(tokens, tags, sep):
+    """One sentence's (tokens, tags) -> (ent_type, start, end, surface)
+    rows through the pinned decode kernel."""
+    joined = [t + sep for t in tokens[:-1]] + tokens[-1:]
+    return [
+        (etype, s, e, surface.rstrip(sep))
+        for surface, etype, (s, e) in decode_tag_seq(joined, tags)
+    ]
 
 
 def decode_runs_sql(tagged: DataFrame) -> DataFrame:

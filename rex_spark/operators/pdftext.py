@@ -2,8 +2,8 @@
 
 The web-corpus text plane treats PDFs the way it treats HTML: a binary
 payload column in, clean text out, one row per document, tolerant of
-per-document corruption.  The fixture corpus wraps the SAME
-deterministic synthetic page text the KG pipeline consumes
+per-document corruption (``crossing.fan_out``).  The fixture corpus
+wraps the SAME deterministic synthetic page text the KG pipeline consumes
 (kernels/synth.make_page), so the oracle gold is the source text
 itself — the extractor is never run on the gold side, certifying the
 encode -> distributed-extract round-trip exactly like the media-codec
@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .crossing import fan_out
 
 PDF_CORPUS_SCHEMA = StructType(
     [
@@ -118,18 +120,23 @@ def make_pdf_corpus(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
 
 
 def pdf_text_row(doc_id: int, payload: bytes):
-    """Scalar kernel shared by the distributed path and any replica."""
+    """One document's ``PDF_TEXT_SCHEMA`` row."""
+    return (doc_id, *_pdf_text_fields(payload))
+
+
+def _pdf_text_fields(payload: bytes):
+    """(status, n_pages, n_chars, text_md5) of one payload."""
     from ..kernels.pdf import extract_pdf_text
 
     try:
         pages = extract_pdf_text(payload)
     except NotImplementedError:
-        return (doc_id, "unsupported", None, None, None)
+        return ("unsupported", None, None, None)
     except ValueError:
-        return (doc_id, "corrupt", None, None, None)
+        return ("corrupt", None, None, None)
     text = "\n".join(pages)
     return (
-        doc_id, "ok", len(pages), len(text),
+        "ok", len(pages), len(text),
         hashlib.md5(text.encode("utf-8")).hexdigest(),
     )
 
@@ -140,16 +147,7 @@ def extract_pdf_texts(pdfs: DataFrame) -> DataFrame:
     columns leave the scan stage; corrupt/encrypted docs become flagged
     rows, never stage failures (the html_to_text tolerance contract
     extended to the PDF plane)."""
-    src = pdfs.select("doc_id", "payload")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                pdf_text_row(int(i), bytes(p))
-                for i, p in zip(pdf["doc_id"], pdf["payload"])
-            ]
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in PDF_TEXT_SCHEMA.fields]
-            ).astype({"n_pages": "Int32"} if rows else {})
-
-    return src.mapInPandas(batches, schema=PDF_TEXT_SCHEMA)
+    return fan_out(
+        pdfs, ("doc_id",), ("payload",),
+        lambda payload: (_pdf_text_fields(payload),), PDF_TEXT_SCHEMA.fields[1:],
+    )

@@ -34,13 +34,16 @@ from typing import List, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 
-from ..kernels.extractor import extract_mentions, score_pair, tail_band
+from ..kernels.extractor import Mention, score_pair, tail_band
 from ..kernels.spans import closest_span_pairs
 from .extraction import TRIPLES_SCHEMA, decode_sentences
 
 
-def pointer_decode_sentence(tokens: Sequence[str]) -> List[Tuple]:
-    """One sentence -> scored triples via the two-stage pointer decode.
+def pointer_decode_sentence(
+    tokens: Sequence[str], mentions: Sequence[Mention]
+) -> List[Tuple]:
+    """One sentence and its ``extract_mentions`` -> scored triples via
+    the two-stage pointer decode.
 
     Returns rows shaped like kernels.extractor.extract_sentence.  The
     output equals the decode over full-length 0/1 pointer vectors and
@@ -49,12 +52,11 @@ def pointer_decode_sentence(tokens: Sequence[str]) -> List[Tuple]:
     the band scan sees every object the full scan would keep, in the
     same order.
     """
-    ments = extract_mentions(tokens)
-    starts = [m[2] for m in ments]  # ascending and distinct by construction
-    by_span = {(m[2], m[3] - 1): m for m in ments}
+    starts = [m[2] for m in mentions]  # ascending and distinct by construction
+    by_span = {(m[2], m[3] - 1): m for m in mentions}
 
     # stage 1: subject head/tail pointers
-    subj_spans = closest_span_pairs(starts, sorted({m[3] - 1 for m in ments}))
+    subj_spans = closest_span_pairs(starts, sorted({m[3] - 1 for m in mentions}))
 
     out: List[Tuple] = []
     for hs, he in subj_spans:
@@ -65,7 +67,7 @@ def pointer_decode_sentence(tokens: Sequence[str]) -> List[Tuple]:
         rel_ptrs: dict = {}
         rel_score: dict = {}
         lo, hi = tail_band(starts, subj[3])
-        for obj in ments[lo:hi]:
+        for obj in mentions[lo:hi]:
             scored = score_pair(tokens, subj, obj)
             if scored is None:
                 continue
@@ -93,7 +95,7 @@ def casrel_extract(sentences: DataFrame) -> DataFrame:
     """sentences -> triples through the pointer-decode path (M3 slot).
 
     ``sentences`` is ``plane_sentences`` of a plane built with text
-    (url, warc_ts, sent_id and tokens are read); the output has
+    (url, warc_ts, sent_id, tokens and m_* are read); the output has
     TRIPLES_SCHEMA, the columns of ``plane_triples`` — so
     ``run_pipeline(extractor="casrel")`` swaps it in for the plane's
     own triples.

@@ -15,22 +15,27 @@ one (doc, class) -> L x L matrix, batched through Arrow).  A span cell
 band — so the output is every sub-span of each maximal run, which is
 what a span-enumeration model emits before span-NMS.
 
-Scale notes: the matrix is built per (doc, class) inside the UDF and
-never crosses the Arrow boundary (only decoded spans do); ``max_len``
-bounds the O(L^2) cell count exactly as the reference's max sequence
-length does.  Narrow plan: no shuffle from scan to span rows.
+Scale notes: the matrix is built per (doc, class) inside the
+``crossing.fan_out`` crossing and never crosses the Arrow boundary
+(only decoded spans do); ``max_len`` bounds the O(L^2) cell count
+exactly as the reference's max sequence length does.  Narrow plan: no shuffle from scan to span rows.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField
 
 from ..kernels.positions import decode_pointer_matrix
+from .crossing import fan_out
+
+_SPAN_FIELDS = [
+    StructField("ent_type", StringType(), True),
+    StructField("start_pos", LongType(), True),
+    StructField("end_pos", LongType(), True),
+]
 
 
 def _norm_tokens(col):
@@ -58,26 +63,14 @@ def global_pointer_extract(
     through the span-matrix scorer + pointer-matrix decode."""
     classes = sorted(type_specs.items())
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {k: [] for k in ("doc_id", "ent_type", "start_pos", "end_pos")}
-            for doc_id, tokens in zip(pdf["doc_id"], pdf["tokens"]):
-                toks = list(tokens)[:max_len]
-                lengths = np.array([len(t) for t in toks], dtype=np.int64)
-                if not len(toks):
-                    continue
-                mat = [
-                    _score_matrix(lengths, lo, hi) for _name, (lo, hi) in classes
-                ]
-                for s, e_excl, cls in decode_pointer_matrix(mat):
-                    out["doc_id"].append(doc_id)
-                    out["ent_type"].append(classes[cls][0])
-                    out["start_pos"].append(s)
-                    out["end_pos"].append(e_excl)
-            yield pd.DataFrame(out)
+    def spans(tokens):
+        toks = tokens[:max_len]
+        if not toks:
+            return
+        lengths = np.array([len(t) for t in toks], dtype=np.int64)
+        mat = [_score_matrix(lengths, lo, hi) for _name, (lo, hi) in classes]
+        for s, e_excl, cls in decode_pointer_matrix(mat):
+            yield classes[cls][0], s, e_excl
 
     src = documents.select("doc_id", _norm_tokens(F.col("text")).alias("tokens"))
-    return src.mapInPandas(
-        batches,
-        schema="doc_id long, ent_type string, start_pos long, end_pos long",
-    )
+    return fan_out(src, ("doc_id",), ("tokens",), spans, _SPAN_FIELDS)

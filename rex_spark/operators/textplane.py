@@ -2,9 +2,9 @@
 
 ``clean_pages`` is pages -> docs, the F12 contract (byte-identical
 clean_text per url): the docs table that run_pipeline returns, doc
-filters read and streaming near-dup shingles.  Sentences, mentions and triples come from
-``operators.extraction.extract_plane``, which runs the same strip
-inside its own single Arrow crossing.
+filters read and streaming near-dup shingles (``crossing.fan_out``).
+Sentences, mentions and triples come from ``extraction.extract_plane``,
+which runs the same strip inside its own single crossing.
 
 Scale note: html never travels past the strip (select/prune
 immediately), and the strip is narrow (no shuffle from parquet scan to
@@ -13,9 +13,6 @@ docs).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -26,6 +23,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernels.textnorm import html_to_text
+from .crossing import fan_out
 
 PAGES_SCHEMA = StructType(
     [
@@ -53,20 +51,10 @@ def clean_pages(pages: DataFrame) -> DataFrame:
     The html column is dropped inside the same task; only
     (url, warc_ts, lang, clean_text) ever reach a shuffle.
     """
-    src = pages.select("url", "warc_ts", "lang", "html")
 
-    def strip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "warc_ts": pdf["warc_ts"],
-                    "lang": pdf["lang"],
-                    "clean_text": [
-                        html_to_text(h) if h is not None else ""
-                        for h in pdf["html"]
-                    ],
-                }
-            )
+    def strip(html):
+        yield (html_to_text(html) if html is not None else "",)
 
-    return src.mapInPandas(strip_batches, schema=DOCS_SCHEMA)
+    return fan_out(
+        pages, ("url", "warc_ts", "lang"), ("html",), strip, DOCS_SCHEMA.fields[3:]
+    )

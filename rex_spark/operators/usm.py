@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, StringType, StructField
 
 from ..kernels import kb
-from ..kernels.extractor import extract_mentions, scored_pairs
+from ..kernels.extractor import Mention, scored_pairs
 from .extraction import TRIPLES_SCHEMA, decode_sentences
 
 Link = Tuple[int, int, int]  # (i, j, link_type)
@@ -69,27 +69,27 @@ _LABEL_IDX = {v["string"]: k for k, v in LABEL_MAP.items()}
 
 
 def _usm_encode(
-    tokens: Sequence[str],
+    tokens: Sequence[str], mentions: Sequence[Mention]
 ) -> Tuple[List[Link], List[Link], List[Link], dict]:
     """Stand-in encoder: the (ttl, ltl, tll) link sets a trained USM
-    would emit above threshold for this sentence, plus the
-    {(hs, he, rel, ts, te) -> score} map of the pairs that produced
-    them (spans in the inclusive link-index convention) — kept so the
-    scored extraction path doesn't re-run the pair scorer.
+    would emit above threshold for this sentence (given its
+    ``extract_mentions``), plus the {(hs, he, rel, ts, te) -> score} map
+    of the pairs that produced them (spans in the inclusive link-index
+    convention) — kept so the scored extraction path doesn't re-run the
+    pair scorer.
 
     Pairs come from ``scored_pairs``, the gap-banded scan of the fused
     plane, so every sentence is encoded, however many mentions it has."""
-    ments = extract_mentions(tokens)
     ttl: set = set()
     ltl: set = set()
     tll: set = set()
     pair_scores: dict = {}
-    for surf, etype, s, e in ments:
+    for surf, etype, s, e in mentions:
         ttl.add((s, e - 1, 0))  # H2T span link
         li = _LABEL_IDX[etype]
         ltl.add((li, s, 0))  # L2H
         ltl.add((li, e - 1, 1))  # L2T
-    for head, tail, rel, score in scored_pairs(tokens, ments):
+    for head, tail, rel, score in scored_pairs(tokens, mentions):
         ri = _LABEL_IDX[rel]
         hs, he = head[2], head[3] - 1
         ts, te = tail[2], tail[3] - 1
@@ -104,9 +104,9 @@ def _usm_encode(
 
 
 def usm_links(
-    tokens: Sequence[str],
+    tokens: Sequence[str], mentions: Sequence[Mention]
 ) -> Tuple[List[Link], List[Link], List[Link]]:
-    ttl, ltl, tll, _scores = _usm_encode(tokens)
+    ttl, ltl, tll, _scores = _usm_encode(tokens, mentions)
     return ttl, ltl, tll
 
 
@@ -185,23 +185,23 @@ def usm_decode(
 
 
 def usm_sentence(
-    tokens: Sequence[str],
+    tokens: Sequence[str], mentions: Sequence[Mention]
 ) -> Tuple[List[Tuple[str, str, int, int]], List[Tuple]]:
-    """tokens -> (typed entity spans, relation triples) through the
-    full encode+decode.  Spans are (surface, type, start, end_excl);
+    """tokens + mentions -> (typed entity spans, relation triples) through
+    the full encode+decode.  Spans are (surface, type, start, end_excl);
     triples are (subj_surface, rel, obj_surface, hs, he, ts, te)."""
-    ents, rels = usm_sentence_scored(tokens)
+    ents, rels = usm_sentence_scored(tokens, mentions)
     return ents, [row[:-1] for row in rels]
 
 
 def usm_sentence_scored(
-    tokens: Sequence[str],
+    tokens: Sequence[str], mentions: Sequence[Mention]
 ) -> Tuple[List[Tuple[str, str, int, int]], List[Tuple]]:
     """Like usm_sentence, but each relation row carries the encoder's
     pair score as its last element (what a trained USM would expose as
     its ttl logit); decoded combinations the encoder never scored
     directly (pointer cross-talk) carry 0.0."""
-    ttl, ltl, tll, pair_scores = _usm_encode(tokens)
+    ttl, ltl, tll, pair_scores = _usm_encode(tokens, mentions)
     ents, rels = usm_decode(ttl, ltl, tll, LABEL_MAP)
     ent_rows = [
         (" ".join(tokens[h : t + 1]), etype, h, t + 1) for (h, t), etype in ents
@@ -236,7 +236,9 @@ def usm_extract_scored(sentences: DataFrame) -> DataFrame:
     Every sentence is decoded, including those the text plane flags
     ``t_capped``: there is no pair cap."""
     return decode_sentences(
-        sentences, lambda toks: usm_sentence_scored(toks)[1], TRIPLES_SCHEMA.fields[3:]
+        sentences,
+        lambda toks, ments: usm_sentence_scored(toks, ments)[1],
+        TRIPLES_SCHEMA.fields[3:],
     )
 
 
@@ -247,8 +249,9 @@ def usm_entities(sentences: DataFrame) -> DataFrame:
     relations decode from one set of link matrices)."""
     return decode_sentences(
         sentences,
-        lambda toks: [
-            (etype, s, e, surf) for surf, etype, s, e in usm_sentence_scored(toks)[0]
+        lambda toks, ments: [
+            (etype, s, e, surf)
+            for surf, etype, s, e in usm_sentence_scored(toks, ments)[0]
         ],
         [
             StructField("ent_type", StringType(), False),

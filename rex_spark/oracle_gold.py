@@ -101,14 +101,15 @@ def _kg_scalar_run(n_pages: int = KG_PAGES, seed: int = KG_SEED):
         # kernels): the text plane and USM read the gap-banded pair
         # scan, CasRel scans the same band per subject — no pair cap.
         for _sid, _sent, tokens, scored in extract_document(clean, p["lang"]):
-            for surface, _et, _s, _e in extract_mentions(tokens):
+            mentions = extract_mentions(tokens)
+            for surface, _et, _s, _e in mentions:
                 freq[surface] += 1
             for t in scored:
                 triples.add((p["url"], t[0], t[1], t[2]))
                 sent_triples.append((t[0], t[1], t[2]))
-            for t in pointer_decode_sentence(tokens):
+            for t in pointer_decode_sentence(tokens, mentions):
                 casrel.add((p["url"], t[0], t[1], t[2]))
-            ents, rels = usm_sentence(tokens)
+            ents, rels = usm_sentence(tokens, mentions)
             for surf, etype, _s, _e in ents:
                 usm_ents.add((p["url"], etype, surf))
             for subj, rel, obj, *_spans in rels:

@@ -5,13 +5,15 @@ content words (alphabetic, length >= 4 — the tokenizer lowercases, so
 don't key on capitalization) — deliberately trivial, but shaped
 exactly like a real mechanism: sentence rows in (the columns of
 ``rex_spark.operators.extraction.plane_sentences``: url, warc_ts, lang,
-sent_id, sent, tokens), triple rows out
+sent_id, sent, tokens and the m_type/m_start/m_end/m_surface mention
+arrays), triple rows out
 (``rex_spark.operators.extraction.TRIPLES_SCHEMA``).
 
 It is written as pure DataFrame expressions, so it runs JVM-side under
 whole-stage codegen with no Python in the hot path.  If your mechanism
-needs a model, write a per-sentence ``decode(tokens) -> rows`` and pass
-it to ``rex_spark.operators.extraction.decode_sentences`` with
+needs a model, write a per-sentence ``decode(tokens, mentions) -> rows``
+(``mentions``: the plane's ``(surface, type, start, end)`` tuples) and
+pass it to ``rex_spark.operators.extraction.decode_sentences`` with
 ``TRIPLES_SCHEMA.fields[3:]``, as ``operators/pointer_extraction.py``
 does: one Arrow crossing, no hand-written ``mapInPandas``.
 """

@@ -1,3 +1,4 @@
+import re
 import uuid
 
 import pytest
@@ -18,6 +19,52 @@ def spark_jobs(spark, fn):
     # job-start events reach the status store through the async bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
     return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def jvm_list(s):
+    """A Scala Seq as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def walk_plan(node):
+    """Every physical node under ``node``, descending into adaptive
+    plans, query stages, reused exchanges and cached relations."""
+    yield node
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        inner = [node.executedPlan()]
+    elif name.endswith("QueryStage"):
+        inner = [node.plan()]
+    elif name == "ReusedExchange":
+        inner = [node.child()]
+    elif name == "InMemoryTableScan":
+        inner = [node.relation().cachedPlan()]
+    else:
+        inner = jvm_list(node.children())
+    for child in inner:
+        yield from walk_plan(child)
+
+
+# ArrowEvalPython, MapInPandas, (Python)MapInArrow, FlatMapGroupsInPandas...
+_PYTHON_NODE = re.compile(r"Python|InPandas|InArrow")
+
+
+def python_nodes(df_or_plan):
+    """The Python crossings (physical nodes) of a DataFrame's executed
+    plan, or of a JVM physical plan such as a streaming query's
+    ``lastExecution().executedPlan()``."""
+    from pyspark.sql import DataFrame
+
+    plan = (
+        df_or_plan._jdf.queryExecution().executedPlan()  # noqa: SLF001
+        if isinstance(df_or_plan, DataFrame)
+        else df_or_plan
+    )
+    return [n for n in walk_plan(plan) if _PYTHON_NODE.search(n.nodeName())]
+
+
+def python_node_names(df_or_plan):
+    return sorted(n.nodeName() for n in python_nodes(df_or_plan))
 
 
 @pytest.fixture(scope="session")

@@ -7,9 +7,9 @@ empty batches and tables); document near-dup keeps the empty-text
 shingle."""
 
 import itertools
-import re
 
 import pytest
+from conftest import jvm_list, python_nodes, walk_plan
 
 from rex_spark.operators.canonical import (
     MAX_BUCKET,
@@ -21,36 +21,11 @@ from rex_spark.operators.canonical import (
 )
 from rex_spark.operators.dedup import minhash_lsh_pairs
 
-# ArrowEvalPython, MapInPandas, (Python)MapInArrow, FlatMapGroupsInPandas...
-_PYTHON_NODE = re.compile(r"Python|InPandas|InArrow")
 _JOINS = {"SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"}
 
 
-def _seq(s):
-    return [s.apply(i) for i in range(s.size())]
-
-
-def _walk(node):
-    """Every physical node under ``node``, descending into adaptive
-    plans, query stages, reused exchanges and cached relations."""
-    yield node
-    name = node.nodeName()
-    if name == "AdaptiveSparkPlan":
-        inner = [node.executedPlan()]
-    elif name.endswith("QueryStage"):
-        inner = [node.plan()]
-    elif name == "ReusedExchange":
-        inner = [node.child()]
-    elif name == "InMemoryTableScan":
-        inner = [node.relation().cachedPlan()]
-    else:
-        inner = _seq(node.children())
-    for child in inner:
-        yield from _walk(child)
-
-
 def _names(node):
-    return [a.name() for a in _seq(node.output())]
+    return [a.name() for a in jvm_list(node.output())]
 
 
 def _recording_checkpoints(monkeypatch, df_class):
@@ -102,11 +77,7 @@ def test_lsh_plan_is_one_python_pass_with_narrow_band_rows(spark, monkeypatch, r
     plans.append(out._jdf.queryExecution().executedPlan())
 
     python = [
-        {
-            (n.nodeName(), n.output().toString())
-            for n in _walk(plan)
-            if _PYTHON_NODE.search(n.nodeName())
-        }
+        {(n.nodeName(), n.output().toString()) for n in python_nodes(plan)}
         for plan in plans
     ]
     lsh = [nodes for nodes in python if nodes]
@@ -116,12 +87,12 @@ def test_lsh_plan_is_one_python_pass_with_narrow_band_rows(spark, monkeypatch, r
 
     band_joins = [
         n
-        for n in _walk(plan)
+        for n in walk_plan(plan)
         if n.nodeName() in _JOINS and "band_key" in n.leftKeys().toString()
     ]
     assert band_joins
     exchanges = [
-        n for j in band_joins for n in _walk(j) if "Exchange" in n.nodeName()
+        n for j in band_joins for n in walk_plan(j) if "Exchange" in n.nodeName()
     ]
     assert exchanges
     for ex in exchanges:

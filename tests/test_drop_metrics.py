@@ -308,13 +308,17 @@ def test_pointer_decode_equals_vector_decode_property():
     the full 0/1-vector decode over every mention pair, on random token
     soups and on the 60-mention sentence (whose 30 rows are the fused
     plane's 3 triples)."""
+    from rex_spark.kernels.extractor import extract_mentions
     from rex_spark.kernels.textnorm import tokenize
     from rex_spark.operators.pointer_extraction import pointer_decode_sentence
 
+    def decode(toks):
+        return pointer_decode_sentence(toks, extract_mentions(toks))
+
     for toks in _token_soups(2024, 300):
-        assert pointer_decode_sentence(toks) == _vector_pointer_decode(toks), toks
+        assert decode(toks) == _vector_pointer_decode(toks), toks
     long_toks = tokenize(LONG_SENT, lang="en")
-    rows = pointer_decode_sentence(long_toks)
+    rows = decode(long_toks)
     assert rows == _vector_pointer_decode(long_toks)
     assert len(rows) == 30
     assert {r[:3] for r in rows} == {

@@ -124,6 +124,11 @@ def test_fast_html_path_matches_reference():
         "<script>x</script\t\n><p>ws-close</p>",
         "<script>x</script",
         "<style>y</style  >z<p>w</p>",
+        # HTMLParser reads '=' and a quoted value only right after an
+        # attribute name of a start tag; anywhere else the tag ends at
+        # its first '>' (and a bare value may end in '/'):
+        '<E ">">', "<E '>'>", '<p a b="x>y" c>t</p>', '<x ="a>b">t',
+        '<x a= b="c>">t', "</p a='>'>t", "<script a=b/>x<p>y</p>",
     ]
     for c in cases:
         assert html_to_text(c) == _html_to_text_reference(c), c

@@ -12,12 +12,13 @@
 5. distributed faceted PRF1 agrees with the in-process kernel;
 6. with a StageStore the text plane is one stage made by one Arrow
    crossing, and the stored graph outputs equal the storeless ones;
-7. the CasRel and USM slots add one Arrow crossing to the plane's.
+7. the CasRel and USM slots add one Arrow crossing to the plane's,
+   and every other per-row operator (WARC records, NER decodes, PDF
+   text, the span-matrix slot) is one Arrow crossing.
 """
 
-import re
-
 import pytest
+from conftest import python_node_names, python_nodes
 
 from rex_spark.kernels import kb
 from rex_spark.kernels.extractor import document_triples
@@ -280,18 +281,6 @@ def test_distributed_synthesis_waves_union_to_full_corpus(spark):
     assert union.exceptAll(full).count() == 0
 
 
-_PYTHON_NODE = re.compile(
-    r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|PythonMapInArrow"
-    r"|FlatMapGroupsInPandas|FlatMapGroupsInArrow|FlatMapCoGroupsInPandas"
-    r"|AggregateInPandas|WindowInPandas|ArrowEvalPythonUDTF|BatchEvalPythonUDTF)\b"
-)
-
-
-def _python_nodes(df):
-    """Arrow/Python UDF node names in the DataFrame's physical plan."""
-    return _PYTHON_NODE.findall(df._jdf.queryExecution().executedPlan().toString())
-
-
 def _graph_rows(result):
     def rows(df):
         # by column name: a stage partitioned by pred reads pred back last
@@ -338,14 +327,12 @@ def test_store_plane_is_one_crossing_and_matches_storeless(spark, tmp_path, filt
     assert set(computed) == {
         f"plane{fsfx}", f"surfaces{fsfx}", f"entities{fsfx}", f"edges{fsfx}"
     }
-    nodes = _python_nodes(computed[f"plane{fsfx}"])
-    assert nodes.count("MapInArrow") + nodes.count("PythonMapInArrow") == 1
-    # the docs strip (clean_pages) feeds the doc filters
-    assert len(nodes) == (2 if filters else 1), nodes
-    if filters:
-        assert nodes.count("MapInPandas") == 1
+    # the docs strip (clean_pages) feeds the doc filters: one more
+    # crossing of the same kind, no MapInPandas
+    nodes = python_node_names(computed[f"plane{fsfx}"])
+    assert nodes == ["MapInArrow"] * (2 if filters else 1), nodes
     for name in (f"surfaces{fsfx}", f"entities{fsfx}", f"edges{fsfx}"):
-        assert not _python_nodes(computed[name]), name
+        assert not python_nodes(computed[name]), name
 
 
 @pytest.mark.parametrize("slot", ["casrel", "usm"])
@@ -357,5 +344,65 @@ def test_plugin_slot_plan_is_plane_plus_one_arrow_crossing(spark, slot):
 
     extract = {"casrel": casrel_extract, "usm": usm_extract_scored}[slot]
     out = extract(plane_sentences(extract_plane(build_pages_df(spark, 10, seed=42))))
-    assert _python_nodes(out) == ["MapInArrow", "MapInArrow"]
+    assert python_node_names(out) == ["MapInArrow", "MapInArrow"]
+    assert out.collect()
+
+
+def _warc_pages(spark, tmp_path):
+    import datetime as dt
+
+    from rex_spark.io.warc import encode_warc_gz, read_warc
+
+    ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    (tmp_path / "a.warc.gz").write_bytes(
+        encode_warc_gz([(f"http://x/{i}", ts, b"<p>a b</p>") for i in range(3)])
+    )
+    return read_warc(spark, str(tmp_path))
+
+
+def _ner_spans(via):
+    def run(spark, tmp_path):
+        from rex_spark.operators.ner import flag_spans
+
+        docs = spark.createDataFrame(
+            [(0, "Enormous elephants wandered through the savannah")],
+            "doc_id long, text string",
+        )
+        return flag_spans(docs, via=via)
+
+    return run
+
+
+def _pdf_texts(spark, tmp_path):
+    from rex_spark.operators.pdftext import extract_pdf_texts, make_pdf_payload
+
+    pdfs = spark.createDataFrame(
+        [(i, make_pdf_payload(i)) for i in range(3)], "doc_id long, payload binary"
+    )
+    return extract_pdf_texts(pdfs)
+
+
+def _span_matrix(spark, tmp_path):
+    from rex_spark.operators.span_matrix import global_pointer_extract
+
+    docs = spark.createDataFrame(
+        [(0, "Enormous elephants wandered through the savannah")],
+        "doc_id long, text string",
+    )
+    return global_pointer_extract(docs, {"LONG": (7, 99), "MID": (5, 6)})
+
+
+@pytest.mark.parametrize(
+    "build",
+    [_warc_pages, _ner_spans("udf"), _ner_spans("viterbi"), _pdf_texts, _span_matrix],
+    ids=[
+        "read_warc", "decode_mentions_udf", "viterbi_decode", "extract_pdf_texts",
+        "global_pointer_extract",
+    ],
+)
+def test_per_row_operator_is_one_arrow_crossing(spark, tmp_path, build):
+    """Every per-row Python operator crosses through crossing.fan_out:
+    one MapInArrow node, no MapInPandas."""
+    out = build(spark, tmp_path)
+    assert python_node_names(out) == ["MapInArrow"]
     assert out.collect()

@@ -178,9 +178,10 @@ def test_usm_decode_closed_over_encoder_links(tokens):
     from rex_spark.kernels.extractor import extract_mentions
     from rex_spark.operators.usm import usm_sentence, usm_sentence_scored
 
-    ments = {(m[2], m[3]): m[1] for m in extract_mentions(tokens)}
-    ents, rels = usm_sentence(tokens)
-    ents_s, rels_s = usm_sentence_scored(tokens)
+    mentions = extract_mentions(tokens)
+    ments = {(m[2], m[3]): m[1] for m in mentions}
+    ents, rels = usm_sentence(tokens, mentions)
+    ents_s, rels_s = usm_sentence_scored(tokens, mentions)
     assert ents == ents_s
     assert rels == [r[:-1] for r in rels_s]
     for surf, etype, s, e in ents:

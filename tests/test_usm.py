@@ -4,7 +4,7 @@ fused extractor path (ref /root/reference/rex/models/usm.py:100-168)."""
 import random
 import time
 
-from rex_spark.kernels.extractor import extract_sentence
+from rex_spark.kernels.extractor import extract_mentions, extract_sentence
 from rex_spark.kernels.synth import make_pages
 from rex_spark.kernels.textnorm import html_to_text, sent_seg, tokenize
 from rex_spark.operators.usm import (
@@ -59,7 +59,7 @@ def test_decode_ignores_unsupported_links():
 
 def test_usm_sentence_matches_fused_on_known_text():
     toks = tokenize("alice johnson works for acme corp", lang="en")
-    ents, rels = usm_sentence(toks)
+    ents, rels = usm_sentence(toks, extract_mentions(toks))
     fused = {(t[0], t[1], t[2]) for t in extract_sentence(toks)}
     assert {(s, r, o) for s, r, o, *_ in rels} == fused == {
         ("alice johnson", "works_for", "acme corp")
@@ -70,7 +70,7 @@ def test_usm_sentence_matches_fused_on_known_text():
 
 def test_usm_links_are_sorted_and_typed():
     toks = tokenize("alice johnson works for acme corp", lang="en")
-    ttl, ltl, tll = usm_links(toks)
+    ttl, ltl, tll = usm_links(toks, extract_mentions(toks))
     assert ttl == sorted(ttl) and ltl == sorted(ltl) and tll == sorted(tll)
     assert {x[2] for x in ttl} <= {0, 1, 2}
     assert {x[2] for x in ltl} <= {0, 1} and {x[2] for x in tll} <= {0, 1}
@@ -88,7 +88,7 @@ def test_usm_agreement_with_fused_corpus():
             toks = tokenize(sent, lang=lang)
             for t in extract_sentence(toks):
                 fused.add((p["url"], t[0], t[1], t[2]))
-            for s, r, o, *_ in usm_sentence(toks)[1]:
+            for s, r, o, *_ in usm_sentence(toks, extract_mentions(toks))[1]:
                 usm.add((p["url"], s, r, o))
     assert fused, "corpus must produce triples"
     tp = len(fused & usm)
@@ -174,15 +174,16 @@ def test_hash_join_decode_equals_nested_loop_decode_property():
             ttl, ltl, tll, lm
         ), (ttl, ltl, tll)
     for toks in _token_soups(1212, 300):
-        links = usm_links(toks)
+        links = usm_links(toks, extract_mentions(toks))
         assert usm_decode(*links, LABEL_MAP) == _nested_loop_decode(
             *links, LABEL_MAP
         ), toks
     long_toks = tokenize(LONG_SENT, lang="en")
-    links = usm_links(long_toks)
+    links = usm_links(long_toks, extract_mentions(long_toks))
     ents, rels = usm_decode(*links, LABEL_MAP)
     assert (ents, rels) == _nested_loop_decode(*links, LABEL_MAP)
-    assert {(s, r, o) for s, r, o, *_ in usm_sentence(long_toks)[1]} == {
+    rels = usm_sentence(long_toks, extract_mentions(long_toks))[1]
+    assert {(s, r, o) for s, r, o, *_ in rels} == {
         ("alice johnson", "works_for", "globex"),
         ("bob smith", "founded", "acme corp"),
         ("grace hopper", "boss_of", "initech"),
@@ -194,7 +195,7 @@ def test_usm_600_mention_sentence_decodes_fast():
     under a second (the nested-loop decode took seconds there)."""
     toks = tokenize(" and ".join(_FRAGS * 100), lang="en")
     t0 = time.perf_counter()
-    ents, rels = usm_sentence(toks)
+    ents, rels = usm_sentence(toks, extract_mentions(toks))
     elapsed = time.perf_counter() - t0
     assert len(ents) == 600 and len(rels) > 0
     assert elapsed < 0.5, elapsed

@@ -9,6 +9,7 @@ import gzip
 import os
 
 import pytest
+from conftest import python_node_names
 
 from rex_spark.io.warc import (
     _gzip_members,
@@ -270,3 +271,25 @@ def test_stream_warc_pages_drains_past_truncated_file(spark, tmp_path):
     q.awaitTermination()
     got = [r["url"] for r in spark.read.parquet(str(out)).collect()]
     assert sorted(got) == sorted([u for u, _, _ in recs[:10]] + prefix)
+
+
+def test_stream_warc_pages_plan_is_one_arrow_crossing(spark, tmp_path):
+    """Each micro-batch expands its crawl files in one MapInArrow
+    (crossing.fan_out), with no MapInPandas."""
+    from rex_spark.streaming import stream_warc_pages
+
+    crawl = tmp_path / "crawl"
+    crawl.mkdir()
+    (crawl / "w0.warc.gz").write_bytes(encode_warc_gz(_recs(5)))
+    q = (
+        stream_warc_pages(spark, str(crawl))
+        .writeStream.format("memory")
+        .queryName("warc_plan")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    plan = q._jsq.streamingQuery().lastExecution().executedPlan()  # noqa: SLF001
+    assert python_node_names(plan) == ["MapInArrow"], plan.toString()
+    assert spark.table("warc_plan").count() == 5
