@@ -26,6 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.sql.types import StructType
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -613,40 +614,37 @@ def q_mrc_overlap(spark, sf):
     )
 
 
-def _window_chunk_rows(spark, sf, window: int = 32, stride: int = 24):
-    """Shared W5 builder: (doc_id, seq_id, piece_len, first_token) via
-    chunk_windows in a mapInPandas — the ONE definition of the
-    window/stride/tokenization that both the bench surface
-    (q_chunk_windows) and the merged driver surface (q_seq_pieces)
-    present, so they cannot desynchronize."""
-    import pandas as pd
-
-    def batches(it):
-        from rex_spark.kernels.textnorm import chunk_windows
-
-        for pdf in it:
-            rows = []
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                for i, chunk in enumerate(
-                    chunk_windows(list(toks), window, stride)
-                ):
-                    rows.append((doc_id, i, len(chunk), chunk[0]))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "seq_id", "piece_len", "first_token"]
-            )
-
+def _doc_tokens(spark, sf):
+    """(doc_id, tokens): each document's lower-cased, whitespace-split
+    token list — the W5/W6 tokenization."""
     d = _t(spark, sf, "documents")
     toks = F.split(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " ")
-    return d.select("doc_id", toks.alias("tokens")).mapInPandas(
-        batches,
-        schema="doc_id long, seq_id int, piece_len int, first_token string",
+    return d.select("doc_id", toks.alias("tokens"))
+
+
+def _window_chunk_rows(spark, sf, window: int = 32, stride: int = 24):
+    """Shared W5 builder: (doc_id, seq_id, piece_len, first_token) via
+    chunk_windows in one ``crossing.fan_out`` — the ONE definition of
+    the window/stride/tokenization that both the bench surface
+    (q_chunk_windows) and the merged driver surface (q_seq_pieces)
+    present, so they cannot desynchronize."""
+    from rex_spark.kernels.textnorm import chunk_windows
+    from rex_spark.operators.crossing import fan_out
+
+    def pieces(toks):
+        for i, chunk in enumerate(chunk_windows(toks, window, stride)):
+            yield (i, len(chunk), chunk[0])
+
+    return fan_out(
+        _doc_tokens(spark, sf), ("doc_id",), ("tokens",), pieces,
+        StructType.fromDDL("seq_id int, piece_len int, first_token string").fields,
     )
 
 
 def q_chunk_windows(spark, sf):
     """W5: windowed chunking of each document's token list (window 32,
-    stride 24, reference quirks incl. shrinking tails) — kernel in a
-    mapInPandas, run shape oracle-checked in SQL."""
+    stride 24, reference quirks incl. shrinking tails) — kernel in one
+    ``crossing.fan_out``, run shape oracle-checked in SQL."""
     return _window_chunk_rows(spark, sf).select(
         "doc_id",
         F.col("seq_id").alias("chunk_id"),
@@ -657,29 +655,16 @@ def q_chunk_windows(spark, sf):
 def q_split_segments(spark, sf):
     """W6: split each document's token list on the delimiter token
     'the' (keep_empty_segments=False) -> one row per segment."""
-    import pandas as pd
+    from rex_spark.kernels.textnorm import split_list_by_element
+    from rex_spark.operators.crossing import fan_out
 
-    def batches(it):
-        from rex_spark.kernels.textnorm import split_list_by_element
+    def segments(toks):
+        for i, seg in enumerate(split_list_by_element(toks, "the"), start=1):
+            yield (i, len(seg), seg[0] if seg else None)
 
-        for pdf in it:
-            rows = []
-            for doc_id, toks in zip(pdf["doc_id"], pdf["tokens"]):
-                segs = split_list_by_element(list(toks), "the")
-                for i, seg in enumerate(segs, start=1):
-                    rows.append((doc_id, i, len(seg), seg[0] if seg else None))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "seg_id", "seg_len", "first_token"]
-            )
-
-    d = _t(spark, sf, "documents")
-    toks = F.split(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " ")
-    return (
-        d.select("doc_id", toks.alias("tokens"))
-        .mapInPandas(
-            batches,
-            schema="doc_id long, seg_id int, seg_len int, first_token string",
-        )
+    return fan_out(
+        _doc_tokens(spark, sf), ("doc_id",), ("tokens",), segments,
+        StructType.fromDDL("seg_id int, seg_len int, first_token string").fields,
     )
 
 

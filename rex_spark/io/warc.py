@@ -54,7 +54,9 @@ def encode_warc_gz(records: List[Tuple[str, dt.datetime, bytes]]) -> bytes:
             b"Content-Type: application/http; msgtype=response\r\n"
             b"Content-Length: " + str(len(http)).encode() + _CRLF2
         )
-        out += gzip.compress(hdr + http + _CRLF2)
+        # mtime=0: no write time in the member header, so the same
+        # records always encode to the same bytes
+        out += gzip.compress(hdr + http + _CRLF2, mtime=0)
     return bytes(out)
 
 

@@ -1,10 +1,17 @@
 """The one per-row crossing from Spark into Python.
 
-``fan_out`` runs every per-row Python transform on the crawl -> triple
-path: the text plane, the per-sentence model slots, the docs strip,
-WARC record expansion, PDF text extraction and the NER decodes.  One
-input row becomes zero or more output rows, in one ``mapInArrow``
+``fan_out`` runs every per-row Python transform in ``rex_spark``: the
+text plane, the per-sentence model slots, the docs strip, WARC record
+expansion, PDF text extraction, the NER decodes, the multimodal
+decoders, the corpus synthesizers, SimHash and the P10 tolerant map.
+One input row becomes zero or more output rows, in one ``mapInArrow``
 (RecordBatches in and out, no pandas frames on either side).
+
+Two kinds of Python map do not fit a per-row ``fn`` and keep their own
+crossing: the batch-vectorized ones (``dedup.lsh_table`` hashes a
+whole batch's shingles at once, ``similarity.ivf_topk`` assigns a
+batch to its centroids in one matrix product) and the grouped ones
+(``bags``, ``skew``, the streaming state), which see a whole group.
 
 The row contract, stated once here:
 
@@ -13,7 +20,10 @@ The row contract, stated once here:
 - ``warc_ts`` crosses as ``warc_us`` (int64 epoch micros) in both
   directions and is converted on the JVM side — a timestamp column
   pays a tz/unit conversion per element on each side of the boundary,
-  a plain long does not;
+  a plain long does not.  An ``fn`` that already holds ``datetime``
+  objects (a corpus synthesizer) yields them into a timestamp field
+  instead: Python arithmetic to epoch micros costs more than Arrow's
+  conversion;
 - an output batch is flushed every ``FLUSH_ROWS`` rows and at the end
   of each input batch, so one input row that expands a lot (a 1 GB
   crawl file) never becomes one batch.
@@ -31,14 +41,20 @@ FLUSH_ROWS = 2048
 
 
 def _py_values(col) -> list:
-    """A string, binary or list Arrow column -> Python values, through
-    ``to_pandas().tolist()`` (several times faster than pyarrow's
-    per-scalar ``to_pylist``).  Integer and timestamp columns must not
-    come through here: pandas turns their nulls into floats."""
+    """An Arrow column -> Python values, nulls as ``None``.
+
+    String, binary and list columns go through ``to_pandas().tolist()``
+    (several times faster than pyarrow's per-scalar ``to_pylist``).
+    Every other type (integer, boolean, float) goes through
+    ``to_pylist()``, which is exact: pandas would turn an integer
+    column with nulls into floats."""
     import pyarrow as pa
 
+    t = col.type
+    if not (pa.types.is_string(t) or pa.types.is_binary(t) or pa.types.is_list(t)):
+        return col.to_pylist()
     vals = col.to_pandas().tolist()
-    if pa.types.is_list(col.type):
+    if pa.types.is_list(t):
         return [None if v is None else v.tolist() for v in vals]
     return vals
 
@@ -53,9 +69,10 @@ def fan_out(
     """``df`` -> ``(*keys, *row)`` for every ``row`` of ``fn(*inputs)``,
     called once per input row.
 
-    ``inputs`` are string, binary or list columns; a column that is a
-    key and an input crosses once.  ``fn`` yields tuples shaped like
-    ``fields``; a field named ``warc_us`` comes back as ``warc_ts``.
+    ``inputs`` cross as Python values (:func:`_py_values`); a column
+    that is a key and an input crosses once.  ``fn`` yields tuples
+    shaped like ``fields``; a field named ``warc_us`` comes back as
+    ``warc_ts``.
     Key columns keep their type and nullability."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema

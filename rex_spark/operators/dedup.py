@@ -33,7 +33,6 @@ from __future__ import annotations
 
 from typing import Callable, Iterable, Iterator, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -51,6 +50,7 @@ from ..kernels.hashing import (
     simhash64,
 )
 from ..kernels.textnorm import ngrams
+from .crossing import _py_values, fan_out
 
 
 def _parallelize(df: DataFrame) -> DataFrame:
@@ -206,7 +206,7 @@ def lsh_table(
     def lsh_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
             kept, shs, keys = shingle_band_keys(
-                batch.column(text_col).to_pylist(), shingle_fn, params, num_bands
+                _py_values(batch.column(text_col)), shingle_fn, params, num_bands
             )
             take = pa.array(kept, pa.int32())
             offsets = np.arange(0, num_bands * (len(kept) + 1), num_bands, dtype=np.int32)
@@ -338,31 +338,16 @@ def minhash_lsh_pairs(
     )
 
 
-_SIMHASH_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("simhash", LongType(), False),
-    ]
-)
-
-
 def simhash_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs: 4x16-bit chunk blocking + exact hamming.
 
     Any pair with hamming <= 3 over 64 bits shares at least one of the
     4 chunks (pigeonhole), so blocking is lossless for max_hamming<=3.
     """
-
-    def sim_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                toks = (text or "").lower().split()
-                rows.append((doc_id, simhash64(toks) - (1 << 63)))
-            yield pd.DataFrame(rows, columns=["doc_id", "simhash"])
-
-    sims = _parallelize(documents.select("doc_id", "text")).mapInPandas(
-        sim_batches, schema=_SIMHASH_SCHEMA
+    sims = fan_out(
+        _parallelize(documents.select("doc_id", "text")), ("doc_id",), ("text",),
+        lambda text: [(simhash64((text or "").lower().split()) - (1 << 63),)],
+        [StructField("simhash", LongType(), False)],
     )
     chunks = sims.select(
         "doc_id",

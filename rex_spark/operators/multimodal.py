@@ -20,10 +20,8 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -38,6 +36,7 @@ from pyspark.sql.types import (
 )
 
 from ..kernels.hashing import hash64, splitmix64
+from .crossing import fan_out
 
 ASSETS_SCHEMA = StructType(
     [
@@ -235,30 +234,21 @@ def make_decodable_assets_distributed(
     spark: SparkSession, n: int, seed: int = 42, partitions: int | None = None
 ) -> DataFrame:
     """Same table as make_decodable_assets, synthesized EXECUTOR-side
-    (mapInPandas over a range), bit-identical per asset id because
-    _asset_source/_encode_source are pure functions of (i, seed) — the
-    make_page pattern: corpus synthesis itself parallelizes, so a
-    multi-GB codec benchmark or soak never bottlenecks on the driver."""
+    (``crossing.fan_out`` over a range), bit-identical per asset id
+    because _asset_source/_encode_source are pure functions of
+    (i, seed) — the make_page pattern: corpus synthesis itself
+    parallelizes, so a multi-GB codec benchmark or soak never
+    bottlenecks on the driver."""
     parts = partitions or 2 * spark.sparkContext.defaultParallelism
-    base = spark.range(0, n, numPartitions=parts)
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                kind, mime, source, (w, h, dur, _r, _c) = _asset_source(i, seed)
-                rows.append(
-                    (i, kind, _encode_source(kind, mime, source), mime, w, h, dur)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ASSETS_SCHEMA.fields]
-            ).astype(
-                {"width": "Int32", "height": "Int32", "duration_ms": "Int32"}
-                if rows else {}
-            )
+    def build(i):
+        kind, mime, source, (w, h, dur, _r, _c) = _asset_source(i, seed)
+        yield (i, kind, _encode_source(kind, mime, source), mime, w, h, dur)
 
-    return base.mapInPandas(build, schema=ASSETS_SCHEMA)
+    return fan_out(
+        spark.range(0, n, numPartitions=parts), (), ("id",), build,
+        ASSETS_SCHEMA.fields,
+    )
 
 
 DECODE_STATS_SCHEMA = StructType(
@@ -318,22 +308,11 @@ def decode_stats(assets: DataFrame) -> DataFrame:
     the oracle can compare hash-exactly against source-array gold).
     Narrow plan: payloads are decoded inside the Arrow batch and only
     the 10 stat columns ever leave the scan stage."""
-    src = assets.select("asset_id", "mime", "payload")
-
-    def stat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (aid, mime, *decode_stats_row(bytes(payload), mime))
-                for aid, mime, payload in zip(
-                    pdf["asset_id"], pdf["mime"], pdf["payload"]
-                )
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in DECODE_STATS_SCHEMA.fields],
-            )
-
-    return src.mapInPandas(stat_batches, schema=DECODE_STATS_SCHEMA)
+    return fan_out(
+        assets, ("asset_id", "mime"), ("payload", "mime"),
+        lambda payload, mime: [decode_stats_row(payload, mime)],
+        DECODE_STATS_SCHEMA.fields[2:],
+    )
 
 
 def _feature_kernel(payload: bytes, kind: str) -> np.ndarray:
@@ -423,7 +402,8 @@ def _stats_feature(decoded) -> np.ndarray:
 
 
 def extract_features(assets: DataFrame) -> DataFrame:
-    """assets -> fixed-dim feature table via Arrow-batched mapInPandas.
+    """assets -> fixed-dim feature table, one ``crossing.fan_out`` row
+    per asset.
 
     Decodable mimes get REAL decoded statistics (_stats_feature);
     unsupported mimes — and CORRUPT payloads of a decodable mime —
@@ -435,27 +415,20 @@ def extract_features(assets: DataFrame) -> DataFrame:
     payload) only (html-sized payloads never join a shuffle); output is
     one row per asset with a FEATURE_DIM float vector.
     """
-    src = assets.select("asset_id", "kind", "mime", "payload")
 
-    def feat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, kind, mime, payload in zip(
-                pdf["asset_id"], pdf["kind"], pdf["mime"], pdf["payload"]
-            ):
-                try:
-                    vec = _stats_feature(decode_asset(bytes(payload), mime))
-                except (NotImplementedError, ValueError, zlib.error,
-                        struct.error):
-                    # NotImplementedError: no stdlib codec for this mime;
-                    # the rest: corrupt payload of a decodable mime.
-                    vec = _feature_kernel(bytes(payload), kind)
-                rows.append((aid, kind, len(payload), vec.tolist()))
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "kind", "n_bytes", "feature"]
-            ).astype({"n_bytes": "int32"} if rows else {})
+    def features(kind, mime, payload):
+        try:
+            vec = _stats_feature(decode_asset(payload, mime))
+        except (NotImplementedError, ValueError, zlib.error, struct.error):
+            # NotImplementedError: no stdlib codec for this mime;
+            # the rest: corrupt payload of a decodable mime.
+            vec = _feature_kernel(payload, kind)
+        yield (len(payload), vec.tolist())
 
-    return src.mapInPandas(feat_batches, schema=FEATURES_SCHEMA)
+    return fan_out(
+        assets, ("asset_id", "kind"), ("kind", "mime", "payload"), features,
+        FEATURES_SCHEMA.fields[2:],
+    )
 
 
 FRAMES_SCHEMA = StructType(
@@ -519,7 +492,7 @@ def _frame_kernel(payload: bytes, duration_ms: int, every_ms: int,
 def sample_frames(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Timed assets (audio/video) -> one row per sampled frame.
 
-    Batch shape contract: input (asset_id, kind, payload, duration_ms);
+    Batch shape contract: input (asset_id, mime, payload, duration_ms);
     output fan-out rows with fixed-size frame payloads — the shape a
     frame-level feature extractor (extract_features over frames) or a
     frame dedup consumes.  Image assets (duration NULL) sample exactly
@@ -527,25 +500,13 @@ def sample_frames(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
     batch, no shuffle; downstream per-frame work partitions on
     (asset_id, frame_idx) without ever shuffling whole payloads.
     """
-    src = assets.select("asset_id", "kind", "mime", "payload", "duration_ms")
-
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, kind, mime, payload, dur in zip(
-                pdf["asset_id"], pdf["kind"], pdf["mime"], pdf["payload"],
-                pdf["duration_ms"]
-            ):
-                dur_ms = 1 if (dur is None or pd.isna(dur)) else int(dur)
-                for idx, t, frame in _frame_kernel(
-                    bytes(payload), dur_ms, every_ms, mime
-                ):
-                    rows.append((aid, idx, t, frame))
-            yield pd.DataFrame(
-                rows, columns=["asset_id", "frame_idx", "t_ms", "frame"]
-            ).astype({"frame_idx": "int32", "t_ms": "int32"} if rows else {})
-
-    return src.mapInPandas(frame_batches, schema=FRAMES_SCHEMA)
+    return fan_out(
+        assets, ("asset_id",), ("payload", "duration_ms", "mime"),
+        lambda payload, dur, mime: _frame_kernel(
+            payload, 1 if dur is None else dur, every_ms, mime
+        ),
+        FRAMES_SCHEMA.fields[1:],
+    )
 
 
 FRAME_STATS_SCHEMA = StructType(
@@ -608,24 +569,13 @@ def frame_stats(assets: DataFrame) -> DataFrame:
     result is exact cross-video frame dedup — the video analog of the
     documents exact_dedup path.  Non-temporal assets are pruned BEFORE
     the Python stage (JVM-side filter on mime)."""
-    src = assets.filter(
+    temporal = assets.filter(
         F.col("mime").startswith("video/") | (F.col("mime") == "image/gif")
-    ).select("asset_id", "mime", "payload")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [
-                (aid, *rest)
-                for aid, mime, payload in zip(
-                    pdf["asset_id"], pdf["mime"], pdf["payload"]
-                )
-                for rest in frame_stats_rows(bytes(payload), mime)
-            ]
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FRAME_STATS_SCHEMA.fields]
-            ).astype({"frame_idx": "int32"} if rows else {})
-
-    return src.mapInPandas(batches, schema=FRAME_STATS_SCHEMA)
+    )
+    return fan_out(
+        temporal, ("asset_id",), ("payload", "mime"), frame_stats_rows,
+        FRAME_STATS_SCHEMA.fields[1:],
+    )
 
 
 def asset_stats(assets: DataFrame) -> DataFrame:

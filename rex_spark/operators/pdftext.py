@@ -18,9 +18,7 @@ fail the stage.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
@@ -109,14 +107,10 @@ def expected_pdf_row(i: int, seed: int = 42):
 def make_pdf_corpus(spark: SparkSession, n: int, seed: int = 42) -> DataFrame:
     """(doc_id, payload) of n deterministic PDFs, executor-side."""
     parts = min(n, 2 * spark.sparkContext.defaultParallelism)
-    base = spark.range(0, n, numPartitions=parts)
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [(int(i), make_pdf_payload(int(i), seed)) for i in pdf["id"]]
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
-
-    return base.mapInPandas(build, schema=PDF_CORPUS_SCHEMA)
+    return fan_out(
+        spark.range(0, n, numPartitions=parts), (), ("id",),
+        lambda i: [(i, make_pdf_payload(i, seed))], PDF_CORPUS_SCHEMA.fields,
+    )
 
 
 def pdf_text_row(doc_id: int, payload: bytes):

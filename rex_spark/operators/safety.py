@@ -2,10 +2,11 @@
 
 P10 re-expresses TransformBase's per-instance try/except
 (rex/data/transforms/base.py:50-106: skip or raise per config, count
-what was dropped) for Arrow-batched UDFs: the wrapped kernel runs per
-row inside the batch loop; failures either skip the row or re-raise,
-and skip counts surface through a Spark accumulator into the caller's
-metrics/lineage instead of vanishing (the no-silent-caps rule).
+what was dropped) on the one per-row crossing, ``crossing.fan_out``:
+the wrapped kernel runs once per row; failures either skip the row or
+re-raise, and skip counts surface through a Spark accumulator into the
+caller's metrics/lineage instead of vanishing (the no-silent-caps
+rule).
 
 S8 re-expresses ``find_files``'s regex walk (rex/utils/io.py:204-214)
 against the scan metadata: filter by ``input_file_name`` so discovery
@@ -15,11 +16,13 @@ walk.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, Sequence
+from typing import Callable, Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from .crossing import fan_out
 
 
 def tolerant_map_in_pandas(
@@ -31,7 +34,9 @@ def tolerant_map_in_pandas(
     on_error: str = "skip",
 ):
     """Apply ``row_fn`` (one input row -> 0..n output tuples) with
-    per-row error tolerance.
+    per-row error tolerance.  ``schema`` (a ``StructType`` or DDL
+    string) names and types the output columns; ``out_cols`` is the
+    order of the fields in ``row_fn``'s tuples.
 
     Returns (DataFrame, skip_counter): force the DataFrame, then read
     ``skip_counter.value`` for the number of rows dropped by
@@ -44,22 +49,20 @@ def tolerant_map_in_pandas(
     sc = df.sparkSession.sparkContext
     skipped = sc.accumulator(0)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: list[tuple] = []
-            for row in zip(*[pdf[c] for c in in_cols]):
-                try:
-                    out = row_fn(row)
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    skipped.add(1)
-                    continue
-                if out:
-                    rows.extend(out)
-            yield pd.DataFrame(rows, columns=out_cols)
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
 
-    return df.select(*in_cols).mapInPandas(batches, schema=schema), skipped
+    def guarded(*row):
+        try:
+            return row_fn(row) or ()
+        except Exception:
+            if on_error == "raise":
+                raise
+            skipped.add(1)
+            return ()
+
+    out = fan_out(df, (), in_cols, guarded, [schema[c] for c in out_cols])
+    return out.select(*schema.names), skipped
 
 
 def discover_inputs(

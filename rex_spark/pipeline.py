@@ -38,6 +38,7 @@ from .operators.canonical import (
     edges_from_labeled,
     entities_from_labeled,
 )
+from .operators.crossing import fan_out
 from .operators.extraction import document_triple_set
 from .operators.textplane import PAGES_SCHEMA, clean_pages
 
@@ -72,29 +73,19 @@ def build_pages_df_distributed(
     ``start`` offsets the id range (pages start..start+n_pages-1) so
     callers can synthesize disjoint waves of the same corpus.
     """
-    import pandas as pd
-
     from .kernels.synth import make_page
 
     parts = partitions or spark.sparkContext.defaultParallelism
 
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_page(int(i), seed=seed)[0] for i in pdf["id"]]
-            yield pd.DataFrame(
-                {
-                    "url": [r["url"] for r in rows],
-                    "warc_ts": [r["warc_ts"] for r in rows],
-                    "html": [r["html"] for r in rows],
-                    "text": [r["text"] for r in rows],
-                    "lang": [r["lang"] for r in rows],
-                }
-            )
+    def gen(i):
+        # make_page's naive warc_ts is UTC wall time, which is how Arrow
+        # reads a naive datetime into the UTC timestamp field
+        p = make_page(i, seed=seed)[0]
+        yield (p["url"], p["warc_ts"], p["html"], p["text"], p["lang"])
 
-    return (
-        spark.range(start, start + n_pages)
-        .repartition(parts)
-        .mapInPandas(gen, schema=PAGES_SCHEMA)
+    return fan_out(
+        spark.range(start, start + n_pages).repartition(parts), (), ("id",), gen,
+        PAGES_SCHEMA.fields,
     )
 
 

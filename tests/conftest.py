@@ -26,9 +26,10 @@ def jvm_list(s):
     return [s.apply(i) for i in range(s.size())]
 
 
-def walk_plan(node):
+def walk_plan(node, reused=True):
     """Every physical node under ``node``, descending into adaptive
-    plans, query stages, reused exchanges and cached relations."""
+    plans, query stages, cached relations and, with ``reused``, reused
+    exchanges (whose subtree runs once, under the original exchange)."""
     yield node
     name = node.nodeName()
     if name == "AdaptiveSparkPlan":
@@ -36,13 +37,13 @@ def walk_plan(node):
     elif name.endswith("QueryStage"):
         inner = [node.plan()]
     elif name == "ReusedExchange":
-        inner = [node.child()]
+        inner = [node.child()] if reused else []
     elif name == "InMemoryTableScan":
         inner = [node.relation().cachedPlan()]
     else:
         inner = jvm_list(node.children())
     for child in inner:
-        yield from walk_plan(child)
+        yield from walk_plan(child, reused)
 
 
 # ArrowEvalPython, MapInPandas, (Python)MapInArrow, FlatMapGroupsInPandas...
@@ -52,7 +53,8 @@ _PYTHON_NODE = re.compile(r"Python|InPandas|InArrow")
 def python_nodes(df_or_plan):
     """The Python crossings (physical nodes) of a DataFrame's executed
     plan, or of a JVM physical plan such as a streaming query's
-    ``lastExecution().executedPlan()``."""
+    ``lastExecution().executedPlan()``.  A reused exchange's subtree
+    runs once, so its crossings count once, under the original."""
     from pyspark.sql import DataFrame
 
     plan = (
@@ -60,7 +62,9 @@ def python_nodes(df_or_plan):
         if isinstance(df_or_plan, DataFrame)
         else df_or_plan
     )
-    return [n for n in walk_plan(plan) if _PYTHON_NODE.search(n.nodeName())]
+    return [
+        n for n in walk_plan(plan, reused=False) if _PYTHON_NODE.search(n.nodeName())
+    ]
 
 
 def python_node_names(df_or_plan):

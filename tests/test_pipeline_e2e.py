@@ -14,7 +14,9 @@
    crossing, and the stored graph outputs equal the storeless ones;
 7. the CasRel and USM slots add one Arrow crossing to the plane's,
    and every other per-row operator (WARC records, NER decodes, PDF
-   text, the span-matrix slot) is one Arrow crossing.
+   text, the span-matrix slot, the multimodal decoders, the corpus
+   synthesizers, SimHash, the tolerant map, the W5/W6 entry maps) is
+   one Arrow crossing, whose integer inputs cross exactly.
 """
 
 import pytest
@@ -392,17 +394,104 @@ def _span_matrix(spark, tmp_path):
     return global_pointer_extract(docs, {"LONG": (7, 99), "MID": (5, 6)})
 
 
+def _assets(op):
+    def run(spark, tmp_path):
+        from rex_spark.operators import multimodal
+
+        # 7 assets: one of each fixture slot (png ... mjpeg-avi, mp4)
+        return getattr(multimodal, op)(multimodal.make_decodable_assets(spark, 7))
+
+    return run
+
+
+def _synth(spark, tmp_path):
+    from rex_spark.operators.multimodal import make_decodable_assets_distributed
+
+    return make_decodable_assets_distributed(spark, 3, partitions=1)
+
+
+def _pdf_corpus(spark, tmp_path):
+    from rex_spark.operators.pdftext import make_pdf_corpus
+
+    return make_pdf_corpus(spark, 3)
+
+
+def _pages(spark, tmp_path):
+    from rex_spark.pipeline import build_pages_df_distributed
+
+    return build_pages_df_distributed(spark, 3, partitions=1)
+
+
+def _docs(spark):
+    return spark.createDataFrame(
+        [(0, "the cat sat on the mat"), (1, "The cat sat on the mat"), (2, "a b c")],
+        "doc_id long, text string",
+    )
+
+
+def _simhash(spark, tmp_path):
+    from rex_spark.operators.dedup import simhash_pairs
+
+    return simhash_pairs(_docs(spark))
+
+
+def _tolerant(spark, tmp_path):
+    from rex_spark.operators.safety import tolerant_map_in_pandas
+
+    out, _skipped = tolerant_map_in_pandas(
+        _docs(spark), lambda row: [(row[0], len(row[1]))],
+        "doc_id long, n int", ["doc_id", "text"], ["doc_id", "n"],
+    )
+    return out
+
+
+def _entry(name):
+    def run(spark, tmp_path):
+        import __spark_entry__ as entry
+
+        _docs(spark).write.parquet(str(tmp_path / "documents.parquet"))
+        return getattr(entry, name)(spark, str(tmp_path))
+
+    return run
+
+
 @pytest.mark.parametrize(
     "build",
-    [_warc_pages, _ner_spans("udf"), _ner_spans("viterbi"), _pdf_texts, _span_matrix],
+    [
+        _warc_pages, _ner_spans("udf"), _ner_spans("viterbi"), _pdf_texts,
+        _span_matrix, _assets("decode_stats"), _assets("extract_features"),
+        _assets("sample_frames"), _assets("frame_stats"), _synth, _pdf_corpus,
+        _pages, _simhash, _tolerant, _entry("q_chunk_windows"),
+        _entry("q_split_segments"),
+    ],
     ids=[
         "read_warc", "decode_mentions_udf", "viterbi_decode", "extract_pdf_texts",
-        "global_pointer_extract",
+        "global_pointer_extract", "decode_stats", "extract_features",
+        "sample_frames", "frame_stats", "make_decodable_assets_distributed",
+        "make_pdf_corpus", "build_pages_df_distributed", "simhash_pairs",
+        "tolerant_map_in_pandas", "q_chunk_windows", "q_split_segments",
     ],
 )
 def test_per_row_operator_is_one_arrow_crossing(spark, tmp_path, build):
     """Every per-row Python operator crosses through crossing.fan_out:
-    one MapInArrow node, no MapInPandas."""
+    one MapInArrow node, no MapInPandas, in the plan that ran (a
+    self-join, as in simhash_pairs, reuses the map's exchange)."""
     out = build(spark, tmp_path)
-    assert python_node_names(out) == ["MapInArrow"]
     assert out.collect()
+    assert python_node_names(out) == ["MapInArrow"]
+
+
+def test_fan_out_crosses_nullable_long_exactly(spark):
+    """A nullable integer input crosses as exact Python ints and None:
+    through pandas, a null would turn the column into floats (2**62+1
+    is not a float64)."""
+    from pyspark.sql.types import BooleanType, LongType, StructField
+
+    from rex_spark.operators.crossing import fan_out
+
+    df = spark.createDataFrame([(0, 2**62 + 1), (1, None)], "k int, v long")
+    out = fan_out(
+        df, ("k",), ("v",), lambda v: [(v, v is None)],
+        [StructField("v", LongType()), StructField("is_none", BooleanType())],
+    )
+    assert sorted(map(tuple, out.collect())) == [(0, 2**62 + 1, False), (1, None, True)]

@@ -103,7 +103,7 @@ def _append_baseline(out: dict) -> None:
         f"{out['assets']} real encoded assets ({out['payload_mb']} MB of",
         "png/bmp/jpeg/gif/wav/mjpeg-avi/mp4 payloads, synthesized",
         "executor-side), decoded with the pure-stdlib codecs inside",
-        f"mapInPandas at local[{out['cpus']}]; median of",
+        f"one crossing.fan_out at local[{out['cpus']}]; median of",
         f"{len(out['decode_stats_all'])} timed runs after a warm run:",
         "",
         "| surface | wall (s) | all runs (s) | rate |",

@@ -46,7 +46,7 @@ AUDITED = [
     "rep_stats",
     "pii_scrub",
     "doc_profile",
-    # r5 ingest/temporal surfaces: scan-shaped mapInPandas fan-outs —
+    # r5 ingest/temporal surfaces: scan-shaped crossing.fan_out maps —
     # the audit shows no shuffle and a narrow pre-Python select
     "video_frames",
     "pdf_text",

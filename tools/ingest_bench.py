@@ -20,11 +20,13 @@ the bottleneck.
 from __future__ import annotations
 
 import argparse
+import atexit
 import json
 import os
 import shutil
 import statistics
 import sys
+import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -81,7 +83,9 @@ def main() -> None:
 
     spark = get_session(master=f"local[{args.cpus}]",
                         app_name="rex_spark_ingest_bench")
-    dump = "/tmp/rex_spark_ingest_warc"
+    # a fresh directory per run: two runs side by side never share input
+    dump = tempfile.mkdtemp(prefix="rex_spark_ingest_warc_")
+    atexit.register(shutil.rmtree, dump, ignore_errors=True)
     dump_bytes = build_dump(spark, dump, args.files, args.per_file, 42)
     n_pages = args.files * args.per_file
 
@@ -128,7 +132,6 @@ def main() -> None:
         "pdf_rows_check": pdf_rows,
     }
     spark.stop()
-    shutil.rmtree(dump, ignore_errors=True)
     if args.update_baseline:
         _append_baseline(out)
     print(json.dumps(out))
