@@ -18,8 +18,12 @@ Pipeline:
                           edges DataFrame (Kiveris et al., "Connected
                           Components in MapReduce and Beyond"), with
                           per-iteration localCheckpoint to cut lineage
-                          and AQE skew-join handling; converges in
-                          O(log n) rounds even on hub-entity chains.
+                          (its job also observes the round's edge count
+                          and convergence digest) and AQE skew-join
+                          handling; converges in O(log n) rounds even on
+                          hub-entity chains.  Once a round's edge set
+                          fits DRIVER_CC_MAX_EDGES it is collected and
+                          driver union-find finishes the labeling.
 4. ``build_entities_edges``  canonical entity table (component ->
                           surfaces, canonical = most frequent surface)
                           and edge table aggregated to canonical ids
@@ -37,7 +41,7 @@ from __future__ import annotations
 from typing import Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..kernels import kb
@@ -163,18 +167,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return relinked
 
 
-def _edge_digest(edges: DataFrame) -> Tuple[int, int]:
-    """(row count, order-independent hash-xor) of the canonical edge set
-    — one cheap aggregation job, computed on the already-checkpointed
-    iteration output so nothing upstream re-runs.  bit_xor is overflow-
-    free under ANSI mode, unlike a hash sum."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("bit_xor(xxhash64(a, b))").alias("h"),
-    ).first()
-    return (row["n"], row["h"])
-
-
 def _driver_union_find(rows) -> list:
     """Union-find over collected (a, b) edges; component id = min node
     id, matching the distributed algorithm's labeling exactly."""
@@ -200,10 +192,12 @@ def _driver_union_find(rows) -> list:
 
 
 # Edge sets at or below this size are solved with driver-side
-# union-find (one collect job, microseconds of CPU) instead of the
-# iterative join loop — the same small-input escape hatch AQE applies
-# when it converts a shuffle join to broadcast.  200k edges collect to
-# ~3 MB; the distributed loop exists for everything beyond.
+# union-find (one collect job, microseconds of CPU) instead of further
+# join rounds — the same small-input escape hatch AQE applies when it
+# converts a shuffle join to broadcast.  The threshold applies after
+# every round: the input edge set, and each round's output, is
+# collected and finished on the driver as soon as it fits.  200k edges
+# collect to ~3 MB; the distributed rounds exist for everything beyond.
 DRIVER_CC_MAX_EDGES = 200_000
 
 
@@ -213,17 +207,29 @@ def connected_components(
     driver_max_edges: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> Tuple[DataFrame, int]:
-    """Large-star/small-star alternation until the edge set is a stable
-    star forest.  Returns (node_id -> component_id mapping, iterations).
+    """Large-star/small-star alternation, finished by driver union-find
+    once the edge set fits.  Returns (node_id -> component_id mapping,
+    iterations = distributed rounds run).
 
-    Scale-adaptive: the canonical edge set is materialized first (so
-    the upstream edge sources run once), then the materialized table is
-    probed with a ``limit(threshold + 1)`` collect; if it fits,
-    union-find runs on the driver (0 iterations reported) — at web
-    scale the surface graph exceeds the threshold and the iterative
-    DataFrame loop below runs instead, starting from that same
-    materialized table.  Both paths label every node with its
-    component's min node id, so results are identical.
+    The canonical edge set, and each round's output, is materialized
+    once; the job that materializes it also observes its row count and
+    an order-independent digest (``bit_xor`` of 64-bit row hashes).
+    After each materialization:
+
+    - if the count is at most ``driver_max_edges`` (default
+      ``DRIVER_CC_MAX_EDGES``), the edges are collected and union-find
+      labels them on the driver — 0 iterations when the input already
+      fits, as at KB-bounded vocabularies;
+    - else, if the digest equals the previous round's (a stable star
+      forest) or ``max_iterations`` rounds have run, the star forest
+      becomes the membership;
+    - else one more large-star/small-star round runs.
+
+    Both star operations keep every node and its connectivity, so
+    union-find over any round's edges gives the same partition, and
+    both finishes label every node with its component's min node id:
+    results do not depend on where the loop stops.
+    ``driver_max_edges=0`` forces the fully distributed loop.
 
     Each round materializes via localCheckpoint: cuts the join-loop
     lineage (REx's pickle-cache analog for iterative state) and gives
@@ -233,15 +239,13 @@ def connected_components(
     preempted node would fail the whole loop.  Pass ``checkpoint_dir``
     to switch every round to reliable ``.checkpoint()`` into that
     (HDFS/object-store) directory instead; results are identical
-    (pinned by tests/test_canonical_cc.py).  Convergence is detected
-    by an order-independent (count, ``bit_xor`` of 64-bit row hashes)
-    digest of the edge set — a single aggregation per round instead of
-    two exceptAll jobs.  A digest collision between two DIFFERENT edge
-    sets would stop the loop before convergence and could yield wrong
-    labels; with a 64-bit xor digest the per-round collision
-    probability is ~2^-64, which we accept in exchange for halving the
-    per-round job count (an exact exceptAll check would double it
-    back).
+    (pinned by tests/test_canonical_cc.py).  The convergence digest is
+    observed by the materializing job, so it costs no job of its own.
+    A digest collision between two DIFFERENT edge sets would stop the
+    loop before convergence and could yield wrong labels; with a
+    64-bit xor digest the per-round collision probability is ~2^-64,
+    which we accept in exchange for no extra job per round (an exact
+    exceptAll check would add two).
     """
     canon = (
         edges.select(
@@ -253,51 +257,55 @@ def connected_components(
     if checkpoint_dir is not None:
         edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
-        def _materialize(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
+    def _materialize(df: DataFrame) -> Tuple[DataFrame, Tuple[int, int]]:
+        """``df`` materialized, and its (row count, hash-xor) from the
+        same job.  bit_xor is overflow-free under ANSI mode, unlike a
+        hash sum."""
+        seen = Observation()
+        df = df.observe(
+            seen,
+            F.count(F.lit(1)).alias("n"),
+            F.expr("bit_xor(xxhash64(a, b))").alias("h"),
+        )
+        if checkpoint_dir is not None:
+            df = df.checkpoint(eager=True)
+        else:
+            df = df.localCheckpoint()
+        metrics = seen.get
+        return df, (metrics["n"], metrics["h"])
 
-    else:
-
-        def _materialize(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint()
-
-    # materialized before the probe, so the edge sources upstream run
-    # once whichever path is taken
-    cur = _materialize(canon)
     threshold = (
         DRIVER_CC_MAX_EDGES if driver_max_edges is None else driver_max_edges
     )
-    if threshold > 0:
-        probe = cur.limit(threshold + 1).collect()
-        if len(probe) <= threshold:
-            mapping = _driver_union_find([(r["a"], r["b"]) for r in probe])
-            # a pandas frame crosses as Arrow: no Python-worker tasks
-            frame = pd.DataFrame(mapping, columns=["node_id", "component"])
-            schema = "node_id long, component long"
-            return edges.sparkSession.createDataFrame(frame, schema=schema), 0
-
-    prev_digest = _edge_digest(cur)
+    cur, digest = _materialize(canon)
     iterations = 0
-    for _ in range(max_iterations):
+    while threshold <= 0 or digest[0] > threshold:
+        if iterations == max_iterations:
+            return _star_membership(cur), iterations
         iterations += 1
-        stepped = _materialize(_small_star(_large_star(cur)))
-        digest = _edge_digest(stepped)
-        cur = stepped
-        if digest == prev_digest:
-            break
         prev_digest = digest
-    # stable state is a star forest: b is the component min for every a
-    membership = cur.select(
+        cur, digest = _materialize(_small_star(_large_star(cur)))
+        if digest == prev_digest:
+            return _star_membership(cur), iterations
+    mapping = _driver_union_find(cur.collect())
+    # a pandas frame crosses as Arrow: no Python-worker tasks
+    frame = pd.DataFrame(mapping, columns=["node_id", "component"])
+    schema = "node_id long, component long"
+    return edges.sparkSession.createDataFrame(frame, schema=schema), iterations
+
+
+def _star_membership(forest: DataFrame) -> DataFrame:
+    """node_id -> component of a stable star forest (b is the component
+    min for every a), the roots labeled with themselves."""
+    membership = forest.select(
         F.col("a").alias("node_id"), F.col("b").alias("component")
     )
-    # roots themselves
     roots = membership.select(F.col("component").alias("node_id")).distinct()
-    membership = (
+    return (
         membership.unionByName(roots.withColumn("component", F.col("node_id")))
         .groupBy("node_id")
         .agg(F.min("component").alias("component"))
     )
-    return membership, iterations
 
 
 # Surface vocabularies at or below this size canonicalize driver-side

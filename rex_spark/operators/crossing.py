@@ -16,13 +16,17 @@ batch to its centroids in one matrix product) and the grouped ones
 The row contract, stated once here:
 
 - key columns never become Python objects: each output row ``take``s
-  them from its input row by index;
-- ``warc_ts`` crosses as ``warc_us`` (int64 epoch micros) in both
-  directions and is converted on the JVM side — a timestamp column
-  pays a tz/unit conversion per element on each side of the boundary,
-  a plain long does not.  An ``fn`` that already holds ``datetime``
-  objects (a corpus synthesizer) yields them into a timestamp field
-  instead: Python arithmetic to epoch micros costs more than Arrow's
+  them from its input row by index, whatever their type.  A timestamp
+  key (``warc_ts``) is taken as the Arrow timestamp it arrives as: its
+  values are UTC epoch micros under any session time zone, and the
+  output batch labels it with ``to_arrow_schema``'s ``tz=UTC``, so it
+  is converted on neither side;
+- an ``fn`` yields a timestamp as int64 epoch micros into a field
+  named ``warc_us``, which comes back as the timestamp ``warc_ts``
+  (``io/warc``: a plain long crosses with no per-element tz/unit
+  conversion).  An ``fn`` that already holds ``datetime`` objects (a
+  corpus synthesizer) yields them into a timestamp field instead:
+  Python arithmetic to epoch micros costs more than Arrow's
   conversion;
 - an output batch is flushed every ``FLUSH_ROWS`` rows and at the end
   of each input batch, so one input row that expands a lot (a 1 GB
@@ -72,15 +76,12 @@ def fan_out(
     ``inputs`` cross as Python values (:func:`_py_values`); a column
     that is a key and an input crosses once.  ``fn`` yields tuples
     shaped like ``fields``; a field named ``warc_us`` comes back as
-    ``warc_ts``.
-    Key columns keep their type and nullability."""
+    ``warc_ts``.  Key columns keep their type and nullability."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     cols = list(keys) + [c for c in dict.fromkeys(inputs) if c not in keys]
-    src = df.select(
-        *[F.unix_micros(c).alias("warc_us") if c == "warc_ts" else c for c in cols]
-    )
+    src = df.select(*cols)
     schema = StructType(src.schema.fields[: len(keys)] + list(fields))
     out_schema = to_arrow_schema(schema)
     built = list(out_schema)[len(keys) :]

@@ -1,10 +1,19 @@
 """Connected components: the driver union-find fast path and the
 iterative large-star/small-star DataFrame loop must label identically
-(component = min node id), including on a skewed hub graph."""
+(component = min node id), including on a skewed hub graph, wherever
+the loop hands over to the driver finish."""
 
 import random
 
+import pytest
+from conftest import spark_jobs
+
 from rex_spark.operators.canonical import connected_components
+
+# _hub_graph: 384 nodes in 4 components, so its star forest has 380
+# edges; the canonical input has 582 (the chords close cycles)
+HUB_FOREST_EDGES = 380
+HUB_INPUT_EDGES = 582
 
 
 def _hub_graph():
@@ -17,6 +26,10 @@ def _hub_graph():
     for base in (10_000, 20_000, 30_000):
         for i in range(60):
             edges.append((base + i, base + i + 1))
+    # chords: a ring through the spokes and each chain closed into a
+    # cycle, so the input has more edges than its star forest
+    edges += [(i * 7, (i + 1) * 7) for i in range(1, 200)]
+    edges += [(base + 60, base) for base in (10_000, 20_000, 30_000)]
     # self-loops and duplicates must be ignored
     edges += [(0, 0), (10_000, 10_001), (10_001, 10_000)]
     rng.shuffle(edges)
@@ -65,6 +78,39 @@ def test_cc_reliable_checkpoint_matches(spark, tmp_path):
     )
     # reliable blocks were written (an RDD checkpoint dir per round)
     assert os.path.isdir(ckpt) and len(os.listdir(ckpt)) > 0
+
+
+def _labels(spark, **kwargs):
+    """(sorted labels, iterations, Spark jobs) of one call on the hub
+    graph."""
+    df = spark.createDataFrame(_hub_graph(), "a long, b long")
+    (comp, iterations), jobs = spark_jobs(
+        spark, lambda: connected_components(df, **kwargs)
+    )
+    return sorted(map(tuple, comp.collect())), iterations, jobs
+
+
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "checkpoint_dir"])
+def test_cc_rounds_then_driver_finish(spark, tmp_path, reliable):
+    """A threshold between the star forest's and the input's edge count:
+    the input does not fit, so at least one distributed round runs, and
+    the loop hands the round's edges to driver union-find before the
+    digest could see convergence.  Labels equal the fully distributed
+    loop's and the driver path's.  Each materialization observes its
+    count and digest in the job that writes it: 2 jobs for the input,
+    8 per round (AQE stages plus the checkpoint), 1 for the finish's
+    collect, and no job of its own for a digest or a size probe."""
+    kwargs = {"checkpoint_dir": str(tmp_path / "cc_ckpt")} if reliable else {}
+    mid = (HUB_FOREST_EDGES + HUB_INPUT_EDGES) // 2
+    finished, it_mid, jobs_mid = _labels(spark, driver_max_edges=mid, **kwargs)
+    looped, it_loop, jobs_loop = _labels(spark, driver_max_edges=0, **kwargs)
+    default, it_default, _ = _labels(spark, **kwargs)
+    assert (it_mid, it_loop, it_default) == (1, 7, 0)
+    assert (jobs_mid, jobs_loop) == (2 + 8 * 1 + 1, 2 + 8 * 7)
+    assert finished == looped == default
+    assert len(default) == 384 and {c for _, c in default} == {
+        0, 10_000, 20_000, 30_000
+    }
 
 
 def test_cc_empty_edges(spark):

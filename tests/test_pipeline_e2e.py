@@ -495,3 +495,51 @@ def test_fan_out_crosses_nullable_long_exactly(spark):
         [StructField("v", LongType()), StructField("is_none", BooleanType())],
     )
     assert sorted(map(tuple, out.collect())) == [(0, 2**62 + 1, False), (1, None, True)]
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
+def test_fan_out_takes_timestamp_key_as_is(spark, tz):
+    """A timestamp key is taken as the Arrow timestamp it arrives as, with
+    no conversion on either side.  Under the engine's UTC session its
+    Arrow type is ``to_arrow_schema``'s, tz included; under another
+    session time zone only the tz label differs, and the instants still
+    come back unchanged."""
+    import datetime as dt
+
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StringType, StructField, StructType
+
+    from rex_spark.operators.crossing import fan_out
+
+    def arrow_types(it):
+        for rb in it:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([str(rb.schema.field("warc_ts").type)])], names=["t"]
+            )
+
+    before = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        df = spark.createDataFrame(
+            [("a", dt.datetime(2024, 3, 1, 12, 30, 5, 123456), "x"), ("b", None, "y")],
+            "url string, warc_ts timestamp, s string",
+        )
+        seen = {r["t"] for r in df.mapInArrow(arrow_types, "t string").collect()}
+        out = fan_out(
+            df, ("url", "warc_ts"), ("s",), lambda s: [(s.upper(),)],
+            [StructField("S", StringType())],
+        )
+        micros = F.unix_micros("warc_ts")
+        assert sorted(map(tuple, out.select("url", micros, "S").collect())) == sorted(
+            map(tuple, df.select("url", micros, F.upper("s")).collect())
+        )
+        plan = out._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", before)
+    assert seen == {f"timestamp[us, tz={tz}]"}
+    if tz == "UTC":
+        assert seen == {str(to_arrow_schema(df.schema).field("warc_ts").type)}
+    assert out.schema == StructType(df.schema.fields[:2] + [StructField("S", StringType())])
+    assert "unix_micros" not in plan and "timestamp_micros" not in plan

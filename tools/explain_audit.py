@@ -95,7 +95,7 @@ def main() -> None:
         "joins for dimension lookups, two-phase (`partial` ->",
         "`finalmerge`) hash aggregates, and wide `WholeStageCodegen`",
         "spans around the relational operators.  Python appears only at",
-        "explicit `MapInPandas`/`FlatMapGroupsInPandas` nodes.",
+        "explicit `MapInArrow`/`MapInPandas`/`FlatMapGroupsInPandas` nodes.",
         "",
         "| query | scans pruned | broadcast join | partial agg | codegen | scans |",
         "|---|---|---|---|---|---|",
