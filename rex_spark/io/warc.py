@@ -179,20 +179,18 @@ def expand_warc_records(files, schema, corrupt: str):
     that parse errors are always ValueError, so "skip" can't mask a
     programming bug)."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField
 
     from ..operators.crossing import fan_out
 
     def records(content):
         try:
-            for url, ts, html in iter_warc(content):
-                yield url, int(ts.timestamp()) * 1_000_000, html  # whole seconds
+            yield from iter_warc(content)
         except ValueError:
             if corrupt == "fail":
                 raise
             # "skip": the rest of this file; prior records kept
 
-    fields = [schema["url"], StructField("warc_us", LongType(), False), schema["html"]]
+    fields = [schema["url"], schema["warc_ts"], schema["html"]]
     return fan_out(files, (), ("content",), records, fields).select(
         "url", "warc_ts", "html",
         *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields[3:]],

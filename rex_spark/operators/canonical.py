@@ -5,7 +5,13 @@ analog is the exact-surface bag key, rex/data/transforms/bag_re.py:68-78).
 Pipeline:
 
 1. ``surface_nodes``      distinct mention surfaces -> stable 64-bit ids
-                          (xxhash64, JVM-side).
+                          (xxhash64, JVM-side), built and materialized
+                          once per ``canonicalize_surfaces`` call; the
+                          materializing job also counts them, and the
+                          count picks the path: a vocabulary that fits
+                          DRIVER_CANON_MAX_SURFACES is collected and
+                          canonicalized in-process by the same
+                          algorithms, a larger one runs steps 2-3.
 2. ``similarity_edges``   three edge sources union-ed:
                           a) exact normalized-form match (lower, collapse
                              whitespace, strip punctuation) — built-ins;
@@ -24,10 +30,11 @@ Pipeline:
                           hub-entity chains.  Once a round's edge set
                           fits DRIVER_CC_MAX_EDGES it is collected and
                           driver union-find finishes the labeling.
-4. ``build_entities_edges``  canonical entity table (component ->
-                          surfaces, canonical = most frequent surface)
-                          and edge table aggregated to canonical ids
-                          with support counts, salted-repartition ready.
+
+The labeled surface table then feeds ``entities_from_labeled``
+(component -> surfaces, canonical = most frequent surface) and
+``edges_from_labeled`` (triples aggregated to canonical ids with
+support counts).
 
 Scale notes: LSH band join is the only quadratic-risk step; banding
 keys bound bucket sizes and buckets of more than MAX_BUCKET surfaces
@@ -191,6 +198,24 @@ def _driver_union_find(rows) -> list:
     return [(node, comp_min[find(node)]) for node in parent]
 
 
+def _materialize(
+    df: DataFrame, checkpoint_dir: str | None = None, **aggregates
+) -> Tuple[DataFrame, tuple]:
+    """``df`` materialized, and the values of the named ``aggregates``
+    over its rows (in keyword order), observed by the job that
+    materializes it: localCheckpoint, or reliable ``.checkpoint()``
+    when ``checkpoint_dir`` is set (the caller has made it the
+    context's checkpoint directory)."""
+    seen = Observation()
+    df = df.observe(seen, *[agg.alias(name) for name, agg in aggregates.items()])
+    if checkpoint_dir is not None:
+        df = df.checkpoint(eager=True)
+    else:
+        df = df.localCheckpoint()
+    metrics = seen.get
+    return df, tuple(metrics[name] for name in aggregates)
+
+
 # Edge sets at or below this size are solved with driver-side
 # union-find (one collect job, microseconds of CPU) instead of further
 # join rounds — the same small-input escape hatch AQE applies when it
@@ -257,34 +282,26 @@ def connected_components(
     if checkpoint_dir is not None:
         edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
-    def _materialize(df: DataFrame) -> Tuple[DataFrame, Tuple[int, int]]:
-        """``df`` materialized, and its (row count, hash-xor) from the
-        same job.  bit_xor is overflow-free under ANSI mode, unlike a
-        hash sum."""
-        seen = Observation()
-        df = df.observe(
-            seen,
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(a, b))").alias("h"),
+    def _digested(df: DataFrame) -> Tuple[DataFrame, Tuple[int, int]]:
+        # bit_xor is overflow-free under ANSI mode, unlike a hash sum
+        return _materialize(
+            df,
+            checkpoint_dir,
+            n=F.count(F.lit(1)),
+            h=F.expr("bit_xor(xxhash64(a, b))"),
         )
-        if checkpoint_dir is not None:
-            df = df.checkpoint(eager=True)
-        else:
-            df = df.localCheckpoint()
-        metrics = seen.get
-        return df, (metrics["n"], metrics["h"])
 
     threshold = (
         DRIVER_CC_MAX_EDGES if driver_max_edges is None else driver_max_edges
     )
-    cur, digest = _materialize(canon)
+    cur, digest = _digested(canon)
     iterations = 0
     while threshold <= 0 or digest[0] > threshold:
         if iterations == max_iterations:
             return _star_membership(cur), iterations
         iterations += 1
         prev_digest = digest
-        cur, digest = _materialize(_small_star(_large_star(cur)))
+        cur, digest = _digested(_small_star(_large_star(cur)))
         if digest == prev_digest:
             return _star_membership(cur), iterations
     mapping = _driver_union_find(cur.collect())
@@ -308,13 +325,13 @@ def _star_membership(forest: DataFrame) -> DataFrame:
     )
 
 
-# Surface vocabularies at or below this size canonicalize driver-side
-# (one Spark job to collect distinct surfaces, then the SAME alias /
-# exact-norm / MinHash-band / union-find algorithms in-process).  A
-# fixed KB-bounded gazetteer stays tiny however large the corpus is;
-# an open-vocabulary web crawl blows past this and takes the
-# distributed path.  Both paths are pinned identical by
-# tests/test_canonical_cc.py.
+# Surface vocabularies at or below this size canonicalize driver-side:
+# the materialized vocabulary (whose job already counted it) is
+# collected in one more job, then the SAME alias / exact-norm /
+# MinHash-band / union-find algorithms run in-process.  A fixed
+# KB-bounded gazetteer stays tiny however large the corpus is; an
+# open-vocabulary web crawl blows past this and takes the distributed
+# path.  Both paths are pinned identical by tests/test_canonical_cc.py.
 DRIVER_CANON_MAX_SURFACES = 100_000
 
 
@@ -375,54 +392,55 @@ def canonicalize_surfaces(
 ) -> DataFrame:
     """mentions -> labeled surface table (surface, freq, node_id,
     entity_id): the checkpointable output of the canonicalization
-    stage, consumed by both the entity and edge materializers."""
-    from pyspark import StorageLevel
+    stage, consumed by both the entity and edge materializers.
 
+    The surface vocabulary is built once and materialized; the job that
+    materializes it also counts it.  A vocabulary of at most
+    ``driver_max_surfaces`` (default ``DRIVER_CANON_MAX_SURFACES``)
+    surfaces is collected and canonicalized in-process; a larger one
+    feeds the distributed similarity edges and connected components.
+    ``driver_max_surfaces=0`` forces the distributed path for any
+    non-empty vocabulary."""
     threshold = (
         DRIVER_CANON_MAX_SURFACES
         if driver_max_surfaces is None
         else driver_max_surfaces
     )
-    if threshold > 0:
-        probe = surface_nodes(mentions).limit(threshold + 1).collect()
-        if len(probe) <= threshold:
-            edges = _driver_similarity_edges(probe)
-            comp = dict(_driver_union_find(edges))
-            rows = [
+    nodes, (n_surfaces,) = _materialize(surface_nodes(mentions), n=F.count(F.lit(1)))
+    if n_surfaces <= threshold:
+        rows = nodes.collect()
+        comp = dict(_driver_union_find(_driver_similarity_edges(rows)))
+        frame = pd.DataFrame(
+            [
                 (
                     r["surface"],
                     r["freq"],
                     r["node_id"],
                     comp.get(r["node_id"], r["node_id"]),
                 )
-                for r in probe
-            ]
-            frame = pd.DataFrame(
-                rows, columns=["surface", "freq", "node_id", "entity_id"]
-            )
-            return spark.createDataFrame(
-                frame, "surface string, freq long, node_id long, entity_id long"
-            )
+                for r in rows
+            ],
+            columns=["surface", "freq", "node_id", "entity_id"],
+        )
+        return spark.createDataFrame(
+            frame, "surface string, freq long, node_id long, entity_id long"
+        )
 
-    # nodes feeds three edge sources plus the final label join: persist
-    # so the mention scan + surface groupBy runs once, not four times.
-    nodes = surface_nodes(mentions).persist(StorageLevel.MEMORY_AND_DISK)
     comp, _iters = connected_components(similarity_edges(spark, nodes))
-    labeled = (
+    return (
         nodes.join(comp, "node_id", "left")
         .withColumn("entity_id", F.coalesce("component", "node_id"))
         .select("surface", "freq", "node_id", "entity_id")
-        # surface-vocab-sized (one row per surface, not per mention):
-        # materialize eagerly so the nodes cache can be released now
-        # instead of leaking across repeated calls in one session.
+        # surface-vocab-sized (one row per surface, not per mention) and
+        # read by both the entity and the edge materializers:
+        # materialize it once so the label join (and a star-forest
+        # membership aggregate behind it) does not run per consumer.
         # Cluster caveat: localCheckpoint blocks don't survive executor
         # loss; a real deployment lands this stage in the StageStore
         # (and passes checkpoint_dir= to connected_components above,
         # which switches its loop to reliable .checkpoint()).
         .localCheckpoint(eager=True)
     )
-    nodes.unpersist()
-    return labeled
 
 
 def entities_from_labeled(labeled: DataFrame) -> DataFrame:
@@ -488,17 +506,3 @@ def edges_from_labeled(
             F.sum("c").alias("support")
         )
     return t.groupBy("src", "pred", "dst").agg(F.count(F.lit(1)).alias("support"))
-
-
-def build_entities_edges(
-    spark,
-    mentions: DataFrame,
-    triples: DataFrame,
-    salt_partitions: int = 0,
-) -> Tuple[DataFrame, DataFrame]:
-    """Convenience wrapper: canonicalize once, materialize both tables."""
-    labeled = canonicalize_surfaces(spark, mentions)
-    return (
-        entities_from_labeled(labeled),
-        edges_from_labeled(labeled, triples, salt_partitions=salt_partitions),
-    )

@@ -21,13 +21,9 @@ The row contract, stated once here:
   values are UTC epoch micros under any session time zone, and the
   output batch labels it with ``to_arrow_schema``'s ``tz=UTC``, so it
   is converted on neither side;
-- an ``fn`` yields a timestamp as int64 epoch micros into a field
-  named ``warc_us``, which comes back as the timestamp ``warc_ts``
-  (``io/warc``: a plain long crosses with no per-element tz/unit
-  conversion).  An ``fn`` that already holds ``datetime`` objects (a
-  corpus synthesizer) yields them into a timestamp field instead:
-  Python arithmetic to epoch micros costs more than Arrow's
-  conversion;
+- an ``fn`` yields a timestamp as a UTC-aware ``datetime`` into a
+  timestamp field (``io/warc``, the corpus synthesizers); Arrow
+  converts it to epoch micros;
 - an output batch is flushed every ``FLUSH_ROWS`` rows and at the end
   of each input batch, so one input row that expands a lot (a 1 GB
   crawl file) never becomes one batch.
@@ -38,7 +34,6 @@ from __future__ import annotations
 from typing import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 FLUSH_ROWS = 2048
@@ -75,8 +70,8 @@ def fan_out(
 
     ``inputs`` cross as Python values (:func:`_py_values`); a column
     that is a key and an input crosses once.  ``fn`` yields tuples
-    shaped like ``fields``; a field named ``warc_us`` comes back as
-    ``warc_ts``.  Key columns keep their type and nullability."""
+    shaped like ``fields``.  Key columns keep their type and
+    nullability."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -109,9 +104,4 @@ def fan_out(
             if rows:
                 yield batch(rb, src_rows, rows)
 
-    return src.mapInArrow(batches, schema=schema).select(
-        *[
-            F.timestamp_micros(n).alias("warc_ts") if n == "warc_us" else n
-            for n in schema.names
-        ]
-    )
+    return src.mapInArrow(batches, schema=schema)

@@ -262,24 +262,26 @@ def lsh_pairs(
 
     The table is persisted once and read by every consumer: a Python
     map under the self-join would otherwise run once per aliased side
-    and per aggregate (fresh attribute ids defeat exchange reuse).  The
-    band rows entering the bucket-size and self-join shuffles are
-    narrow; shingle arrays are joined back only for the candidates.
-    Buckets of more than ``max_bucket`` rows are dropped before the
-    join.  The result is checkpointed eagerly so the table can be
-    released here rather than leak for the session lifetime
+    (fresh attribute ids defeat exchange reuse).  The band rows
+    entering the self-join shuffle are narrow; shingle arrays are
+    joined back only for the candidates.  Buckets of more than
+    ``max_bucket`` rows are dropped before the join by one filter on
+    a bucket-size window, partitioned like the self-join so the two
+    share one shuffle.  The result is checkpointed eagerly so the table
+    can be released here rather than leak for the session lifetime
     (localCheckpoint -> .checkpoint() on a real deployment).
     """
     from pyspark import StorageLevel
+    from pyspark.sql import Window
 
     table = table.persist(StorageLevel.MEMORY_AND_DISK)
     banded = band_rows(table, id_col)
     if max_bucket is not None:
-        sizes = banded.groupBy("band_id", "band_key").agg(
-            F.count(F.lit(1)).alias("bsz")
-        )
-        banded = banded.join(
-            sizes.where(F.col("bsz") <= max_bucket), ["band_id", "band_key"]
+        bucket = Window.partitionBy("band_id", "band_key")
+        banded = (
+            banded.withColumn("bsz", F.count(F.lit(1)).over(bucket))
+            .where(F.col("bsz") <= max_bucket)
+            .drop("bsz")
         )
     cand = (
         banded.alias("x")

@@ -134,6 +134,71 @@ def test_driver_canonicalization_matches_distributed(spark):
     assert sorted(map(tuple, drv.collect())) == sorted(map(tuple, dist.collect()))
 
 
+# Spark jobs per canonicalize_surfaces call on _surface_mentions: two
+# materialize the vocabulary (its shuffle stage, then the checkpoint
+# whose job counts it); the escape adds one collect, the distributed
+# path the similarity edges, connected components and the labels.
+ESCAPE_JOBS = 2 + 1
+DISTRIBUTED_JOBS = 22
+
+
+def _surface_mentions(spark):
+    """60 groups x 4 variants: a 240-surface vocabulary linked by
+    exact-norm and LSH edges."""
+    from tools.cc_soak import build_surface_mentions
+
+    return build_surface_mentions(spark, 60)
+
+
+@pytest.mark.parametrize(
+    "driver_max, distributed",
+    [(lambda n: n, False), (lambda n: n - 1, True), (lambda n: 0, True)],
+    ids=["fits", "one_over", "zero"],
+)
+def test_canonicalize_path_from_one_vocabulary_count(
+    spark, monkeypatch, driver_max, distributed
+):
+    """The vocabulary is built and counted once: a threshold equal to
+    its size takes the in-process escape, one less (or 0) the
+    distributed similarity edges, and both give the default call's
+    labels.  Pins the jobs of each path."""
+    import rex_spark.operators.canonical as canonical
+
+    mentions = _surface_mentions(spark)
+    n = mentions.distinct().count()
+    default = canonical.canonicalize_surfaces(spark, mentions)
+    default = sorted(map(tuple, default.collect()))
+    calls = []
+    original = canonical.similarity_edges
+
+    def spy(*args):
+        calls.append(args)
+        return original(*args)
+
+    monkeypatch.setattr(canonical, "similarity_edges", spy)
+    labeled, jobs = spark_jobs(
+        spark,
+        lambda: canonical.canonicalize_surfaces(
+            spark, mentions, driver_max_surfaces=driver_max(n)
+        ),
+    )
+    assert (len(calls), jobs) == (
+        (1, DISTRIBUTED_JOBS) if distributed else (0, ESCAPE_JOBS)
+    )
+    assert sorted(map(tuple, labeled.collect())) == default
+    assert len(default) == n == 240
+
+
+@pytest.mark.parametrize("driver_max", [None, 0], ids=["default", "zero"])
+def test_canonicalize_empty_vocabulary(spark, driver_max):
+    from rex_spark.operators.canonical import canonicalize_surfaces
+
+    mentions = spark.createDataFrame([], "surface string")
+    labeled = canonicalize_surfaces(spark, mentions, driver_max_surfaces=driver_max)
+    assert labeled.count() == 0
+    assert labeled.columns == ["surface", "freq", "node_id", "entity_id"]
+
+
 def test_salted_collect_slice_matches_unsalted(spark):
     """The two-phase salted distinct-collect must equal the direct
     aggregation exactly, including on a heavily skewed key."""

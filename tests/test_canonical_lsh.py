@@ -58,9 +58,9 @@ def _dedup_run(spark):
 @pytest.mark.parametrize("run", [_canonical_run, _dedup_run], ids=["canonical", "dedup"])
 def test_lsh_plan_is_one_python_pass_with_narrow_band_rows(spark, monkeypatch, run):
     """One Python map node (the shingle + band-key pass, cached and
-    read by every consumer), not one per self-join side and per
-    bucket-size aggregate.  No exchange feeding a band join carries the
-    shingle arrays."""
+    read by every consumer), not one per self-join side.  No exchange
+    feeding a band join (or the bucket-size window under it) carries
+    the shingle arrays."""
     plans = _recording_checkpoints(monkeypatch, type(spark.range(0)))
     # shuffle joins, the shape of a vocabulary too large to broadcast:
     # a broadcast join has no exchange on its streamed side (the

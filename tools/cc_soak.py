@@ -23,11 +23,10 @@ slack and groups share almost no shingles.
 The EXPECTED component count is not assumed to be n_groups: minhash
 banding is probabilistic recall (a 0.68-jaccard pair misses all 16
 bands with prob (1 - 0.68^4)^16 ~ 2%), so the expectation is computed
-by an EXACT in-process replica of the distributed edge logic (same
-normalize / char-3-gram / minhash / band-key kernels, then union-find
-per group).  The soak asserts the distributed result EQUALS the
-replica — banding misses and all — and separately reports the planted
--link recall those misses imply.
+by the oracle's in-process canonicalization (same normalize /
+char-3-gram / minhash / band-key kernels, then union-find).  The soak
+asserts the distributed result EQUALS it — banding misses and all —
+and separately reports the planted-link recall those misses imply.
 
 Usage:
   PYTHONPATH=. python tools/cc_soak.py [n_groups] [--update-baseline]
@@ -83,7 +82,7 @@ def build_surface_mentions_zipf(spark, n_groups: int):
     per-group counts from zipf_counts, expanded JVM-side via
     sequence+explode (the head group's explode lands on one task — the
     skew this soak exists to measure), variant = mention_idx mod 4 so
-    the SURFACE set (and therefore the exact replica's expectation) is
+    the SURFACE set (and therefore the expected partition) is
     identical to the uniform soak's."""
     c = zipf_counts(n_groups)
     head = int(c[0])
@@ -156,101 +155,30 @@ TASK_SKEW_BOUND = 6.0
 
 
 def expected_components_py(n_groups: int) -> dict:
-    """FULL in-process replica of the edge logic over all 4*n_groups
-    surfaces: global exact-normalized-form groups, global LSH buckets
-    with the MAX_BUCKET degenerate-bucket drop (shared structural
-    shingles — " corp", "corporation" — put ~5% of band rows into
-    mega-buckets the distributed path drops), and exact-jaccard
-    verification of every in-bucket candidate — same kernels, same
-    caps, CROSS-GROUP candidates included (distinct md5 hexes CAN
-    collide on long suffixes and genuinely clear the 0.6 threshold:
-    measured 2 such merges per 20k groups).  Union-find over the whole
-    graph then yields the exact expected component count."""
+    """The expected partition of all 4*n_groups surfaces from the
+    oracle's in-process canonicalization (``oracle_gold._canonicalize_py``:
+    global exact-normalized-form groups, global LSH buckets with the
+    MAX_BUCKET degenerate-bucket drop, exact-Jaccard verification of
+    every in-bucket candidate, union-find) — same kernels and caps as
+    the distributed path, CROSS-GROUP candidates included (distinct md5
+    hexes CAN collide on long suffixes and genuinely clear the 0.6
+    threshold: measured 2 such merges per 20k groups).  Returns the
+    component count and the number of groups whose four variants share
+    one component."""
     import hashlib
-    from itertools import combinations
+    from collections import Counter
 
-    import numpy as np
+    from rex_spark.oracle_gold import _canonicalize_py
 
-    from rex_spark.kernels.hashing import (
-        band_keys_batch,
-        minhash_params,
-        minhash_signatures_batch,
-    )
-    from rex_spark.kernels.textnorm import char_shingles
-    from rex_spark.operators.canonical import (
-        JACCARD_THRESHOLD,
-        MAX_BUCKET,
-        NUM_BANDS,
-        NUM_PERM,
-    )
-    from rex_spark.oracle_gold import normalize_surface_py
-
-    params = minhash_params(NUM_PERM)
-    surfaces_of = lambda h: [  # noqa: E731
-        f"{h} corp", f"{h} corporation", f"{h} corp.", f"the {h} corp",
+    groups = [
+        (f"{h} corp", f"{h} corporation", f"{h} corp.", f"the {h} corp")
+        for h in (
+            hashlib.md5(str(g).encode()).hexdigest()[:12] for g in range(n_groups)
+        )
     ]
-    hexes = [
-        hashlib.md5(str(g).encode()).hexdigest()[:12] for g in range(n_groups)
-    ]
-    flat_norms = [
-        normalize_surface_py(s) for h in hexes for s in surfaces_of(h)
-    ]
-    flat_sh = [set(char_shingles(nrm, 3)) for nrm in flat_norms]
-    sigs = minhash_signatures_batch(flat_sh, params)
-    keys = band_keys_batch(sigs, NUM_BANDS).view(np.int64).reshape(-1, NUM_BANDS)
-
-    n_nodes = len(flat_norms)
-    parent = list(range(n_nodes))
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(x, y):
-        rx, ry = find(x), find(y)
-        if rx != ry:
-            parent[max(rx, ry)] = min(rx, ry)
-
-    # exact-normalized-form links (global, like _exact_norm_edges)
-    by_norm: dict = {}
-    for idx, nrm in enumerate(flat_norms):
-        by_norm.setdefault(nrm, []).append(idx)
-    for members in by_norm.values():
-        for other in members[1:]:
-            union(members[0], other)
-
-    # LSH candidate links: global buckets, degenerate buckets dropped,
-    # exact jaccard verified (like _lsh_edges)
-    buckets: dict = {}
-    for i in range(n_nodes):
-        for b in range(NUM_BANDS):
-            buckets.setdefault((b, int(keys[i, b])), []).append(i)
-    checked: set = set()
-    for members in buckets.values():
-        if len(members) < 2 or len(members) > MAX_BUCKET:
-            continue
-        for x, y in combinations(members, 2):
-            pair = (x, y) if x < y else (y, x)
-            if pair in checked:
-                continue
-            checked.add(pair)
-            shx, shy = flat_sh[x], flat_sh[y]
-            if (
-                shx
-                and shy
-                and len(shx & shy) / len(shx | shy) >= JACCARD_THRESHOLD
-            ):
-                union(x, y)
-
-    total = len({find(i) for i in range(n_nodes)})
-    intact = sum(
-        1
-        for g in range(n_groups)
-        if len({find(i) for i in range(4 * g, 4 * g + 4)}) == 1
-    )
-    return {"expected_components": total, "groups_intact": intact}
+    comp = _canonicalize_py(Counter(s for group in groups for s in group))
+    intact = sum(1 for group in groups if len({comp[s] for s in group}) == 1)
+    return {"expected_components": len(set(comp.values())), "groups_intact": intact}
 
 
 def run_soak(spark, n_groups: int, zipf: bool = False) -> dict:
