@@ -12,12 +12,16 @@ Pipeline:
                           DRIVER_CANON_MAX_SURFACES is collected and
                           canonicalized in-process by the same
                           algorithms, a larger one runs steps 2-3.
-2. ``similarity_edges``   three edge sources union-ed:
-                          a) exact normalized-form match (lower, collapse
-                             whitespace, strip punctuation) — built-ins;
-                          b) KB alias table (broadcast join) — the
-                             rel2id.json-style side input;
-                          c) MinHash-LSH blocking over char-3-gram
+2. ``similarity_edges``   two edge sources union-ed, one lazy plan
+                          that connected components' first
+                          materialization runs:
+                          a) one keyed rule: each surface links to the
+                             min node id sharing its key, the key being
+                             its normalized form (lower, collapse
+                             whitespace, strip punctuation — built-ins)
+                             or its KB alias canonical (broadcast join
+                             with the rel2id.json-style side input);
+                          b) MinHash-LSH blocking over char-3-gram
                              shingles + exact-Jaccard verification —
                              the fuzzy path.
 3. ``connected_components``  iterative large-star / small-star on an
@@ -48,7 +52,7 @@ from __future__ import annotations
 from typing import Tuple
 
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..kernels import kb
@@ -81,33 +85,21 @@ def surface_nodes(mentions: DataFrame) -> DataFrame:
     )
 
 
-def _alias_edges(spark, nodes: DataFrame) -> DataFrame:
-    """KB alias side input: surfaces of the same canonical entity are
-    linked via a broadcast join (a is the min-id surface per canonical)."""
-    rows = []
+def _alias_rows():
+    """The KB alias side input (the rel2id.json analog): one
+    (canonical, surface) pair per alias, the surface spaced as mentions
+    carry it."""
     for canonical, (_etype, surfaces) in kb.ENTITIES.items():
         for s in surfaces:
-            surf = " ".join(s.split()) if not kb._is_zh(s) else " ".join(s)
-            rows.append((canonical, surf))
-    # a pandas frame crosses as Arrow: no Python-worker tasks
-    frame = pd.DataFrame(rows, columns=["canonical", "surface"])
-    alias_df = spark.createDataFrame(frame, "canonical string, surface string")
-    linked = nodes.join(F.broadcast(alias_df), "surface").select(
-        "canonical", "node_id"
-    )
-    reps = linked.groupBy("canonical").agg(F.min("node_id").alias("rep"))
-    return (
-        linked.join(F.broadcast(reps), "canonical")
-        .where(F.col("node_id") != F.col("rep"))
-        .select(F.col("node_id").alias("a"), F.col("rep").alias("b"))
-    )
+            yield canonical, " ".join(s) if kb._is_zh(s) else " ".join(s.split())
 
 
-def _exact_norm_edges(nodes: DataFrame) -> DataFrame:
-    """Surfaces sharing a normalized form: link to the min node id."""
-    reps = nodes.groupBy("norm").agg(F.min("node_id").alias("rep"))
+def _keyed_edges(keyed: DataFrame) -> DataFrame:
+    """(kind, key, node_id) rows -> an edge from each node to the min
+    node id sharing its (kind, key), where that is another node."""
+    rep = F.min("node_id").over(Window.partitionBy("kind", "key"))
     return (
-        nodes.join(reps, "norm")
+        keyed.withColumn("rep", rep)
         .where(F.col("node_id") != F.col("rep"))
         .select(F.col("node_id").alias("a"), F.col("rep").alias("b"))
     )
@@ -121,9 +113,9 @@ def _lsh_edges(nodes: DataFrame) -> DataFrame:
     """MinHash-LSH candidates over char-3-gram shingles of ``norm``,
     verified with exact Jaccard (J6): dedup.lsh_table + dedup.lsh_pairs,
     the one LSH implementation shared with document near-dup.  One
-    Python pass; shingle-less surfaces are dropped; band buckets over
-    MAX_BUCKET are dropped before the self-join; the verified edges are
-    checkpointed eagerly."""
+    Python pass, run by the LSH table's checkpoint; shingle-less
+    surfaces are dropped; band buckets over MAX_BUCKET are dropped
+    before the self-join; the band join and verification stay lazy."""
     table = lsh_table(nodes, "node_id", "norm", _norm_shingles, NUM_PERM, NUM_BANDS)
     return lsh_pairs(table, "node_id", JACCARD_THRESHOLD, max_bucket=MAX_BUCKET).select(
         "a", "b"
@@ -131,10 +123,19 @@ def _lsh_edges(nodes: DataFrame) -> DataFrame:
 
 
 def similarity_edges(spark, nodes: DataFrame) -> DataFrame:
-    """Union of alias, exact-normalized and LSH edge sources."""
+    """Union of the keyed (exact-norm and alias) and LSH edge sources."""
+    # a pandas frame crosses as Arrow: no Python-worker tasks
+    frame = pd.DataFrame(list(_alias_rows()), columns=["key", "surface"])
+    alias = spark.createDataFrame(frame, "key string, surface string")
+    keyed = nodes.select(
+        F.lit("norm").alias("kind"), F.col("norm").alias("key"), "node_id"
+    ).unionByName(
+        nodes.join(F.broadcast(alias), "surface").select(
+            F.lit("alias").alias("kind"), "key", "node_id"
+        )
+    )
     return (
-        _alias_edges(spark, nodes)
-        .unionByName(_exact_norm_edges(nodes))
+        _keyed_edges(keyed)
         .unionByName(_lsh_edges(nodes))
         .dropDuplicates(["a", "b"])
     )
@@ -341,26 +342,18 @@ def _driver_similarity_edges(rows) -> set:
     same bucket cap, so the edge set is identical to the distributed
     plan's."""
     sid = {r["surface"]: r["node_id"] for r in rows}
-    edges: set = set()
-    # (a) KB alias table
-    for canonical, (_etype, surfaces) in kb.ENTITIES.items():
-        ids = []
-        for s in surfaces:
-            surf = " ".join(s.split()) if not kb._is_zh(s) else " ".join(s)
-            if surf in sid:
-                ids.append(sid[surf])
-        if len(ids) > 1:
-            rep = min(ids)
-            edges.update((i, rep) for i in ids if i != rep)
-    # (b) exact normalized form
-    by_norm: dict = {}
+    # (a) keyed: min node id per normalized form and per KB canonical
+    keyed: dict = {}
     for r in rows:
-        by_norm.setdefault(r["norm"], []).append(r["node_id"])
-    for ids in by_norm.values():
-        if len(ids) > 1:
-            rep = min(ids)
-            edges.update((i, rep) for i in ids if i != rep)
-    # (c) MinHash-LSH banding (lsh_table's kernels) + exact-Jaccard verification
+        keyed.setdefault(("norm", r["norm"]), []).append(r["node_id"])
+    for canonical, surface in _alias_rows():
+        if surface in sid:
+            keyed.setdefault(("alias", canonical), []).append(sid[surface])
+    edges: set = set()
+    for ids in keyed.values():
+        rep = min(ids)
+        edges.update((i, rep) for i in ids if i != rep)
+    # (b) MinHash-LSH banding (lsh_table's kernels) + exact-Jaccard verification
     kept, shs, keys = shingle_band_keys(
         [r["norm"] for r in rows], _norm_shingles, minhash_params(NUM_PERM), NUM_BANDS
     )

@@ -258,23 +258,26 @@ def lsh_pairs(
     table: DataFrame, id_col: str, threshold: float, max_bucket: int | None = None
 ) -> DataFrame:
     """Band-bucket self-join of an :func:`lsh_table`, verified with
-    exact Jaccard -> (a < b, jaccard >= threshold).
+    exact Jaccard -> (a < b, jaccard >= threshold), lazily.
 
-    The table is persisted once and read by every consumer: a Python
-    map under the self-join would otherwise run once per aliased side
-    (fresh attribute ids defeat exchange reuse).  The band rows
-    entering the self-join shuffle are narrow; shingle arrays are
-    joined back only for the candidates.  Buckets of more than
-    ``max_bucket`` rows are dropped before the join by one filter on
-    a bucket-size window, partitioned like the self-join so the two
-    share one shuffle.  The result is checkpointed eagerly so the table
-    can be released here rather than leak for the session lifetime
-    (localCheckpoint -> .checkpoint() on a real deployment).
+    The table is checkpointed once (its Python pass runs in that job)
+    and read by every consumer: a Python map under the self-join would
+    otherwise run once per aliased side.  A checkpoint and not a cache:
+    both sides of the self-join scan the same checkpointed RDD, so the
+    band-row exchange of one side is reused by the other, which a
+    cached relation's scan defeats.  The band rows entering the
+    self-join shuffle are narrow; shingle arrays are joined back only
+    for the candidates.  Buckets of more than ``max_bucket`` rows are
+    dropped before the join by one filter on a bucket-size window,
+    partitioned like the self-join so the two share one shuffle.  The
+    join and verification run in the caller's action; the table's
+    blocks are freed with the returned frame, as connected components'
+    per-round checkpoints are (localCheckpoint -> .checkpoint() on a
+    real deployment).
     """
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
-    table = table.persist(StorageLevel.MEMORY_AND_DISK)
+    table = table.localCheckpoint()
     banded = band_rows(table, id_col)
     if max_bucket is not None:
         bucket = Window.partitionBy("band_id", "band_key")
@@ -290,9 +293,7 @@ def lsh_pairs(
         .select(F.col(f"x.{id_col}").alias("a"), F.col(f"y.{id_col}").alias("b"))
         .dropDuplicates(["a", "b"])
     )
-    pairs = verify_jaccard(cand, table, id_col, threshold).localCheckpoint(eager=True)
-    table.unpersist()
-    return pairs
+    return verify_jaccard(cand, table, id_col, threshold)
 
 
 def document_lsh_table(
@@ -332,7 +333,7 @@ def minhash_lsh_pairs(
 
     One :func:`document_lsh_table` pass, then :func:`lsh_pairs` — the
     same code canonical.py's fuzzy edges and the incremental streaming
-    dedup run.  Eager: the pairs are checkpointed before this returns.
+    dedup run.
     """
     table = document_lsh_table(documents, n, num_perm, num_bands)
     return lsh_pairs(table, "doc_id", threshold).select(

@@ -107,9 +107,11 @@ def run_pipeline(
     batching note), and ``sentences`` / ``mentions`` / ``triples`` are
     JVM projections of it.  With a StageStore, every stage (plane,
     surfaces, entities, edges) is compute-or-load and appends
-    per-partition lineage rows.  Without one, the plane and the labeled
-    surfaces are persisted MEMORY_AND_DISK so the several outputs share
-    one computation — the in-memory analog of the stage checkpoints.
+    per-partition lineage rows.  Without one, only the plane is
+    persisted MEMORY_AND_DISK so the several outputs share one
+    computation — the in-memory analog of the stage checkpoints; the
+    labeled surfaces come back from ``canonicalize_surfaces`` already
+    materialized.
     ``docs`` is returned lazily (forced only if the caller asks).
     ``include_sentence_text=False`` keeps sentence text and tokens out
     of the plane (stage ``plane_notext``, so a root never resumes
@@ -205,8 +207,6 @@ def run_pipeline(
             spark, mentions, driver_max_surfaces=driver_max_surfaces
         ),
     )
-    if store is None:
-        labeled = labeled.persist(StorageLevel.MEMORY_AND_DISK)
 
     if score_threshold is not None:
         # extra T3 cut over the kernel's own threshold (conf

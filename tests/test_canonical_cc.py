@@ -136,10 +136,13 @@ def test_driver_canonicalization_matches_distributed(spark):
 
 # Spark jobs per canonicalize_surfaces call on _surface_mentions: two
 # materialize the vocabulary (its shuffle stage, then the checkpoint
-# whose job counts it); the escape adds one collect, the distributed
-# path the similarity edges, connected components and the labels.
+# whose job counts it); the escape adds one collect.  The distributed
+# path adds one for the LSH table's checkpoint, nine for connected
+# components (the AQE stages of the lazy similarity edges, band join
+# included, under the checkpoint of its input, then the driver
+# union-find's collect) and two for the labels' checkpoint.
 ESCAPE_JOBS = 2 + 1
-DISTRIBUTED_JOBS = 22
+DISTRIBUTED_JOBS = 2 + 1 + 9 + 2
 
 
 def _surface_mentions(spark):

@@ -1,15 +1,17 @@
 """The one MinHash-LSH implementation (dedup.lsh_table + lsh_pairs):
 its physical plan crosses into Python once and its band rows stay
-narrow under both callers (canonical surfaces, document near-dup); the
+narrow and are shuffled once under both callers (canonical surfaces,
+document near-dup; the latter's job count is pinned); the
 canonical edge set equals the in-process replica on the vocabularies
 that reach the edge cases (dropped buckets, shingle-less surfaces,
 empty batches and tables); document near-dup keeps the empty-text
 shingle."""
 
 import itertools
+import re
 
 import pytest
-from conftest import jvm_list, python_nodes, walk_plan
+from conftest import jvm_list, python_nodes, spark_jobs, walk_plan
 
 from rex_spark.operators.canonical import (
     MAX_BUCKET,
@@ -57,10 +59,13 @@ def _dedup_run(spark):
 
 @pytest.mark.parametrize("run", [_canonical_run, _dedup_run], ids=["canonical", "dedup"])
 def test_lsh_plan_is_one_python_pass_with_narrow_band_rows(spark, monkeypatch, run):
-    """One Python map node (the shingle + band-key pass, cached and
-    read by every consumer), not one per self-join side.  No exchange
-    feeding a band join (or the bucket-size window under it) carries
-    the shingle arrays."""
+    """One Python map node (the shingle + band-key pass, run by the
+    table's checkpoint and read by every consumer), not one per
+    self-join side.  The band join runs in the consumer's plan: one
+    side's band rows are shuffled by the one exchange on (band_id,
+    band_key), the other side reuses it, and no exchange feeding the
+    join (or the bucket-size window under it) carries the shingle
+    arrays."""
     plans = _recording_checkpoints(monkeypatch, type(spark.range(0)))
     # shuffle joins, the shape of a vocabulary too large to broadcast:
     # a broadcast join has no exchange on its streamed side (the
@@ -73,7 +78,7 @@ def test_lsh_plan_is_one_python_pass_with_narrow_band_rows(spark, monkeypatch, r
         out.collect()
     finally:
         spark.conf.set(key, saved)
-    # the returned frame's own plan too: a lazy result runs its Python here
+    # the returned frame's own plan too: a lazy result runs its joins here
     plans.append(out._jdf.queryExecution().executedPlan())
 
     python = [
@@ -81,22 +86,29 @@ def test_lsh_plan_is_one_python_pass_with_narrow_band_rows(spark, monkeypatch, r
         for plan in plans
     ]
     lsh = [nodes for nodes in python if nodes]
-    assert len(lsh) == 1, python  # only the LSH pairs run Python
+    assert len(lsh) == 1, python  # only the LSH table runs Python
     assert len(lsh[0]) == 1, lsh[0]
-    (plan,) = [p for p, nodes in zip(plans, python) if nodes]
 
     band_joins = [
         n
-        for n in walk_plan(plan)
+        for plan in plans
+        for n in walk_plan(plan, reused=False)
         if n.nodeName() in _JOINS and "band_key" in n.leftKeys().toString()
     ]
     assert band_joins
-    exchanges = [
-        n for j in band_joins for n in walk_plan(j) if "Exchange" in n.nodeName()
-    ]
-    assert exchanges
-    for ex in exchanges:
-        assert "shingles" not in _names(ex), ex.toString()
+    band_exchange = re.compile(r"^Exchange hashpartitioning\(band_id#\d+, band_key#\d+L?,")
+    for join in band_joins:
+        feeds = list(walk_plan(join, reused=False))
+        shuffled = [n for n in feeds if band_exchange.match(n.toString())]
+        reused = [
+            n
+            for n in feeds
+            if n.nodeName() == "ReusedExchange"
+            and band_exchange.match(n.child().toString())
+        ]
+        assert (len(shuffled), len(reused)) == (1, 1), join.toString()
+        for ex in [n for n in feeds if "Exchange" in n.nodeName()]:
+            assert "shingles" not in _names(ex), ex.toString()
 
 
 def _casings(word, n):
@@ -178,3 +190,17 @@ def test_minhash_lsh_pairs_keeps_empty_text_shingle(spark):
     got = {tuple(r) for r in minhash_lsh_pairs(docs).collect()}
     assert got == {(1, 2, 1.0), (1, 3, 1.0), (2, 3, 1.0), (4, 5, 1.0)}
     assert minhash_lsh_pairs(spark.createDataFrame([], schema)).count() == 0
+
+
+def test_minhash_lsh_pairs_jobs(spark):
+    """Document near-dup on the sf0.01 documents, from the parquet read
+    to the collected pairs: the read's schema job, the LSH table's
+    checkpoint (the repartition stage under the Python pass, then the
+    pass) and the collect's four (the broadcast band join, the
+    candidate de-duplication, the shingle side reused by both
+    verification joins, then the result)."""
+    from __spark_entry__ import ORACLE_SF, q_minhash_lsh
+
+    rows, jobs = spark_jobs(spark, lambda: q_minhash_lsh(spark, ORACLE_SF).collect())
+    assert rows
+    assert jobs == 1 + 2 + 4

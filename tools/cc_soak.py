@@ -270,7 +270,6 @@ def main() -> None:
     n_groups = int(args[0]) if args else 75_000
     zipf = "--zipf" in sys.argv
     spark = get_session(
-        master="local[32]",
         # the status REST API (task_skew_report) needs the UI server
         extra_conf={"spark.ui.enabled": "true"} if zipf else None,
     )

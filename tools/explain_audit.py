@@ -68,10 +68,11 @@ def plan_of(df) -> str:
 
 
 def checkpoint_plans(df_class, build):
-    """``build()``, and the formatted plan of every eager
-    localCheckpoint taken while it runs: a query that checkpoints its
-    work before returning (``dedup.lsh_pairs``) explains as a scan of
-    the checkpoint, so its real plan is the checkpointed one."""
+    """``build()``, and the formatted plan of every localCheckpoint
+    taken while it runs: a query that checkpoints part of its work
+    before returning (``dedup.lsh_pairs``' LSH table) explains that
+    part as a scan of the checkpoint, so its real plan is the
+    checkpointed one plus the returned one."""
     plans = []
     original = df_class.localCheckpoint
 
@@ -117,9 +118,9 @@ def main() -> None:
         "`finalmerge`) hash aggregates, and wide `WholeStageCodegen`",
         "spans around the relational operators.  Python appears only at",
         "explicit `MapInArrow`/`MapInPandas`/`FlatMapGroupsInPandas` nodes.",
-        "A query that checkpoints its work eagerly while it is built",
-        "(`minhash_lsh`) is audited on the checkpointed plans too, listed",
-        "before the plan that scans the checkpoint.",
+        "A query that checkpoints part of its work while it is built",
+        "(`minhash_lsh`'s LSH table) is audited on the checkpointed plans",
+        "too, listed before the plan that scans the checkpoint.",
         "",
         "| query | scans pruned | broadcast join | partial agg | codegen | scans |",
         "|---|---|---|---|---|---|",
