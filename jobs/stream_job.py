@@ -3,8 +3,10 @@
 
 The streaming sibling of jobs/kg_job.py: page parquet files landing in
 --input-dir are picked up per micro-batch, run through the SAME batch
-stage operators (foreachBatch), and appended to --output-dir; the
-streaming checkpoint makes restarts exactly-once per micro-batch.
+stage operators (foreachBatch), and appended to --output-dir.
+foreachBatch is at-least-once (a restart replays a batch whose offsets
+were not committed); the batch-id guard on each append plus the
+deterministic transforms make the output exactly-once.
 
     spark-submit --py-files rex_spark.zip jobs/stream_job.py \
         --input-dir /data/pages_incoming \

@@ -27,9 +27,12 @@ one small write/lineage/commit/compact interface:
     ``get_session`` write TIMESTAMP_MICROS) is null, never a partial
     answer.  The marker records the schema the directory reads back
     as (partition columns last), so neither commit nor resume infers
-    it; markers without one (older roots) still infer it.
+    it; markers without one (older roots) still infer it.  It also
+    records the ``partition_by`` columns (none when absent).
     ``compact`` rewrites a stage into few key-clustered files via a
-    verified sibling-directory swap.
+    verified sibling-directory swap that keeps the partition layout,
+    rewrites a committed stage's lineage and is recoverable
+    (``recover_swap``); the streaming state tables compact through it.
 
 ``iceberg`` (activates when the Iceberg runtime jar + catalog are on
 the session; ``iceberg_available`` probes for it)
@@ -82,6 +85,9 @@ from pyspark.sql.types import StructType
 from ..kernels.kb import MODEL_VERSION
 
 _MARKER = "_STAGE_COMMITTED"
+# siblings of a table directory during compact's two-rename swap
+_COMPACTING = ".compacting"
+_PRE_COMPACT = ".pre-compact"
 _PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 _LINEAGE_SCHEMA = pa.schema([
     ("_pid", pa.int32()),
@@ -147,6 +153,37 @@ def _fold(values, pick):
     return out
 
 
+def recover_swap(path: str) -> str | None:
+    """Roll the table directory ``path`` out of any crash window of
+    ``ParquetStageBackend.compact``'s two-rename swap; idempotent.
+
+    - ``path`` absent, ``path.pre-compact`` present (crash between the
+      renames): restore the pre-compact table; the unpromoted rewrite
+      is discarded.  Otherwise a stage would recompute and a stream
+      would rebuild its state from one batch, losing its history.
+    - both present (crash after the swap, before cleanup): the
+      compacted table is live; drop the leftover.
+    - a leftover ``path.compacting`` is always dropped.
+
+    The next reader sees exactly the old table or exactly the new one,
+    never a mix.  Returns the action taken, or None.
+    """
+    old = path + _PRE_COMPACT
+    tmp = path + _COMPACTING
+    action = None
+    if os.path.isdir(old):
+        if os.path.isdir(path):
+            shutil.rmtree(old)
+            action = "dropped-pre-compact"
+        else:
+            os.rename(old, path)
+            action = "restored-pre-compact"
+    if os.path.isdir(tmp):
+        shutil.rmtree(tmp)
+        action = action or "dropped-compacting"
+    return action
+
+
 class ParquetStageBackend:
     """Directory-per-stage parquet layout with a commit-marker file."""
 
@@ -176,7 +213,7 @@ class ParquetStageBackend:
     def write(self, name: str, df: DataFrame, partition_by) -> dict:
         """Write the data; returns what the marker records about it:
         the schema the directory reads back as (partition columns
-        last)."""
+        last) and the partition columns."""
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -186,7 +223,7 @@ class ParquetStageBackend:
             [f for f in df.schema if f.name not in parts]
             + [df.schema[c] for c in parts]
         )
-        return {"schema": schema.jsonValue()}
+        return {"schema": schema.jsonValue(), "partition_by": parts}
 
     def read(self, name: str) -> DataFrame:
         reader = self.spark.read
@@ -250,33 +287,37 @@ class ParquetStageBackend:
         return self.spark.read.parquet(self._side_dir(kind, name))
 
     def compact(self, name: str, partitions: int, keys: list[str]) -> int:
-        """Rewrite the stage into ``partitions`` key-clustered files —
-        verified sibling-directory swap (same recoverable protocol as
-        streaming.incremental.compact_neardup_state), marker preserved."""
+        """Rewrite the stage into ``partitions`` key-clustered files,
+        keeping its partition layout: a row-count-verified rewrite in
+        a sibling directory, swapped in with two renames that
+        ``recover_swap`` (run first) can roll out of.  A committed
+        stage keeps its marker and gets lineage for the new files."""
         path = self._dir(name)
+        recover_swap(path)
+        marker = self._marker(name)
         df = self.read(name)
         n_rows = df.count()
-        tmp = path + ".compacting"
-        shutil.rmtree(tmp, ignore_errors=True)
+        tmp = path + _COMPACTING
         clustered = (
             df.repartition(partitions, *keys).sortWithinPartitions(*keys)
             if keys
             else df.repartition(partitions)
         )
-        clustered.write.mode("overwrite").parquet(tmp)
+        writer = clustered.write.mode("overwrite")
+        if marker.get("partition_by"):
+            writer = writer.partitionBy(*marker["partition_by"])
+        writer.parquet(tmp)
         if self.spark.read.parquet(tmp).count() != n_rows:
             shutil.rmtree(tmp, ignore_errors=True)
             raise RuntimeError(f"compaction row-count mismatch for {name}")
-        committed = self.is_committed(name)
-        old = path + ".pre-compact"
-        shutil.rmtree(old, ignore_errors=True)
+        if marker:
+            shutil.copy(os.path.join(path, _MARKER), os.path.join(tmp, _MARKER))
+        old = path + _PRE_COMPACT
         os.rename(path, old)
         os.rename(tmp, path)
-        if committed:
-            marker_src = os.path.join(old, _MARKER)
-            if os.path.exists(marker_src):
-                shutil.copy(marker_src, os.path.join(path, _MARKER))
         shutil.rmtree(old)
+        if marker:
+            self.write_lineage(name)
         return n_rows
 
 

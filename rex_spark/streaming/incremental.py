@@ -17,9 +17,15 @@ their partitioning/skew behavior applies unchanged.
 
 from __future__ import annotations
 
+import glob
+import os
+from typing import Callable
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io.stages import ParquetStageBackend, recover_swap
 from ..operators.extraction import document_triple_set, extract_plane, plane_triples
 from ..operators.textplane import PAGES_SCHEMA, clean_pages
 
@@ -44,7 +50,7 @@ def stream_warc_pages(
     fan-out inside the Arrow batch -> PAGES_SCHEMA rows (text/lang
     null — a raw dump has neither; the pipeline recomputes).  New
     crawl files landing in ``path`` become micro-batches, so the
-    same exactly-once foreachBatch pipeline that consumes the parquet
+    same replay-guarded foreachBatch pipeline that consumes the parquet
     stream consumes the crawl as it is written.
 
     A corrupt file contributes the records before its first bad byte
@@ -78,6 +84,38 @@ def stream_warc_pages(
     return expand_warc_records(files, PAGES_SCHEMA, "skip")
 
 
+def _has_batch(spark: SparkSession, path: str, batch_id: int) -> bool:
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException:  # no table yet
+        return False
+    return df.where(F.col("batch_id") == batch_id).limit(1).count() > 0
+
+
+def _append_once(batch_df: DataFrame, path: str, batch_id: int,
+                 rows: Callable[[], DataFrame]) -> None:
+    """Append ``rows()`` stamped with ``batch_id`` to the parquet table
+    at ``path`` unless it already holds that batch, so a replayed
+    micro-batch (foreachBatch is at-least-once) neither builds nor
+    appends its rows again."""
+    if not _has_batch(batch_df.sparkSession, path, batch_id):
+        rows().withColumn("batch_id", F.lit(batch_id)).write.mode(
+            "append"
+        ).parquet(path)
+
+
+def _drain(stream: DataFrame, process: Callable[[DataFrame, int], None],
+           checkpoint_dir: str, available_now: bool):
+    writer = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def incremental_triples(
     pages_stream: DataFrame,
     output_dir: str,
@@ -86,10 +124,13 @@ def incremental_triples(
 ):
     """pages stream -> triples appended to ``output_dir`` (parquet).
 
-    foreachBatch reuses the batch operators verbatim; the streaming
-    checkpoint gives exactly-once per micro-batch, which together with
-    the deterministic transforms makes the output restart-idempotent —
-    the streaming analog of the StageStore resume contract.
+    foreachBatch reuses the batch operators verbatim.  It is
+    at-least-once: a micro-batch whose sink write landed but whose
+    offsets were not committed runs again on restart under the same
+    batch id.  The batch-id guard (``_append_once``) plus the
+    deterministic transforms make the output exactly-once and
+    restart-idempotent — the streaming analog of the StageStore
+    resume contract.
 
     Returns the StreamingQuery; with ``available_now`` the query drains
     everything currently in the directory and stops (use
@@ -97,23 +138,11 @@ def incremental_triples(
     """
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        triples = document_triple_set(
+        _append_once(batch_df, output_dir, batch_id, lambda: document_triple_set(
             plane_triples(extract_plane(batch_df, include_text=False))
-        )
-        (
-            triples.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(output_dir)
-        )
+        ))
 
-    writer = (
-        pages_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(pages_stream, process, checkpoint_dir, available_now)
 
 
 def incremental_neardup(
@@ -142,13 +171,13 @@ def incremental_neardup(
        (``verify_jaccard``), pairs appended to ``pairs``.
 
     State tables live under ``state_root`` (bands/, shingles/,
-    pairs/), each row stamped with batch_id; every write is guarded by
-    its own batch_id-presence check and the transforms are
-    deterministic, so a replayed micro-batch is a no-op — the same
-    exactly-once argument as incremental_triples, extended to stateful
-    joins.  After all waves, the union of appended pairs equals the
-    batch ``minhash_lsh_pairs`` over the full corpus (pinned by
-    tests/test_streaming.py and tools/stream_soak.py).
+    pairs/), each row stamped with batch_id; every write goes through
+    ``_append_once`` and the transforms are deterministic, so a
+    replayed micro-batch is a no-op (the pairs join included) — the
+    same exactly-once argument as incremental_triples, extended to
+    stateful joins.  After all waves, the union of appended pairs
+    equals the batch ``minhash_lsh_pairs`` over the full corpus
+    (pinned by tests/test_streaming.py and tools/stream_soak.py).
 
     Scale notes: the band table grows O(docs x bands) with fixed-width
     rows; on an Iceberg deployment it is bucketed by band_key so the
@@ -157,8 +186,6 @@ def incremental_neardup(
     (file-drop / log-stream semantics — same assumption as
     running_surface_state's doc counting).
     """
-    import os
-
     from ..operators.dedup import band_rows, document_lsh_table, verify_jaccard
 
     # A crash mid-compaction can leave a table dir absent with its
@@ -171,120 +198,70 @@ def incremental_neardup(
     sh_dir = os.path.join(state_root, "shingles")
     pairs_dir = os.path.join(state_root, "pairs")
 
-    def _docs(batch_df: DataFrame) -> DataFrame:
-        return clean_pages(batch_df).select(
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        docs = clean_pages(batch_df).select(
             F.xxhash64("url").alias("doc_id"),
             F.col("clean_text").alias("text"),
         )
-
-    def _has_batch(spark: SparkSession, path: str, batch_id: int) -> bool:
-        try:
-            df = spark.read.parquet(path)
-        except Exception:
-            return False
-        return df.where(F.col("batch_id") == batch_id).limit(1).count() > 0
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        docs = _docs(batch_df)
         table = document_lsh_table(docs, n=n).localCheckpoint(eager=True)
         new_bands = band_rows(table, "doc_id")
-        new_sh = table.select("doc_id", F.col("shingles").alias("sh"))
-        if not _has_batch(spark, bands_dir, batch_id):
-            new_bands.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(bands_dir)
-        if not _has_batch(spark, sh_dir, batch_id):
-            new_sh.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(sh_dir)
-        if _has_batch(spark, pairs_dir, batch_id):
-            return
-        # history INCLUDING this batch's just-written rows: new-new
-        # pairs meet table-side, new-old pairs meet exactly here
-        history = spark.read.parquet(bands_dir).where(
-            F.col("batch_id") <= batch_id
-        )
-        cand = (
-            new_bands.alias("x")
-            .join(history.alias("y"), ["band_id", "band_key"])
-            .where(F.col("x.doc_id") != F.col("y.doc_id"))
-            .select(
-                F.least("x.doc_id", "y.doc_id").alias("a"),
-                F.greatest("x.doc_id", "y.doc_id").alias("b"),
+        _append_once(batch_df, bands_dir, batch_id, lambda: new_bands)
+        _append_once(batch_df, sh_dir, batch_id, lambda: table.select(
+            "doc_id", F.col("shingles").alias("sh")
+        ))
+
+        def pairs() -> DataFrame:
+            # history INCLUDING this batch's just-written rows: new-new
+            # pairs meet table-side, new-old pairs meet exactly here
+            history = spark.read.parquet(bands_dir).where(
+                F.col("batch_id") <= batch_id
             )
-            .dropDuplicates(["a", "b"])
-        )
-        # every candidate involves >= 1 doc from THIS batch (x side is
-        # new), so a pair is only ever generated in its later member's
-        # batch — no cross-batch duplicates to filter
-        all_sh = spark.read.parquet(sh_dir).where(
-            F.col("batch_id") <= batch_id
-        ).select("doc_id", F.col("sh").alias("shingles"))
-        verified = verify_jaccard(cand, all_sh, "doc_id", threshold)
-        verified.select(
-            "a",
-            "b",
-            F.round("jaccard", 6).alias("jaccard"),
-            F.lit(batch_id).alias("batch_id"),
-        ).write.mode("append").parquet(pairs_dir)
+            cand = (
+                new_bands.alias("x")
+                .join(history.alias("y"), ["band_id", "band_key"])
+                .where(F.col("x.doc_id") != F.col("y.doc_id"))
+                .select(
+                    F.least("x.doc_id", "y.doc_id").alias("a"),
+                    F.greatest("x.doc_id", "y.doc_id").alias("b"),
+                )
+                .dropDuplicates(["a", "b"])
+            )
+            # every candidate involves >= 1 doc from THIS batch (x side
+            # is new), so a pair is only ever generated in its later
+            # member's batch — no cross-batch duplicates to filter
+            all_sh = spark.read.parquet(sh_dir).where(
+                F.col("batch_id") <= batch_id
+            ).select("doc_id", F.col("sh").alias("shingles"))
+            verified = verify_jaccard(cand, all_sh, "doc_id", threshold)
+            return verified.select(
+                "a", "b", F.round("jaccard", 6).alias("jaccard")
+            )
 
-    writer = (
-        pages_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+        _append_once(batch_df, pairs_dir, batch_id, pairs)
+
+    return _drain(pages_stream, process, checkpoint_dir, available_now)
 
 
-_STATE_TABLES = ("bands", "shingles", "pairs")
+# table -> compaction keys: bands cluster on the candidate join key
+_STATE_TABLES = {
+    "bands": ["band_key", "band_id"],
+    "shingles": ["doc_id"],
+    "pairs": ["a", "b"],
+}
 
 
 def recover_compaction(state_root: str) -> dict:
     """Roll the near-dup state tables out of any crash window left by
-    ``compact_neardup_state``'s two-rename swap.  Idempotent; safe to
-    call between drains (and called automatically by both
-    ``incremental_neardup`` and ``compact_neardup_state``).
-
-    Per table ``t`` under ``state_root``:
-
-    - ``t`` absent + ``t.pre-compact`` present: the crash hit between
-      ``rename(t, t.pre-compact)`` and ``rename(t.compacting, t)`` —
-      restore the pre-compact table.  The rewrite (even if it finished
-      verifying) was never promoted, so it is discarded; re-running
-      compaction recovers it.  Without this, the next drain's
-      ``_has_batch`` would silently recreate the table from only the
-      new batch, losing all band/shingle history.
-    - ``t`` present + ``t.pre-compact`` present: the crash hit after
-      the swap, before cleanup — the compacted table is live; the
-      leftover is deleted.
-    - a leftover ``t.compacting`` is always deleted (it is rebuilt
-      from scratch by the next compaction).
-
-    Either way the next reader sees exactly the OLD state or exactly
-    the NEW state, never a mix.  Returns {table: action} for the
-    tables that needed any action.
-    """
-    import os
-    import shutil
-
+    ``compact_neardup_state``'s swap (``io.stages.recover_swap`` per
+    table).  Idempotent; safe to call between drains, and called by
+    ``incremental_neardup`` before it reads any state.  Returns
+    {table: action} for the tables that needed any action."""
     actions: dict[str, str] = {}
     for name in _STATE_TABLES:
-        path = os.path.join(state_root, name)
-        old = path + ".pre-compact"
-        tmp = path + ".compacting"
-        if os.path.isdir(old):
-            if os.path.isdir(path):
-                shutil.rmtree(old)
-                actions[name] = "dropped-pre-compact"
-            else:
-                os.rename(old, path)
-                actions[name] = "restored-pre-compact"
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-            actions.setdefault(name, "dropped-compacting")
+        action = recover_swap(os.path.join(state_root, name))
+        if action:
+            actions[name] = action
     return actions
 
 
@@ -296,66 +273,37 @@ def compact_neardup_state(
     store.  Every drain appends one file set per micro-batch, so after
     thousands of waves the per-wave candidate join pays file-listing
     and tiny-file scan costs; compaction clusters ``bands`` on
-    band_key (the join key), ``shingles`` on doc_id, ``pairs`` on
-    (a, b).
+    (band_key, band_id) (the join key), ``shingles`` on doc_id,
+    ``pairs`` on (a, b).
 
-    Row-preserving by construction: every row including ``batch_id``
-    survives, so the ``_has_batch`` replay guards and the
-    ``batch_id <= N`` history filters behave identically after
-    compaction (pinned by tests/test_streaming.py — a post-compaction
-    wave still yields exact batch parity and an idle re-drain still
-    appends nothing).  The rewrite lands in a sibling directory, is
-    row-count-verified, then swapped in with two renames — run it
-    BETWEEN drains (no active query may hold the state open), the
-    same maintenance window Iceberg compaction wants.  A crash
-    anywhere in the swap is recoverable: ``recover_compaction`` (run
-    on entry here and by ``incremental_neardup``) restores the
-    pre-compact table if the promotion rename never happened, so the
-    next drain always sees a complete state, old or new.
+    Each table goes through ``ParquetStageBackend.compact``, the
+    StageStore's verified sibling-directory swap: row-count-verified
+    rewrite, two renames, and ``recover_swap`` first, so a crash
+    anywhere in the swap leaves the next drain a complete state, old
+    or new.  Row-preserving: every row including ``batch_id``
+    survives, so the replay guards and the ``batch_id <= N`` history
+    filters behave identically after compaction (pinned by
+    tests/test_streaming.py — a post-compaction wave still yields
+    exact batch parity and an idle re-drain still appends nothing).
+    Run it BETWEEN drains (no active query may hold the state open),
+    the same maintenance window Iceberg compaction wants.  A table
+    never compacts into more files than it has.
 
     Returns {table: (files_before, files_after)}.
     """
-    import glob
-    import os
-    import shutil
-
     recover_compaction(state_root)
-
-    layout = {
-        "bands": ["band_key", "band_id"],
-        "shingles": ["doc_id"],
-        "pairs": ["a", "b"],
-    }
+    backend = ParquetStageBackend(spark, state_root)
     report = {}
-    for name, keys in layout.items():
+    for name, keys in _STATE_TABLES.items():
         path = os.path.join(state_root, name)
         if not os.path.isdir(path):
             continue
         before = len(glob.glob(os.path.join(path, "*.parquet")))
-        # never "compact" into MORE files than exist: a table with few
-        # appended files gets at most that many back
         n_parts = min(
             partitions or spark.sparkContext.defaultParallelism,
             max(before, 1),
         )
-        df = spark.read.parquet(path)
-        n_rows = df.count()
-        tmp = path + ".compacting"
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            df.repartition(n_parts, keys[0])
-            .sortWithinPartitions(*keys)
-            .write.mode("overwrite")
-            .parquet(tmp)
-        )
-        if spark.read.parquet(tmp).count() != n_rows:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise RuntimeError(f"compaction row-count mismatch for {name}")
-        old = path + ".pre-compact"
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
+        backend.compact(name, n_parts, keys)
         report[name] = (before, len(glob.glob(os.path.join(path, "*.parquet"))))
     return report
 

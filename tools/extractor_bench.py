@@ -39,7 +39,7 @@ def main() -> None:
 
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     n_pages = int(args[0]) if args else 50_000
-    spark = get_session(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    spark = get_session()
     pages = build_pages_df_distributed(spark, n_pages, seed=42)
 
     results = {}

@@ -79,7 +79,7 @@ def main() -> None:
     nd_state = os.path.join(BASE, "nd_state")
     nd_ckpt = os.path.join(BASE, "nd_ckpt")
 
-    spark = get_session(master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    spark = get_session()
     waves = []
     total = 0
     for w in range(n_waves):
