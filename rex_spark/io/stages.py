@@ -32,7 +32,8 @@ one small write/lineage/commit/compact interface:
     ``compact`` rewrites a stage into few key-clustered files via a
     verified sibling-directory swap that keeps the partition layout,
     rewrites a committed stage's lineage and is recoverable
-    (``recover_swap``); the streaming state tables compact through it.
+    (``recover_swap``, which ``is_committed`` and ``compact`` run
+    first); the streaming state tables compact through it.
 
 ``iceberg`` (activates when the Iceberg runtime jar + catalog are on
 the session; ``iceberg_available`` probes for it)
@@ -160,7 +161,8 @@ def recover_swap(path: str) -> str | None:
     - ``path`` absent, ``path.pre-compact`` present (crash between the
       renames): restore the pre-compact table; the unpromoted rewrite
       is discarded.  Otherwise a stage would recompute and a stream
-      would rebuild its state from one batch, losing its history.
+      would rebuild its state from one batch, losing its history
+      (``is_committed``, and so ``StageStore.run``, runs it first).
     - both present (crash after the swap, before cleanup): the
       compacted table is live; drop the leftover.
     - a leftover ``path.compacting`` is always dropped.
@@ -198,6 +200,8 @@ class ParquetStageBackend:
         return os.path.join(self.root, f"_{kind}", name)
 
     def is_committed(self, name: str) -> bool:
+        # a crash inside compaction's swap must not cost a recompute
+        recover_swap(self._dir(name))
         return os.path.exists(os.path.join(self._dir(name), _MARKER))
 
     def decommit(self, name: str) -> None:

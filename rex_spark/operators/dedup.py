@@ -234,20 +234,21 @@ def verify_jaccard(
     cand: DataFrame, table: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
     """(a, b) candidates -> (a, b, jaccard) with the exact Jaccard of
-    their ``shingles`` in ``table`` at least ``threshold``."""
+    their ``shingles`` in ``table`` at least ``threshold``.  The union
+    size is |A| + |B| - |A & B|: :func:`lsh_table` shingles are
+    distinct, so one set operation gives the exact value."""
 
     def side(name):
         return table.select(
             F.col(id_col).alias(name), F.col("shingles").alias(f"sh_{name}")
         )
 
+    common = F.size(F.array_intersect("sh_a", "sh_b"))
     return (
         cand.join(side("a"), "a")
         .join(side("b"), "b")
         .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sh_a", "sh_b"))
-            / F.size(F.array_union("sh_a", "sh_b")),
+            "jaccard", common / (F.size("sh_a") + F.size("sh_b") - common)
         )
         .where(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")

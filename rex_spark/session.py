@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_DAEMON_MODULE = "spark.python.daemon.module"
+
 # Defaults chosen for the 100 TB design point, not just local testing:
 # - AQE on: runtime coalescing of small shuffle partitions and skew-join
 #   splitting (head-entity bags are Zipfian; see operators/canonical.py).
@@ -52,7 +54,29 @@ _DEFAULTS = {
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     "spark.ui.enabled": "false",
     "spark.driver.host": "127.0.0.1",
+    # PySpark's daemon plus a stat guard on zip-archive cache
+    # invalidation (rex_spark/_pyworker.py): each Python task's
+    # importlib.invalidate_caches() otherwise re-reads the directories
+    # of pyspark.zip, py4j and the spark-core jar, 0.10-0.19 s per task
+    # on a 4-core host even in a reused worker; guarded, it takes
+    # ~0.05 ms.  The daemon must import rex_spark before any task runs,
+    # so get_session sets it only where a worker finds the package on
+    # its start-up path (see _workers_import_package).
+    _DAEMON_MODULE: "rex_spark._pyworker",
 }
+
+
+def _workers_import_package() -> bool:
+    """Whether a Python worker of this session can import rex_spark at
+    start-up: the directory holding the package is the working
+    directory (which workers inherit) or on ``PYTHONPATH``.  A package
+    shipped only with ``--py-files`` reaches workers per task, too late
+    for the daemon, and keeps PySpark's stock daemon."""
+    home = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if not os.path.isdir(home):  # imported from a zip
+        return False
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(os.path.realpath(p or ".") == os.path.realpath(home) for p in paths)
 
 
 def get_session(
@@ -77,7 +101,8 @@ def get_session(
 
     builder = SparkSession.builder.master(master).appName(app_name)
     for k, v in _DEFAULTS.items():
-        builder = builder.config(k, v)
+        if k != _DAEMON_MODULE or _workers_import_package():
+            builder = builder.config(k, v)
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     builder = builder.config("spark.default.parallelism", str(shuffle_partitions))
     for k, v in (extra_conf or {}).items():

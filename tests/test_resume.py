@@ -193,6 +193,28 @@ def test_stage_compaction_crash_windows(spark, pages, tmp_path):
     assert not os.path.exists(path + ".pre-compact")
 
 
+def test_run_restores_stage_from_compaction_crash(spark, pages, tmp_path):
+    """Window A of the compaction swap (stage renamed to .pre-compact,
+    a .compacting rewrite beside it) seen by the next ``run``: the
+    committed stage is restored, not recomputed, and no sibling
+    directory is left."""
+    import shutil
+
+    root = str(tmp_path / "stages")
+    docs = lambda: pages.select("url", "warc_ts", "lang").repartition(4)  # noqa: E731
+    before = {tuple(r) for r in StageStore(spark, root).run("docs", docs).collect()}
+    path = os.path.join(root, "docs")
+    shutil.copytree(path, path + ".compacting")
+    os.rename(path, path + ".pre-compact")
+
+    def recompute():
+        raise AssertionError("a committed stage was recomputed")
+
+    resumed = StageStore(spark, root).run("docs", recompute)
+    assert {tuple(r) for r in resumed.collect()} == before
+    assert sorted(os.listdir(root)) == ["_lineage", "docs"]
+
+
 def test_extractor_stages_do_not_cross_resume(spark, pages, tmp_path):
     """A stage root written with one extractor must not serve its
     triples/edges to the other (the extractor is part of the stage
